@@ -148,7 +148,7 @@ def round6_np(x):
     """numpy twin of the engines' 6-decimal HALF-UP rounding (round
     half AWAY FROM ZERO — ``np.round`` is banker's and must not be
     used). One definition, shared by every driver-local trainer
-    (IVF's ``_lloyd_numpy``, PQ's ``_pq_lloyd_numpy``): the rounding
+    (``similarity.lloyd`` and its IVF/PQ score functions): the rounding
     boundary is a cross-engine correctness invariant, so a fix here
     reaches every operator family at once."""
     import numpy as np

@@ -133,33 +133,31 @@ def _pq_lloyd_numpy(
     per subspace over the (bounded) training sample's subvectors.
     Returns rows (s, code, centroid[PQ_DSUB]).
 
-    The determinism contract is :func:`similarity._lloyd_numpy`'s,
-    transposed to L2: squared distances use the module's shared
-    factored form (three left-to-right folds — see the convention
-    comment above) and round to 6 decimals HALF-UP before every argmin
-    (ties to the smaller code id); centroid means round to 6 decimals;
-    seeds are the n_codes training vectors with the smallest
-    (portable-hash, id) — the SAME ids in every subspace, since the
-    hash is of the id; empty codes re-seed from the largest code's
-    farthest members (rounded distance DESC, vec_id ASC; the i-th
-    missing code takes the i-th farthest). The DuckDB oracle
-    (:func:`_pq_oracle`) replays all of it as unrolled CTEs.
+    Each subspace runs the shared :func:`similarity.lloyd` loop with
+    ``sign=-1`` over squared distances in the module's factored form
+    (three left-to-right folds — see the convention comment above),
+    rounded to 6 decimals HALF-UP: labels are the argmin (ties to the
+    smaller code id), and empty codes re-seed from the largest code's
+    farthest members (rounded distance DESC, vec_id ASC). Seeds are
+    the n_codes training vectors with the smallest (portable-hash, id)
+    — the SAME ids in every subspace, since the hash is of the id. The
+    DuckDB oracle (:func:`_pq_oracle`) replays all of it as unrolled
+    CTEs.
     """
     import numpy as np
 
     from stream_processing_test_spark.llm.hashing import phash_py
+    from stream_processing_test_spark.llm.hashing import round6_np as round6
+    from stream_processing_test_spark.llm.similarity import lloyd
 
     if not id_vecs:
         return []
     ids = np.array([i for i, _ in id_vecs], dtype=np.int64)
     vecs = np.array([v for _, v in id_vecs], dtype=np.float64)
-    m = vecs.shape[0]
 
-    from stream_processing_test_spark.llm.hashing import round6_np as round6
-
-    def seq_sq_l2(A: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-        # (ma,d) x (mc,d) -> (ma,mc) squared L2 in the module's shared
-        # FACTORED form: (xsq - 2.0*dot) + csq, each fold
+    def sq_l2(A: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+        # (ma,d) x (mc,d) -> (ma,mc) rounded squared L2 in the module's
+        # shared FACTORED form: (xsq - 2.0*dot) + csq, each fold
         # left-to-right over d (vectorized across rows)
         d = A.shape[1]
         xsq = np.zeros(A.shape[0])
@@ -171,41 +169,15 @@ def _pq_lloyd_numpy(
             csq = csq + C[:, j] * C[:, j]
         # clamp at 0: enforce the nonnegativity invariant the half-up
         # rounding bridges rely on (identical in encode + oracle)
-        return np.maximum((xsq[:, None] - 2.0 * dot) + csq[None, :], 0.0)
+        return round6(np.maximum((xsq[:, None] - 2.0 * dot) + csq[None, :], 0.0))
 
     order = sorted(
-        range(m), key=lambda i: (phash_py(str(int(ids[i]))), int(ids[i]))
+        range(len(ids)), key=lambda i: (phash_py(str(int(ids[i]))), int(ids[i]))
     )
     out: list[tuple[int, int, list[float]]] = []
     for s in range(n_subs):
         sub = vecs[:, s * PQ_DSUB : (s + 1) * PQ_DSUB]
-        cents: dict[int, "np.ndarray"] = {
-            c: sub[order[c]].copy() for c in range(min(n_codes, m))
-        }
-        for _ in range(iters):
-            clist = sorted(cents)
-            D = round6(seq_sq_l2(sub, np.array([cents[c] for c in clist])))
-            # argmin-first = smallest distance, ties to the smaller code
-            lab = np.array(clist, dtype=np.int64)[np.argmin(D, axis=1)]
-            new: dict[int, "np.ndarray"] = {}
-            for c in clist:
-                members = sub[lab == c]
-                if len(members):
-                    new[c] = round6(
-                        np.add.reduce(members, axis=0) / len(members)
-                    )
-            missing = [c for c in range(n_codes) if c not in new]
-            if missing:
-                big = min(new, key=lambda c: (-int(np.sum(lab == c)), c))
-                sel = np.flatnonzero(lab == big)
-                d = round6(seq_sq_l2(sub[sel], new[big][None, :])[:, 0])
-                far = sorted(
-                    zip((-d).tolist(), ids[sel].tolist(), sel.tolist())
-                )
-                for r, c in enumerate(missing):
-                    if r < len(far):
-                        new[c] = sub[far[r][2]].copy()
-            cents = new
+        *_, cents = lloyd(ids, sub, order, n_codes, iters, sq_l2, -1)
         out.extend(
             (s, c, [float(x) for x in v]) for c, v in sorted(cents.items())
         )
@@ -815,7 +787,7 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
     """The contract's empty result for an empty corpus (or a training
     gate that kept no rows): no codebook means no c{s} columns to
     project — return this instead of failing analysis (the same guard
-    the IVF twin's _lloyd_numpy carries)."""
+    the IVF twin's _ivf_lloyd_numpy carries)."""
     return spark.createDataFrame(
         [],
         "query_id long, neighbor_id long, cos_sim double, "

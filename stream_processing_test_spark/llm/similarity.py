@@ -697,14 +697,14 @@ def train_ivf_cents(
     assignment pass ``kmeans_lists`` wraps around this. All
     determinism/oracle-parity contracts are documented on
     :func:`kmeans_lists`, whose training this IS (verbatim: same
-    gate, same collect bound, same :func:`_lloyd_numpy`)."""
+    gate, same collect bound, same :func:`_ivf_lloyd_numpy`)."""
     spark = emb.sparkSession
     base = emb.select("vec_id", "v")
     if n_rows is None:
         n_rows = base.count()  # the count train_sample would pay anyway
     train = train_sample(base, train_target, n_rows=n_rows)
     # bounded collect: ~n/2^s <= train_target rows of (id, dim doubles)
-    cents = _lloyd_numpy(
+    cents = _ivf_lloyd_numpy(
         [(r["vec_id"], r["v"]) for r in train.collect()], k=k, iters=iters
     )
     centroids = spark.createDataFrame(
@@ -732,7 +732,7 @@ def kmeans_lists(
     and because that sample is BOUNDED BY CONSTRUCTION (like the k
     centroids themselves, it is model state, not data), it is
     collected once and iterated in numpy on the driver
-    (:func:`_lloyd_numpy`). The full corpus is then assigned exactly
+    (:func:`_ivf_lloyd_numpy`). The full corpus is then assigned exactly
     once, distributed, against the trained centroids broadcast as a
     local relation. Previously every Lloyd pass was a fresh Spark
     plan over the full corpus: corpus-proportional scan cost at the
@@ -760,7 +760,7 @@ def kmeans_lists(
     assignment similarities are ROUNDED to 6 decimals before the
     argmax, and centroid means are rounded to 6 decimals after each
     recompute. The driver-side dot products and norms fold
-    LEFT-TO-RIGHT ACROSS DIMENSIONS (:func:`_lloyd_numpy` loops dims,
+    LEFT-TO-RIGHT ACROSS DIMENSIONS (:func:`_ivf_lloyd_numpy` loops dims,
     vectorizing across rows), so they are bit-identical to Spark's
     sequential ``aggregate(zip_with(...))`` fold and DuckDB's
     left-to-right ``list_sum`` — the only order-divergent quantity is
@@ -779,7 +779,7 @@ def kmeans_lists(
     )
     # Assignment strategy: the Arrow-batched numpy argmax, at EVERY
     # size (r11 decision — BENCH_NOTES §r11-assign-arrow). Three forms
-    # were measured head-to-head (tools/assign_lists_probe.py): the
+    # were measured head-to-head (decision table below): the
     # r6 crossJoin (interpreted per-pair HOF folds), the r10 literal
     # expression matrix (whole-stage-codegen'd — but janino REFUSES to
     # compile it at k>=128 and Spark silently falls back row-based:
@@ -788,8 +788,7 @@ def kmeans_lists(
     # regime (0.58 vs crossJoin's 0.82 s exec, with a ~0.03 s plan
     # constant vs 0.17-3.3 s Catalyst analysis for the expression
     # forms) — so there is no crossover to gate on, and the retired
-    # forms live on only in the probe tool (frozen copies, for
-    # re-measurement).
+    # forms were dropped.
     #
     # The lazy localCheckpoint is the index materialization: the
     # assignment IS the IVF index — at 100 TB it would be persisted
@@ -819,7 +818,7 @@ def kmeans_lists(
     return assign, centroids
 
 
-# r11 decision record (tools/assign_lists_probe.py, dim 64, exec
+# r11 decision record (BENCH_NOTES §r11-assign-arrow, dim 64, exec
 # min-of-2, corpus-generation baseline included in every cell):
 #
 #   n x k          crossJoin   literal-expr   arrow
@@ -836,8 +835,8 @@ def kmeans_lists(
 # method limits; 'Failed to compile' ERROR, then a silent row-based
 # fallback — the ADVICE-r10 pathology, confirmed one k-doubling
 # earlier than the clamp). Arrow wins EVERY cell — there is no
-# crossover — so the expression forms were retired to the probe tool
-# and the engine ships one assignment pass. Plan-build constants:
+# crossover — so the expression forms were retired and the engine
+# ships one assignment pass. Plan-build constants:
 # arrow ~0.03 s vs 0.17-3.3 s (k-proportional Catalyst analysis).
 
 
@@ -854,7 +853,7 @@ def _assign_arrow(
     precisely to dodge that — stops compiling at k>=128 and pays a
     k-proportional Catalyst analysis constant besides.
 
-    Selection parity is the :func:`_lloyd_numpy` contract: norms fold
+    Selection parity is the :func:`_ivf_lloyd_numpy` contract: norms fold
     LEFT-TO-RIGHT ACROSS DIMS; dots run as ONE BLAS matmul whose
     SELECTION is guaranteed bit-identical to the parity chain
     (left-to-right fold → round half-up to 6 decimals → first-max
@@ -989,11 +988,60 @@ def assign_labels_np(vecs, cents_sorted):
     return lab.astype(np.int32)
 
 
-def _lloyd_numpy(
+def lloyd(ids, vecs, order, k, iters, score, sign):
+    """THE driver-local Lloyd loop behind both trainers: IVF's
+    spherical k-means (:func:`_ivf_lloyd_numpy`: rounded cosine,
+    ``sign=+1``) and PQ's per-subspace L2 k-means
+    (``pq._pq_lloyd_numpy``: rounded squared L2, ``sign=-1``). ``order``
+    ranks the rows of ``vecs`` for seeding (id j starts at row
+    ``order[j]``); ``score(A, C)`` is the (|A|, |C|) rounded score
+    matrix.
+
+    Each pass labels every row with the first argmax of ``sign *
+    score`` (ties to the smaller id) and rounds member means to 6
+    decimals HALF-UP. Empty ids re-seed from the largest list's (ties:
+    smaller id) members by ``(sign * score, vec_id)`` ascending — least
+    similar first; the i-th missing id takes the i-th member, and ids
+    beyond the members are dropped (the corpus-smaller-than-k case).
+    The DuckDB oracle CTEs replay the same rules.
+
+    Yields the ``{id: centroid}`` map once seeded and after each pass,
+    so a caller can police every pass (IVF's zero-centroid check); the
+    last map is the trained model."""
+    import numpy as np
+
+    from stream_processing_test_spark.llm.hashing import round6_np as round6
+
+    cents = {j: vecs[order[j]].copy() for j in range(min(k, len(order)))}
+    yield cents
+    for _ in range(iters):
+        clist = sorted(cents)
+        S = sign * score(vecs, np.array([cents[j] for j in clist]))
+        lab = np.array(clist, dtype=np.int64)[np.argmax(S, axis=1)]
+        new = {}
+        for j in clist:
+            members = vecs[lab == j]
+            if len(members):
+                new[j] = round6(np.add.reduce(members, axis=0) / len(members))
+        missing = [j for j in range(k) if j not in new]
+        if missing:
+            big = min(new, key=lambda j: (-int(np.sum(lab == j)), j))
+            sel = np.flatnonzero(lab == big)
+            s = sign * score(vecs[sel], new[big][None, :])[:, 0]
+            far = sorted(zip(s.tolist(), ids[sel].tolist(), sel.tolist()))
+            for r, j in enumerate(missing):
+                if r < len(far):
+                    new[j] = vecs[far[r][2]].copy()
+        cents = new
+        yield cents
+
+
+def _ivf_lloyd_numpy(
     id_vecs: list[tuple[int, list[float]]], k: int, iters: int
 ) -> list[tuple[int, list[float]]]:
-    """Driver-local Lloyd iterations over the (bounded) training
-    sample, float-compatible with the distributed/DuckDB twins.
+    """Driver-local spherical k-means over the (bounded) training
+    sample, float-compatible with the distributed/DuckDB twins: the
+    :func:`lloyd` loop under rounded cosine.
 
     Fold-order contract: every dot product and norm accumulates
     left-to-right across dimensions (the ``for j in range(dim)`` loops
@@ -1002,11 +1050,7 @@ def _lloyd_numpy(
     ``aggregate(zip_with(v, c, (x,y) -> x*y), 0D, +)`` and DuckDB's
     left-to-right ``list_sum``; similarities and means are rounded to
     6 decimals HALF-UP before any comparison, so all engines feed
-    identical doubles into every argmax. Semantics replicate the
-    pre-r9 distributed Lloyd exactly: argmax ties to the smaller
-    list_id, empty lists re-seeded from the largest list's farthest
-    members (rounded cosine asc, vec_id asc; missing ids beyond the
-    available members are dropped — the corpus-smaller-than-k case)."""
+    identical doubles into every argmax."""
     import numpy as np
 
     from stream_processing_test_spark.llm.hashing import phash_py
@@ -1028,7 +1072,7 @@ def _lloyd_numpy(
     ids, vecs = ids[keep], vecs[keep]
     if not len(ids):  # all-zero training sample: no trainable lists
         return []
-    m, dim = vecs.shape
+    dim = vecs.shape[1]
 
     from stream_processing_test_spark.llm.hashing import round6_np as round6
 
@@ -1045,50 +1089,26 @@ def _lloyd_numpy(
             acc = acc + A[:, j] * A[:, j]
         return np.sqrt(acc)
 
-    def sims_to(C: "np.ndarray") -> "np.ndarray":
+    def cosine(A: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
         # dot / (norm_a * norm_b): norms multiplied FIRST, then one
         # divide — the exact expression shape of cosine()/the oracle
         return round6(
-            seq_dot(vecs, C) / (seq_norm(vecs)[:, None] * seq_norm(C)[None, :])
+            seq_dot(A, C) / (seq_norm(A)[:, None] * seq_norm(C)[None, :])
         )
 
     # seeds: the k smallest (portable hash, id) training vectors
-    order = sorted(range(m), key=lambda i: (phash_py(str(int(ids[i]))), int(ids[i])))
-    cents: dict[int, "np.ndarray"] = {
-        j: vecs[order[j]].copy() for j in range(min(k, m))
-    }
-    for _ in range(iters):
-        clist = sorted(cents)
-        S = sims_to(np.array([cents[j] for j in clist]))
-        # argmax-first = highest sim, ties to the smaller list_id
-        lab = np.array(clist, dtype=np.int64)[np.argmax(S, axis=1)]
-        new: dict[int, "np.ndarray"] = {}
-        for j in clist:
-            members = vecs[lab == j]
-            if len(members):
-                new[j] = round6(np.add.reduce(members, axis=0) / len(members))
-        missing = [j for j in range(k) if j not in new]
-        if missing:
-            big = min(new, key=lambda j: (-int(np.sum(lab == j)), j))
-            sel = np.flatnonzero(lab == big)
-            bigc = new[big][None, :]
-            s = round6(
-                seq_dot(vecs[sel], bigc)[:, 0]
-                / (seq_norm(vecs[sel]) * seq_norm(bigc)[0])
-            )
-            far = sorted(zip(s.tolist(), ids[sel].tolist(), sel.tolist()))
-            for r, j in enumerate(missing):
-                if r < len(far):
-                    new[j] = vecs[far[r][2]].copy()
-        cents = new
+    order = sorted(
+        range(len(ids)), key=lambda i: (phash_py(str(int(ids[i]))), int(ids[i]))
+    )
+    for cents in lloyd(ids, vecs, order, k, iters, cosine, 1):
         # Mean-of-members cancellation (opposed vectors averaging to
         # the rounded zero vector) is the one remaining zero-centroid
         # path; fail LOUDLY rather than hand a NaN-similarity column
         # to the NEXT pass's argmax (numpy's first-NaN argmax would
         # silently diverge from the oracle's -1.0 ordering, and a
         # centroid that later drifted off zero would mask the episode
-        # entirely — so the check runs INSIDE the loop, per pass, not
-        # on the final state). Seeds/reseeds are corpus vectors, made
+        # entirely — so the check runs on EVERY pass's state, not on
+        # the final one). Seeds/reseeds are corpus vectors, made
         # non-zero by the training filter above.
         for j, c in cents.items():
             if not np.any(c):
@@ -1290,7 +1310,7 @@ def _ivf_lloyd_ctes(
 
     steps = [
         # ctrain: the zero-norm training filter — the SQL twin of
-        # _lloyd_numpy's `keep` mask (docstring there carries the
+        # _ivf_lloyd_numpy's `keep` mask (docstring there carries the
         # rationale; sum-of-squares > 0 is order-independent).
         """ctrain AS (
     SELECT vec_id, v FROM train

@@ -78,31 +78,7 @@ def get_spark(
             "spark.shuffle.sort.bypassMergeThreshold",
             os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "2"),
         )
-        # r17: `spark.sql.join.preferSortMergeJoin=false` (r16) is GONE —
-        # the isolated A/B + plan audit VERDICT r16 item 3 asked for
-        # showed it inert: every shuffle join in the bench that the
-        # static planner sees is either BroadcastHashJoin (TPC-H dims,
-        # cached dedup relations) or sized from a LogicalRDD checkpoint
-        # whose default stats are huge, so the static SHJ gate never
-        # held (zero ShuffledHashJoin across plans/r16 and the r17
-        # executed-plan sweep). The mechanism that CAN pick
-        # shuffled-hash safely is AQE's runtime conversion: when every
-        # post-shuffle partition of the build side is measured (not
-        # estimated) below this threshold, SMJ is rewritten to SHJ —
-        # skipping both sort passes — and left alone otherwise, so the
-        # 100 TB huge-both-sides case keeps graceful sort-merge spill.
-        # Must be >= advisoryPartitionSizeInBytes (64m default) to take
-        # effect. Biggest winner: the CC loop's per-round label joins,
-        # which are LogicalRDD-stat'd and were paying two sorts of the
-        # edge set per pass (A/B + runtime plan in OPTIMIZATION_r17.md).
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "0"),
-        )
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.ts is parquet TIMESTAMP(NANOS); set once at session
-        # build so per-query conf mutation never races a concurrent read.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

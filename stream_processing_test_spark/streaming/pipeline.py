@@ -40,11 +40,9 @@ from pyspark.sql import types as T
 
 from stream_processing_test_spark.registry import register
 
-# Schema of the driver's events table with ``ts`` as raw nanos (the
-# parquet files carry TIMESTAMP(NANOS); Spark 3.x only accepts that as
-# long via spark.sql.legacy.parquet.nanosAsLong, while Spark 4.x reads
-# it natively as TIMESTAMP_NTZ — events_stream probes the actual file
-# and declares whichever ts dtype the engine materializes).
+# Schema of the driver's events table; ``ts`` takes whichever dtype
+# the file materializes (see tables.normalize_event_ts) —
+# events_stream probes it.
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -58,9 +56,6 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-EVENTS_RAW_SCHEMA = _events_raw_schema(T.LongType())  # Spark 3.x shape
-
-
 def events_stream(
     spark: SparkSession,
     path: str,
@@ -72,10 +67,8 @@ def events_stream(
     event files (the production shape: the probe connector appends
     one file per micro-batch). Spark's file stream source requires a
     directory; a bare file is wrapped via a symlink in a temp dir."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    # TIMESTAMP(NANOS) files read as long nanos (tables.load's reason)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if os.path.isfile(path):
         import tempfile
 
@@ -84,15 +77,12 @@ def events_stream(
         path = d
     # A file stream must declare its schema up front; probe the footer
     # with a (cheap, metadata-only) batch read so the declared ts dtype
-    # matches how THIS engine version materializes TIMESTAMP(NANOS) —
-    # long on Spark 3.x (nanosAsLong), TIMESTAMP_NTZ on Spark 4.x.
+    # matches how the file materializes (long for TIMESTAMP(NANOS),
+    # TIMESTAMP_NTZ for a naive µs writer, TIMESTAMP for a tz-aware one).
     try:
         ts_type = spark.read.parquet(path).schema["ts"].dataType
-    except Exception:  # dir empty at start-up: infer from engine version
-        import pyspark
-
-        is_spark4 = int(pyspark.__version__.split(".")[0]) >= 4
-        ts_type = T.TimestampNTZType() if is_spark4 else T.LongType()
+    except Exception:  # dir empty at start-up: the fixtures' shape
+        ts_type = T.TimestampNTZType()
     reader = spark.readStream.schema(_events_raw_schema(ts_type)).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -32,21 +32,23 @@ BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``events.ts`` to a session-TZ ``timestamp`` column
-    regardless of how the engine materialized the parquet
-    TIMESTAMP(NANOS) physical type.
+    """Normalize ``events.ts`` to a session-TZ ``timestamp`` column,
+    whichever physical type the events file carries.
 
-    - Spark 3.x (``spark.sql.legacy.parquet.nanosAsLong=true``) reads it
-      as a nanos-since-epoch long → ``timestamp_micros(ts div 1000)``.
-      ``div`` floors exactly like DuckDB's ns→µs truncation.
-    - Spark 4.x reads TIMESTAMP(NANOS) natively as TIMESTAMP_NTZ
-      (already truncated to Spark's µs precision at scan time) whose
+    - TIMESTAMP_NTZ (a naive µs writer — the sf fixtures): its
       wallclock is the UTC rendering of the instant. A plain
       ``cast("timestamp")`` would re-interpret that wallclock in the
       *session* timezone — correct only when the session is UTC — so
-      we pin the interpretation with ``convert_timezone('UTC',
-      sessionTZ, ts)`` first, which denotes the identical instant under
-      any session timezone (verified vs DuckDB epoch micros).
+      the interpretation is pinned with ``convert_timezone('UTC',
+      sessionTZ, ts)`` first, which denotes the identical instant
+      under any session timezone (verified vs DuckDB epoch micros).
+    - long: nanos since epoch — how a parquet TIMESTAMP(NANOS) column
+      reads under ``spark.sql.legacy.parquet.nanosAsLong`` (set by
+      :func:`load` and ``events_stream``; without it Spark 4.1 rejects
+      the column as PARQUET_TYPE_ILLEGAL), or a raw int64 column →
+      ``timestamp_micros(ts div 1000)``; ``div`` floors exactly like
+      DuckDB's ns→µs truncation.
+    - TIMESTAMP (a tz-aware writer): already an instant; passes through.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -113,14 +115,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if df is not None:
         return df
     if name == "events":
-        # Safety net for externally-built Spark 3.x sessions where the
-        # vectorized reader rejects TIMESTAMP(NANOS) outright; on Spark
-        # 4.x the conf no longer exists and setting it is an accepted
-        # no-op (the reader handles nanos natively).
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        # TIMESTAMP(NANOS) files read as long nanos (normalize_event_ts);
+        # set at read time so sessions not built by get_spark read them
+        # too.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = normalize_event_ts(
             spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         )

@@ -146,7 +146,6 @@ def test_salted_aggregate_matches_plain(spark):
     plain groupBy — the salt only changes the physical distribution."""
     from stream_processing_test_spark.functions.skew import salted_aggregate
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     plain = {
         (r["user_id"],): (r["n"], round(r["total"], 6))
@@ -169,7 +168,6 @@ def test_salted_aggregate_matches_plain(spark):
 def test_salted_broadcast_left_matches_plain_join(spark):
     from stream_processing_test_spark.functions.skew import salted_broadcast_left
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").select(
         "user_id", "event_id"
     )

@@ -44,7 +44,6 @@ def test_incremental_micro_batches_converge(spark, tmp_path):
     src = tmp_path / "events_incoming"
     src.mkdir()
     # split sf0.001 events into 3 file-chunks = 3 micro-batches
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     parts = ev.randomSplit([1.0, 1.0, 1.0], seed=7)
     for i, p in enumerate(parts):
@@ -84,7 +83,6 @@ def test_update_mode_multi_batch_converges(spark, tmp_path):
 
     src = tmp_path / "events_ordered"
     src.mkdir()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     n = ev.count()
     from pyspark.sql import Window
@@ -215,7 +213,6 @@ def test_finalize_to_dimension_upserts_scores(spark, tmp_path):
     upsert into the source-dimension parquet, idempotent on re-run."""
     dim_path = str(tmp_path / "dim")
     ckpt = str(tmp_path / "ckpt")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     user_ids = [
         r["user_id"]
         for r in spark.read.parquet(f"{SF_SMALL}/events.parquet")
@@ -402,7 +399,6 @@ def test_jvm_foreachbatch_streaks_parity(spark, tmp_path):
 
     src = tmp_path / "ordered_chunks"
     src.mkdir()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     n = ev.count()
     ranked = ev.withColumn(
@@ -445,7 +441,6 @@ def test_jvm_foreachbatch_streaks_parity(spark, tmp_path):
 
 
 def _write_event_chunks(spark, src, n=3):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     parts = ev.randomSplit([1.0] * n, seed=11)
     for i, p in enumerate(parts):

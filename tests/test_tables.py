@@ -1,6 +1,6 @@
-"""Loader robustness: events.ts must normalize to the same instants no
-matter how the engine materializes parquet TIMESTAMP(NANOS) — long
-nanos (Spark 3.x nanosAsLong) or TIMESTAMP_NTZ (Spark 4.x native).
+"""Loader robustness: events.ts must normalize to the instants DuckDB
+reads from the same file, whether the file carries TIMESTAMP_NTZ (the
+fixtures) or TIMESTAMP(NANOS) (a pandas/pyarrow nanosecond writer).
 Regression test for the Spark 4.1.2 loader break (VERDICT r3 item 1).
 """
 
@@ -24,28 +24,48 @@ def test_loader_ts_is_timestamp(spark):
     assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
 
 
-def test_normalize_long_and_native_paths_agree(spark):
-    """The Spark 3.x path (nanos-since-epoch long -> timestamp_micros
-    (ts div 1000)) and whatever THIS engine's native read produces must
-    yield identical instants after normalize_event_ts."""
-    native = {
-        (r["event_id"], r["ts"])
-        for r in load(spark, SF_SMALL, "events").select("event_id", "ts").collect()
+def _load_epoch_us(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    return {
+        (r["event_id"], r["u"])
+        for r in load(spark, sf_dir, "events")
+        .select("event_id", F.unix_micros("ts").alias("u"))
+        .collect()
     }
 
-    # Reconstruct the 3.x shape: raw nanos longs via DuckDB's epoch_ns.
+
+def _duckdb_epoch_us():
     con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT event_id, epoch_ns(ts) AS ts "
-        f"FROM read_parquet('{SF_SMALL}/events.parquet')"
-    ).df()
-    assert pdf["ts"].dtype == "int64"
-    long_df = spark.createDataFrame(pdf, "event_id LONG, ts LONG")
-    as_long = {
-        (r["event_id"], r["ts"])
-        for r in normalize_event_ts(long_df).collect()
-    }
-    assert native == as_long
+    return set(
+        con.execute(
+            f"SELECT event_id, epoch_us(ts) "
+            f"FROM read_parquet('{SF_SMALL}/events.parquet')"
+        ).fetchall()
+    )
+
+
+def test_loader_instants_match_duckdb_epoch_us(spark):
+    """Every event's ``load()`` instant, in epoch microseconds, equals
+    DuckDB's ``epoch_us(ts)`` over the same parquet file."""
+    native = _load_epoch_us(spark, SF_SMALL)
+    assert native and native == _duckdb_epoch_us()
+
+
+def test_nanos_events_file_loads_same_instants(spark, tmp_path):
+    """A TIMESTAMP(NANOS) copy of the events file — which Spark 4.1
+    reads only as long nanos, under nanosAsLong — loads to the same
+    instants."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMALL}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(t, tmp_path / "events.parquet")
+    ts_col = pq.ParquetFile(tmp_path / "events.parquet").schema.column(i)
+    assert "timeUnit=nanoseconds" in str(ts_col.logical_type)
+    assert _load_epoch_us(spark, str(tmp_path)) == _duckdb_epoch_us()
 
 
 def test_normalize_rejects_unknown_dtype(spark):

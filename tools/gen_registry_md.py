@@ -132,7 +132,7 @@ def main() -> int:
         " Arrow-batched numpy argmax (mapInPandas,"
         " similarity._assign_arrow). Both Catalyst expression forms"
         " retired on measurement (decision table in llm/similarity.py;"
-        " tools/assign_lists_probe.py): the crossJoin's HOF folds run"
+        " BENCH_NOTES §r11-assign-arrow): the crossJoin's HOF folds run"
         " interpreted, and the r10 literal matrix stops compiling at"
         " k>=128 (janino 64 KiB limits, silent row-based fallback) —"
         " Arrow won every probed (n,k) cell, 1.4-6.1x, including the"
