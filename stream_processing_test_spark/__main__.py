@@ -9,8 +9,9 @@ drive day to day:
 - ``run <query>``               — execute one registered query at an
                                   sf_dir; show rows or write parquet/CSV
 - ``day-close``                 — the EP2 day-close over an sf_dir:
-                                  daily scores upserted into a dimension
-                                  parquet + paginated markdown report
+                                  daily scores upserted newest-day-wins
+                                  into a dimension parquet + paginated
+                                  markdown report
                                   pages written to disk (the reference's
                                   reporting thread, StreamTest.cpp:830-1055)
 - ``bench``                     — the headline benchmark (one JSON line)
@@ -96,38 +97,24 @@ def cmd_day_close(args: argparse.Namespace) -> int:
         RecordingSink,
         send_report_batches,
     )
-    from stream_processing_test_spark.sinks.upsert import upsert_parquet
-
-    from stream_processing_test_spark.streaming.pipeline import (
-        latest_per_source,
-    )
+    from stream_processing_test_spark.sinks.upsert import upsert_newest_day
 
     spark = _spark()
     out = Path(args.out)
     out.mkdir(parents=True, exist_ok=True)
 
-    scores = daily_scores(spark, args.sf_dir).withColumnRenamed(
-        "user_id", "id"
+    dim_path = str(out / "source_dim")
+    if not (out / "source_dim").exists():
+        # an empty typed dim: the upsert appends every scored source
+        spark.createDataFrame(
+            [], "id LONG, day STRING, flow_score INT, n_detection LONG, n_error LONG"
+        ).write.parquet(dim_path)
+    # newest-day-wins, like the streaming day close: a rerun over an
+    # older day leaves a newer stored score alone
+    upsert_newest_day(
+        daily_scores(spark, args.sf_dir).withColumnRenamed("user_id", "id"),
+        dim_path,
     )
-    # persist: the newest-day frame feeds the (optional) seed write AND
-    # the upsert's merge — without it the full events scan + shuffle
-    # behind daily_scores runs once per consumer.
-    latest = latest_per_source(scores).persist()
-    try:
-        dim_path = str(out / "source_dim")
-        if not (out / "source_dim").exists():
-            latest.select("id").withColumn(
-                "day", F.lit(None).cast("string")
-            ).withColumn("flow_score", F.lit(None).cast("int")).withColumn(
-                "n_detection", F.lit(None).cast("long")
-            ).withColumn(
-                "n_error", F.lit(None).cast("long")
-            ).write.parquet(dim_path)
-        upsert_parquet(
-            spark, latest, dim_path, "id", always_set=("flow_score", "day")
-        )
-    finally:
-        latest.unpersist()
     n_scored = spark.read.parquet(dim_path).filter(
         F.col("flow_score").isNotNull()
     ).count()

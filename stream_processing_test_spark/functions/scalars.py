@@ -25,9 +25,30 @@ def blank_to_null(col: Column) -> Column:
     return F.nullif(col, F.lit(""))
 
 
-def null_to_blank(col: Column) -> Column:
-    """Re-materialize '' at MySQL-compatible edges (upsert sink)."""
-    return F.coalesce(col, F.lit(""))
+def availability_score(n_detection: Column, n_error: Column) -> Column:
+    """A6 (StreamTest.cpp:985-996): ``int((n - err) / n * 100)``,
+    clamped at 0. C++ int-cast truncates toward zero; the operands are
+    >= 0, so floor is the same. Counts come from ``count(*)`` per
+    group, so ``n`` is never 0."""
+    return F.greatest(
+        F.floor((n_detection - n_error).cast("double") / n_detection * 100),
+        F.lit(0),
+    ).cast("int")
+
+
+def first_real_resolution(value: Column, order: Column) -> Column:
+    """A4's resolution fold (StreamTest.cpp:898-910) as one aggregate:
+    the first ``value`` by ``order`` that is neither '' nor '0x0', else
+    the last ``value``. The reference's fold overwrites a stored '' or
+    '0x0' with the next row's value, empty included, until a real
+    resolution freezes it, so ('0x0', '') ends as ''.
+
+    ``min_by`` skips rows whose ordering is NULL, which filters it to
+    real values without a window sort."""
+    real = value.isNotNull() & ~value.isin("", "0x0")
+    return F.coalesce(
+        F.min_by(value, F.when(real, order)), F.max_by(value, order)
+    )
 
 
 def classify_resolution(col: Column) -> Column:

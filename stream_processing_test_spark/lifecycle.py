@@ -30,8 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.functions.scalars import (
+    availability_score,
     blank_to_null,
     classify_resolution,
+    first_real_resolution,
 )
 from stream_processing_test_spark.schemas import RESOLUTION_FHD_THRESHOLD
 from stream_processing_test_spark.sinks.reports import (
@@ -44,29 +46,20 @@ from stream_processing_test_spark.sinks.upsert import merge_upsert
 
 def day_rollup_scores(events: DataFrame) -> DataFrame:
     """EP2 steps 1-2: per-source rollup (A3/A4 shape: detection/error
-    counts + first real resolution) then availability score (A6,
-    truncate+clamp, 0 when no detections) and resolution
-    classification (F7). Mirrors StreamTest.cpp:840-999."""
-    ev = events.withColumn(
-        "video_resolution_n", blank_to_null(F.col("video_resolution"))
-    )
-    # A4's resolution rule (StreamTest.cpp:847-910): first non-empty
-    # value, where a provisional '0x0' is replaced by any later real
-    # observation — i.e. a REAL resolution always beats '0x0', and
-    # '0x0' survives only when the day saw nothing better. Made
-    # deterministic with (created_time, value) as the min_by ordering
-    # key (the reference's order is DB heap order; SURVEY §7 note).
-    rollup = ev.groupBy("url_id").agg(
+    counts + first real resolution) then availability score (A6) and
+    resolution classification (F7). Mirrors StreamTest.cpp:840-999."""
+    # A4's resolution fold (StreamTest.cpp:847-910): a real resolution
+    # always beats '0x0'; with none, the day's LAST value stands, so
+    # ('0x0', '') ends '' and the write-back keeps the stored value.
+    # (created_time, value) orders the fold deterministically (the
+    # reference's order is DB heap order; SURVEY §7 note).
+    order = F.struct("created_time", "video_resolution")
+    rollup = events.groupBy("url_id").agg(
         F.count("*").alias("n_detection"),
         F.sum(F.when(F.col("item") != 0, 1).otherwise(0)).alias("n_error"),
-        F.expr(
-            "min_by(video_resolution_n, struct(created_time, video_resolution_n)) "
-            "FILTER (WHERE video_resolution_n IS NOT NULL "
-            "AND video_resolution_n != '0x0')"
-        ).alias("real_resolution"),
-        F.max(
-            F.when(F.col("video_resolution_n") == "0x0", F.lit("0x0"))
-        ).alias("zero_resolution"),
+        first_real_resolution(F.col("video_resolution"), order).alias(
+            "video_resolution"
+        ),
         F.expr(
             "min_by(target_matching, struct(created_time, target_matching)) "
             "FILTER (WHERE target_matching IS NOT NULL)"
@@ -75,24 +68,13 @@ def day_rollup_scores(events: DataFrame) -> DataFrame:
     return rollup.select(
         "url_id",
         "target_matching",
-        F.coalesce(
-            F.col("real_resolution"), F.col("zero_resolution"), F.lit("")
-        ).alias("video_resolution"),
+        F.coalesce(F.col("video_resolution"), F.lit("")).alias(
+            "video_resolution"
+        ),
         classify_resolution(F.col("video_resolution")).alias("resolution_type"),
-        F.when(
-            F.col("n_detection") > 0,
-            F.greatest(
-                F.floor(
-                    (F.col("n_detection") - F.col("n_error")).cast("double")
-                    / F.col("n_detection")
-                    * 100
-                ),
-                F.lit(0),
-            ),
-        )
-        .otherwise(0)
-        .cast("int")
-        .alias("flow_score"),
+        availability_score(F.col("n_detection"), F.col("n_error")).alias(
+            "flow_score"
+        ),
     )
 
 
@@ -164,10 +146,10 @@ def day_close(
             "id",
             # Skip-EMPTY write-back (StreamTest.cpp:151-171): the
             # reference's conditional SET skips only empty strings, so
-            # '' -> NULL keeps the stored value while a non-empty
-            # '0x0' (a day that saw nothing better) IS written through
-            # — exactly the reference's behavior. ``scored`` keeps ''
-            # for display parity.
+            # '' -> NULL keeps the stored value while a day that ended
+            # on a non-empty '0x0' IS written through — exactly the
+            # reference's behavior. ``scored`` keeps '' for display
+            # parity.
             blank_to_null(F.col("video_resolution")).alias(
                 "video_resolution"
             ),

@@ -795,27 +795,6 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
     )
 
 
-def _explode_codes(enc: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """(vec_id, *carry, s, code) — the exact shape of the oracle's
-    codes UNION, from :func:`pq_encode`'s wide (c0..c{M-1}) row."""
-    return enc.select(
-        "vec_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"c{s}").alias("code")
-                    )
-                    for s in range(PQ_SUBS)
-                ]
-            )
-        ).alias("sc"),
-    ).select(
-        "vec_id", *carry, F.col("sc.s").alias("s"), F.col("sc.code").alias("code")
-    )
-
-
 def _lut_wide(
     queries: DataFrame, rows: list[tuple[int, int, list[float]]]
 ) -> DataFrame:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stream_processing_test_spark.functions.scalars import availability_score
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load
 
@@ -93,9 +94,7 @@ def failing_programs(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
     detections = F.count("*")
     scores = ev.groupBy("user_id").agg(
-        F.floor((detections - errors).cast("double") / detections * 100)
-        .cast("int")
-        .alias("flow_score"),
+        availability_score(detections, errors).alias("flow_score"),
     ).select((F.col("user_id") % 25).cast("int").alias("program_id"), "flow_score")
 
     bad_programs = (

@@ -23,6 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stream_processing_test_spark.functions.scalars import (
+    availability_score,
+    classify_resolution,
+    crosses_next_utc_midnight_col,
+    first_real_resolution,
+)
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load
 
@@ -47,10 +53,6 @@ def day_close_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycle. The predicate itself is
     ``functions.scalars.crosses_next_utc_midnight_col`` (whole-stage
     codegen); the Python twin drives batch day-close loops."""
-    from stream_processing_test_spark.functions.scalars import (
-        crosses_next_utc_midnight_col,
-    )
-
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_format(F.date_trunc("DAY", "ts"), "yyyy-MM-dd").alias("day")
@@ -149,7 +151,7 @@ def per_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCORES_ORACLE = """
+SCORES_ORACLE = """
 SELECT CAST(user_id AS BIGINT) AS user_id,
        strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
        CAST(COUNT(*) AS BIGINT) AS n_detection,
@@ -161,13 +163,12 @@ GROUP BY user_id, date_trunc('day', ts)
 """
 
 
-@register("daily_scores", oracle=_SCORES_ORACLE, survey_ops="A6,A8,T2,F1,F2,F5,P7")
+@register("daily_scores", oracle=SCORES_ORACLE, survey_ops="A6,A8,T2,F1,F2,F5,P7")
 def daily_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily availability score (A6, StreamTest.cpp:985-996):
     ``score = int((detections - errors) / detections * 100)``, clamped
     at 0, per source per UTC day (the reference's tumbling daily window
-    T2). C++ int-cast truncates toward zero; operands are >= 0 so
-    floor() is identical — both engines use floor then clamp."""
+    T2); the arithmetic is ``functions.scalars.availability_score``."""
     ev = load(spark, sf_dir, "events")
     errors = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
     detections = F.count("*")
@@ -178,14 +179,7 @@ def daily_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             detections.alias("n_detection"),
             errors.alias("n_error"),
-            F.greatest(
-                F.floor(
-                    (detections - errors).cast("double") / detections * 100
-                ),
-                F.lit(0),
-            )
-            .cast("int")
-            .alias("flow_score"),
+            availability_score(detections, errors).alias("flow_score"),
         )
     )
 
@@ -273,7 +267,6 @@ def resolution_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     The map lookup is a constant-folded ``create_map`` expression —
     no join, no shuffle beyond the final count. A 'WxH' test column is
     derived deterministically from the events JSON envelope."""
-    from stream_processing_test_spark.functions.scalars import classify_resolution
     from stream_processing_test_spark.schemas import RESOLUTION_FHD_THRESHOLD
 
     ev = load(spark, sf_dir, "events")
@@ -383,12 +376,8 @@ def attribute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.expr(first_nonempty("bitrate")), F.lit("")).alias(
             "bitrate"
         ),
-        F.coalesce(
-            F.expr(
-                "min_by(video_resolution, event_id) FILTER "
-                "(WHERE video_resolution <> '' AND video_resolution <> '0x0')"
-            ),
-            F.expr("max_by(video_resolution, event_id)"),
+        first_real_resolution(
+            F.col("video_resolution"), F.col("event_id")
         ).alias("video_resolution"),
         F.count("*").alias("n_events"),
     )

@@ -17,14 +17,12 @@ Reference parity (see SURVEY.md §1):
 
 The reference stores almost everything as strings (even bitrate
 "1234 kb/s") with MySQL NULL coerced to "" on read; we keep proper
-Spark types, normalize ``'' -> NULL`` at ingest (see
-``functions.scalars.blank_to_null``) and re-materialize "" only at
-MySQL-compatible edges.
+Spark types and normalize ``'' -> NULL`` at ingest (see
+``functions.scalars.blank_to_null``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
@@ -144,20 +142,3 @@ RESOLUTION_MAP: dict[str, int] = {
     "8192x4320": 25,
     "15360x8640": 26,
 }
-
-
-def error_dim(spark: SparkSession) -> DataFrame:
-    """Literal error-taxonomy dimension (broadcast-join for labels)."""
-    from stream_processing_test_spark.tables import literal_df
-
-    return literal_df(
-        spark, ERROR_TAXONOMY, "item INT, error_name STRING, error_message STRING"
-    )
-
-
-def resolution_dim(spark: SparkSession) -> DataFrame:
-    """Literal resolution dimension: video_resolution -> ordinal."""
-    from stream_processing_test_spark.tables import literal_df
-
-    rows = [(k, v) for k, v in RESOLUTION_MAP.items()]
-    return literal_df(spark, rows, "video_resolution STRING, resolution_type INT")

@@ -37,7 +37,7 @@ def merge_upsert(
 
     ``updates`` must be unique per ``key`` (like a SQL MERGE source) —
     duplicate keys would multiply rows through the outer join; callers
-    reduce first (see streaming.pipeline.finalize_to_dimension).
+    reduce first (see :func:`upsert_newest_day`).
 
     - column in ``always_set`` → incoming value wins even when NULL;
     - otherwise → ``coalesce(new, old)`` (skip-empty semantics; callers
@@ -101,6 +101,65 @@ def upsert_parquet(
     staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
     merged.write.mode("overwrite").parquet(staging)
     swap_directory(spark, staging, target_path)
+
+
+def upsert_newest_day(scores: DataFrame, dim_path: str) -> None:
+    """T8's day-end write-back (StreamTest.cpp:982-1029): upsert the
+    newest day per source from an (id, day, flow_score, n_detection,
+    n_error) frame into the dimension parquet at ``dim_path``. The
+    streaming day close (``finalize_to_dimension``, once per
+    micro-batch) and the CLI ``day-close`` both write through here.
+
+    ``scores`` may carry several days per source (update mode re-emits
+    every changed window), so it is first reduced to the newest day
+    per source: the upsert key must be unique.
+
+    Newest-day-wins holds ACROSS calls too: a late update to an old
+    day can arrive after a newer day was written (on restart, or with
+    out-of-order event files), so rows older than the dimension's
+    stored day are dropped. That makes the upsert monotone and the
+    final dimension order-independent; a two-phase restarted stream
+    lands exactly where a one-shot run does (pinned by
+    test_restart_recovers_aggregation_state). Ties overwrite: the
+    latest emission of a window carries its most complete state."""
+    latest = (
+        scores.groupBy("id")
+        .agg(
+            F.max_by(
+                F.struct("day", "flow_score", "n_detection", "n_error"), "day"
+            ).alias("s")
+        )
+        .select("id", "s.*")
+    )
+    spark = scores.sparkSession
+    target = spark.read.parquet(dim_path)
+    if "day" in target.columns:
+        current = target.select("id", F.col("day").alias("cur_day"))
+        latest = (
+            latest.join(current, "id", "left")
+            .filter(
+                F.col("cur_day").isNull() | (F.col("day") >= F.col("cur_day"))
+            )
+            .drop("cur_day")
+        )
+    else:
+        # Without a stored day there is nothing to compare (merge_upsert
+        # drops the update's day column), so a late re-emission of an
+        # old window CAN overwrite a newer score. Keep writing, but say
+        # so: callers who want order-independence add a 'day' column.
+        import warnings
+
+        warnings.warn(
+            f"newest-day upsert: target {dim_path} has no 'day' column; "
+            "newest-day-wins cannot be enforced and out-of-order window "
+            "re-emissions may overwrite newer scores",
+            stacklevel=2,
+        )
+    # looked up at call time, so a wrapper installed on this module's
+    # ``upsert_parquet`` sees every write
+    upsert_parquet(
+        spark, latest, dim_path, "id", always_set=("flow_score", "day")
+    )
 
 
 def swap_directory(spark: SparkSession, staging: str, target_path: str) -> None:
@@ -353,17 +412,3 @@ def upsert_jdbc(
         _execute_driver_sql(
             spark, url, [f"DROP TABLE {staging}"], properties
         )
-
-
-def foreach_batch_upsert(
-    target_path: str, key: str, always_set: tuple[str, ...] = ()
-):
-    """Adapter for ``writeStream.foreachBatch`` — the streaming form of
-    S6/T8: each micro-batch's finalized rows merge into the dimension."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, target_path, key, always_set
-        )
-
-    return apply

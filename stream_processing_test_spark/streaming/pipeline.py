@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stream_processing_test_spark.functions.scalars import availability_score
+from stream_processing_test_spark.operators.rollup import SCORES_ORACLE
 from stream_processing_test_spark.registry import register
 
 # Schema of the driver's events table; ``ts`` takes whichever dtype
@@ -164,12 +166,7 @@ def daily_rollup(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
         .agg(
             detections.alias("n_detection"),
             errors.alias("n_error"),
-            F.greatest(
-                F.floor((detections - errors).cast("double") / detections * 100),
-                F.lit(0),
-            )
-            .cast("int")
-            .alias("flow_score"),
+            availability_score(detections, errors).alias("flow_score"),
         )
         .select(
             "user_id",
@@ -225,21 +222,9 @@ def run_to_memory(
 
 # The streaming rollup is oracle-checked with the SAME SQL as the batch
 # daily_scores — stream/batch parity is the correctness claim (T2/T3).
-_STREAM_SCORES_ORACLE = """
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-       CAST(COUNT(*) AS BIGINT) AS n_detection,
-       CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-       CAST(GREATEST(floor(CAST(COUNT(*) - SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS DOUBLE)
-                           / COUNT(*) * 100), 0) AS INT) AS flow_score
-FROM events
-GROUP BY user_id, date_trunc('day', ts)
-"""
-
-
 @register(
     "streaming_daily_scores",
-    oracle=_STREAM_SCORES_ORACLE,
+    oracle=SCORES_ORACLE,
     survey_ops="T1,T2,T3,T4,T5,A6", tier=0
 )
 def streaming_daily_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,7 +265,7 @@ def final_update_state(raw: DataFrame) -> DataFrame:
 
 @register(
     "streaming_daily_scores_update",
-    oracle=_STREAM_SCORES_ORACLE,
+    oracle=SCORES_ORACLE,
     survey_ops="T2,T3,T5,A6",
     tier=0,  # new driver surface in r10 (VERDICT r9 item 4)
 )
@@ -481,23 +466,6 @@ def streaming_rate_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scoped.table(name)
 
 
-def latest_per_source(scores: DataFrame) -> DataFrame:
-    """Newest-day row per source from an (id, day, flow_score,
-    n_detection, n_error) frame — the reduction both the streaming
-    day-close (``finalize_to_dimension``) and the CLI day-close apply
-    before upserting, kept in ONE place so the two can't drift on
-    which fields they finalize."""
-    return (
-        scores.groupBy("id")
-        .agg(
-            F.max_by(
-                F.struct("day", "flow_score", "n_detection", "n_error"), "day"
-            ).alias("s")
-        )
-        .select("id", "s.*")
-    )
-
-
 def finalize_to_dimension(
     spark: SparkSession,
     events_path: str,
@@ -512,12 +480,11 @@ def finalize_to_dimension(
     StreamTest.cpp:982-1029).
 
     Update output mode: each micro-batch emits only changed
-    (window, source) rows — possibly SEVERAL windows per source — so
-    the batch is first reduced to the newest day per source
-    (``max_by`` on day; the upsert key is the source id and must be
-    unique per batch). Re-emission of the same rows is idempotent;
-    checkpointing makes restarts exactly-once."""
-    from stream_processing_test_spark.sinks.upsert import upsert_parquet
+    (window, source) rows — possibly SEVERAL windows per source — and
+    ``sinks.upsert.upsert_newest_day`` writes the newest day per
+    source, never older than the stored one. Re-emission of the same
+    rows is idempotent; checkpointing makes restarts exactly-once."""
+    from stream_processing_test_spark.sinks.upsert import upsert_newest_day
 
     ev = events_stream(spark, events_path, max_files_per_trigger)
     scores = daily_rollup(ev, watermark).select(
@@ -527,58 +494,10 @@ def finalize_to_dimension(
         "n_detection",
         "n_error",
     )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        latest = latest_per_source(batch_df)
-        # Newest-day-wins ACROSS batches, not just within one: update
-        # mode re-emits any changed window, so a late update to an old
-        # day can arrive after a newer day was already finalized (e.g.
-        # on restart, or with out-of-order event files). Dropping rows
-        # older than the target's current day makes the upsert monotone
-        # — the final dimension is order-independent, and a two-phase
-        # restarted run lands exactly where a one-shot run does
-        # (pinned by test_restart_recovers_aggregation_state). Ties
-        # overwrite: the latest emission of a window carries its most
-        # complete cumulative state.
-        target = batch_df.sparkSession.read.parquet(dim_path)
-        if "day" in target.columns:
-            current = target.select("id", F.col("day").alias("cur_day"))
-            latest = (
-                latest.join(current, "id", "left")
-                .filter(
-                    F.col("cur_day").isNull()
-                    | (F.col("day") >= F.col("cur_day"))
-                )
-                .drop("cur_day")
-            )
-        else:
-            # A dimension without a 'day' column cannot be guarded:
-            # merge_upsert drops the update's day column, so there is
-            # no stored day to compare and a late re-emission of an
-            # old window CAN overwrite a newer score (always_set).
-            # Keep the pre-guard behavior but say so loudly — callers
-            # who want order-independence add a 'day' column.
-            import warnings
-
-            warnings.warn(
-                f"finalize_to_dimension: target {dim_path} has no 'day' "
-                "column; newest-day-wins cannot be enforced and "
-                "out-of-order window re-emissions may overwrite newer "
-                "scores",
-                stacklevel=2,
-            )
-        upsert_parquet(
-            batch_df.sparkSession,
-            latest,
-            dim_path,
-            "id",
-            always_set=("flow_score", "day"),
-        )
-
     q = (
         scores.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply)
+        .foreachBatch(lambda batch_df, _: upsert_newest_day(batch_df, dim_path))
         .trigger(availableNow=True)
         .start()
     )

@@ -33,7 +33,6 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stream_processing_test_spark.registry import register
@@ -128,201 +127,6 @@ def failure_streaks(events: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class JvmStreaksForeachBatch:
-    """The A/B twin of :func:`failure_streaks` (VERDICT r9 item 6): the
-    same closed-streak semantics computed per micro-batch with JVM
-    window functions (the islands trick — zero Python in the per-event
-    path) inside ``foreachBatch``, stitched across batch boundaries by
-    a driver-carried per-key (streak_len, start, last) dict.
-
-    Per batch, everything event-proportional is JVM: islands → maximal
-    error runs → interior runs (neither at the key's batch start nor
-    end — closed, carry-independent, emitted distributed). Only the
-    per-key BOUNDARY rows come to the driver (one row per key in the
-    batch: its leading and trailing error runs, if any) for the
-    carry merge — O(|keys|) Python per batch, not O(|events|).
-
-    The architectural trade vs applyInPandasWithState, recorded with
-    the A/B numbers in BENCH_SCALE/BENCH_NOTES: state here is
-    DRIVER-HELD (a dict + a |keys|-row collect per batch), so it
-    deploys only while keys-per-driver is comfortable and it abandons
-    the state store's checkpoint/recovery contract — the Python-state
-    form keeps state executor-sharded and recoverable. This class
-    exists to price the Python tax, not to replace the operator.
-
-    Ordering contract is the operator's: per-key event_id order within
-    a batch is established by the window sort; ACROSS batches the
-    source must deliver in order (file replay with whole files per
-    batch, Kafka per-partition)."""
-
-    def __init__(
-        self, min_streak: int = MIN_STREAK, collect_output: bool = False
-    ):
-        self.min_streak = min_streak
-        self.state: dict[int, tuple[int, int, int]] = {}
-        self.collected: list[tuple] | None = [] if collect_output else None
-        self.rows_emitted = 0
-
-    def _emit_interior(self, df: DataFrame) -> None:
-        if self.collected is not None:
-            rows = df.collect()
-            self.collected.extend(
-                (
-                    r["user_id"],
-                    r["streak_len"],
-                    r["start_event_id"],
-                    r["end_event_id"],
-                )
-                for r in rows
-            )
-            self.rows_emitted += len(rows)
-        else:
-            self.rows_emitted += df.count()
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        b = batch.select("user_id", "event_id", "event_type")
-        w = Window.partitionBy("user_id").orderBy("event_id")
-        we = Window.partitionBy("user_id", "is_error").orderBy("event_id")
-        islands = b.withColumn(
-            "is_error", (F.col("event_type") == "error").cast("int")
-        ).withColumn("grp", F.row_number().over(w) - F.row_number().over(we))
-        # bounds is |keys|-sized and feeds both the runs join and the
-        # per-key boundary frame — persisted so the second action
-        # doesn't re-scan the batch for it (same reason as runs below)
-        bounds = b.groupBy("user_id").agg(
-            F.min("event_id").alias("k_first"),
-            F.max("event_id").alias("k_last"),
-        ).persist()
-        runs = (
-            islands.filter("is_error = 1")
-            .groupBy("user_id", "grp")
-            .agg(
-                F.count("*").alias("len"),
-                F.min("event_id").alias("start"),
-                F.max("event_id").alias("end"),
-            )
-            .join(bounds, "user_id")
-            .withColumn("leads", F.col("start") == F.col("k_first"))
-            .withColumn("trails", F.col("end") == F.col("k_last"))
-        )
-        # runs feeds TWO actions (the interior emit and the per-key
-        # boundary collect); without a persist the whole
-        # scan→windows→groupBy lineage executes twice per batch —
-        # which doubled the distributed cost this A/B exists to
-        # measure. Freed before the callback returns.
-        runs = runs.persist()
-        # interior runs: maximal error runs not touching either batch
-        # boundary of their key — the NEXT key event exists and is a
-        # non-error (runs are maximal), so they are closed and
-        # carry-independent. Emitted without driver involvement.
-        self._emit_interior(
-            runs.filter(
-                (~F.col("leads"))
-                & (~F.col("trails"))
-                & (F.col("len") >= self.min_streak)
-            ).select(
-                "user_id",
-                F.col("len").alias("streak_len"),
-                F.col("start").alias("start_event_id"),
-                F.col("end").alias("end_event_id"),
-            )
-        )
-        lead = runs.filter("leads").select(
-            "user_id",
-            F.col("len").alias("lead_len"),
-            F.col("start").alias("lead_start"),
-            F.col("end").alias("lead_end"),
-            F.col("trails").alias("lead_trails"),
-        )
-        trail = runs.filter(F.col("trails") & ~F.col("leads")).select(
-            "user_id",
-            F.col("len").alias("tr_len"),
-            F.col("start").alias("tr_start"),
-            F.col("end").alias("tr_end"),
-        )
-        per_key = (
-            bounds.select("user_id")
-            .join(lead, "user_id", "left")
-            .join(trail, "user_id", "left")
-            .collect()
-        )
-        runs.unpersist(False)
-        bounds.unpersist(False)
-        emit: list[tuple[int, int, int, int]] = []
-        for r in per_key:
-            uid = int(r["user_id"])
-            carried = self.state.pop(uid, None)
-            has_lead = r["lead_len"] is not None
-            if carried is not None:
-                if has_lead:
-                    mlen = carried[0] + r["lead_len"]
-                    if r["lead_trails"]:
-                        # the key's whole batch is one error run — the
-                        # merged streak stays open, carry it forward
-                        self.state[uid] = (mlen, carried[1], r["lead_end"])
-                        continue
-                    if mlen >= self.min_streak:
-                        emit.append((uid, mlen, carried[1], r["lead_end"]))
-                elif carried[0] >= self.min_streak:
-                    # key's first batch event is a non-error: the
-                    # carried streak just closed
-                    emit.append((uid, carried[0], carried[1], carried[2]))
-            elif has_lead:
-                if r["lead_trails"]:
-                    self.state[uid] = (
-                        r["lead_len"],
-                        r["lead_start"],
-                        r["lead_end"],
-                    )
-                    continue
-                if r["lead_len"] >= self.min_streak:
-                    emit.append(
-                        (uid, r["lead_len"], r["lead_start"], r["lead_end"])
-                    )
-            if r["tr_len"] is not None:
-                self.state[uid] = (r["tr_len"], r["tr_start"], r["tr_end"])
-        self.rows_emitted += len(emit)
-        if self.collected is not None:
-            self.collected.extend(emit)
-
-
-def batch_failure_streaks(events: DataFrame) -> DataFrame:
-    """Batch twin for parity tests: the same closed streaks computed
-    with the islands trick (rn - rn_within_errors identifies runs of
-    consecutive errors), keeping only streaks followed by a later
-    non-error event (i.e. CLOSED — matching what the stateful stream
-    has emitted by end of input)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    we = Window.partitionBy("user_id", "is_error").orderBy("event_id")
-    islands = (
-        events.select("user_id", "event_id", "event_type")
-        .withColumn("is_error", (F.col("event_type") == "error").cast("int"))
-        .withColumn("grp", F.row_number().over(w) - F.row_number().over(we))
-    )
-    closes = events.filter(F.col("event_type") != "error").groupBy("user_id").agg(
-        F.max("event_id").alias("last_success_id")
-    )
-    streaks = (
-        islands.filter(F.col("is_error") == 1)
-        .groupBy("user_id", "grp")
-        .agg(
-            F.count("*").alias("streak_len"),
-            F.min("event_id").alias("start_event_id"),
-            F.max("event_id").alias("end_event_id"),
-        )
-        .filter(F.col("streak_len") >= MIN_STREAK)
-    )
-    return (
-        streaks.join(closes, "user_id")
-        .filter(F.col("end_event_id") < F.col("last_success_id"))
-        .select("user_id", "streak_len", "start_event_id", "end_event_id")
     )
 
 

@@ -140,9 +140,3 @@ def literal_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame
     names = [f.split()[0] for f in schema.split(",")]
     pdf = pd.DataFrame(rows, columns=[n.strip() for n in names])
     return spark.createDataFrame(pdf, schema=schema)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql queries."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

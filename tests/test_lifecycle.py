@@ -193,6 +193,34 @@ def test_day_close_blank_day_keeps_stored_resolution(spark):
     assert rows2["1"]["video_resolution"] == "0x0"
 
 
+def test_day_close_zero_then_blank_keeps_stored_resolution(spark):
+    """A4's fold overwrites a provisional '0x0' with the next row's
+    value, empty included (StreamTest.cpp:898-910), so a day that saw
+    '0x0' then '' ends on ''. The skip-empty write-back then keeps the
+    dimension's stored resolution instead of writing '0x0'."""
+    from stream_processing_test_spark.lifecycle import day_close
+
+    dim = _dimension(spark).filter(F.col("id") == "1").withColumn(
+        "video_resolution", F.lit("1920x1080")
+    )
+    events = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url_id": ["1", "1"],
+                "item": [0, 0],
+                "video_resolution": ["0x0", ""],
+                "target_matching": ["Channel 1", "Channel 1"],
+                "created_time": ["2024-01-15 08:00:00", "2024-01-15 09:00:00"],
+            }
+        )
+    )
+    result = day_close(dim, events, _programs(spark))
+    assert result.scored.first()["video_resolution"] == ""
+    row = result.updated_dim.first()
+    assert row["video_resolution"] == "1920x1080"
+    assert row["flow_score"] == 100
+
+
 def test_match_programs_duplicate_name_first_match_wins(spark):
     """J3 'first match wins' (StreamTest.cpp:1007-1014): a duplicate
     program name must yield ONE deterministic match (min id), never

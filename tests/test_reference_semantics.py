@@ -20,6 +20,7 @@ from stream_processing_test_spark.functions.scalars import (
     classify_resolution,
     crosses_next_utc_midnight,
     crosses_next_utc_midnight_col,
+    first_real_resolution,
     parse_bitrate_kbps,
     truncate_message,
 )
@@ -182,12 +183,8 @@ def test_first_non_empty_resolution_replacement(spark):
     out = (
         df.groupBy("url_id")
         .agg(
-            F.coalesce(
-                F.expr(
-                    "min_by(video_resolution, event_id) "
-                    "FILTER (WHERE video_resolution NOT IN ('', '0x0'))"
-                ),
-                F.expr("max_by(video_resolution, event_id)"),
+            first_real_resolution(
+                F.col("video_resolution"), F.col("event_id")
             ).alias("res")
         )
         .collect()

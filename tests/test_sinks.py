@@ -19,7 +19,11 @@ from stream_processing_test_spark.sinks.reports import (
     truncate_message,
     write_csv,
 )
-from stream_processing_test_spark.sinks.upsert import merge_upsert, upsert_parquet
+from stream_processing_test_spark.sinks.upsert import (
+    merge_upsert,
+    upsert_newest_day,
+    upsert_parquet,
+)
 
 
 def test_markdown_table():
@@ -129,6 +133,48 @@ def test_upsert_parquet_idempotent(spark, tmp_path):
     assert first == second  # T8: day-end finalization is idempotent
     got = {r["id"]: r["flow_score"] for r in spark.read.parquet(path).collect()}
     assert got == {1: 50, 2: 99, 3: 70}
+
+
+def test_upsert_newest_day_never_goes_back_a_day(spark, tmp_path):
+    """The shared day-end write-back keeps the newest day per source:
+    an older day leaves the stored score and day alone, a newer day
+    overwrites, and a source the dimension lacks is appended."""
+    schema = "id LONG, day STRING, flow_score INT, n_detection LONG, n_error LONG"
+    path = str(tmp_path / "dim")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "id": [1, 2],
+                "day": ["2024-01-16", "2024-01-16"],
+                "flow_score": [90, 90],
+                "n_detection": [10, 10],
+                "n_error": [1, 1],
+            }
+        ),
+        schema,
+    ).write.parquet(path)
+    scores = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "id": [1, 2, 2, 3],
+                "day": ["2024-01-15", "2024-01-15", "2024-01-17", "2024-01-15"],
+                "flow_score": [10, 10, 50, 70],
+                "n_detection": [10, 10, 10, 10],
+                "n_error": [9, 9, 5, 3],
+            }
+        ),
+        schema,
+    )
+    upsert_newest_day(scores, path)
+    got = {
+        r["id"]: (r["day"], r["flow_score"])
+        for r in spark.read.parquet(path).collect()
+    }
+    assert got == {
+        1: ("2024-01-16", 90),
+        2: ("2024-01-17", 50),
+        3: ("2024-01-15", 70),
+    }
 
 
 def test_compact_parquet_dir_flat_and_partitioned(spark, tmp_path):

@@ -380,66 +380,6 @@ def test_stateful_streaks_carry_across_micro_batches(spark, tmp_path):
     )
 
 
-def test_jvm_foreachbatch_streaks_parity(spark, tmp_path):
-    """The JVM islands-in-foreachBatch A/B twin must emit EXACTLY the
-    applyInPandasWithState operator's closed-streak set on a genuinely
-    multi-batch, event-id-ordered replay — including streaks that span
-    batch boundaries (the carry merge), streaks closed by the first
-    event of the next batch (the carried-close path), and whole-batch
-    error runs that stay open across several batches. Verified against
-    the batch islands formulation, the shared ground truth."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window
-
-    from stream_processing_test_spark.streaming.pipeline import events_stream
-    from stream_processing_test_spark.streaming.stateful import (
-        JvmStreaksForeachBatch,
-        batch_failure_streaks,
-    )
-
-    src = tmp_path / "ordered_chunks"
-    src.mkdir()
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    n = ev.count()
-    ranked = ev.withColumn(
-        "rn", F.row_number().over(Window.orderBy("event_id"))
-    )
-    for i in range(4):  # contiguous event_id slices, written in order
-        (
-            ranked.filter(
-                (F.col("rn") > i * n // 4) & (F.col("rn") <= (i + 1) * n // 4)
-            )
-            .drop("rn")
-            .coalesce(1)
-            .write.parquet(str(src / f"chunk{i}"))
-        )
-    runner = JvmStreaksForeachBatch(collect_output=True)
-    q = (
-        events_stream(spark, f"{src}/chunk*/", max_files_per_trigger=1)
-        .select("user_id", "event_id", "event_type")
-        .writeStream.foreachBatch(runner)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    want = sorted(
-        (
-            r["user_id"],
-            r["streak_len"],
-            r["start_event_id"],
-            r["end_event_id"],
-        )
-        for r in batch_failure_streaks(
-            spark.read.parquet(f"{SF_SMALL}/events.parquet").select(
-                "user_id", "event_id", "event_type"
-            )
-        ).collect()
-    )
-    assert sorted(runner.collected) == want
-    assert runner.rows_emitted == len(want)
-    assert want, "fixture produced no streaks — the parity is vacuous"
-
-
 def _write_event_chunks(spark, src, n=3):
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     parts = ev.randomSplit([1.0] * n, seed=11)

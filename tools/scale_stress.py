@@ -1809,33 +1809,6 @@ def streaming_run(spark, tdir: str, which: str, repeats: int) -> dict:
             # of the tumbling rollup per (window, type) group, bounded
             # by the watermark exactly like scores_update
             result, mode = sliding_rollup(ev, watermark="1 day"), "update"
-        elif which == "streaks_jvm":
-            # A/B twin (VERDICT r9 item 6): the same closed-streak
-            # semantics via JVM window functions per micro-batch in
-            # foreachBatch + a driver-carried per-key boundary dict
-            # (pytest-pinned row-equal to the Python-state operator) —
-            # prices applyInPandasWithState's Python walk against a
-            # zero-Python-per-event formulation
-            from stream_processing_test_spark.streaming.stateful import (
-                JvmStreaksForeachBatch,
-            )
-
-            runner = JvmStreaksForeachBatch()
-            t0 = time.time()
-            q = (
-                ev.select("user_id", "event_id", "event_type")
-                .writeStream.foreachBatch(runner)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            samples.append(round(time.time() - t0, 2))
-            if i == 0:
-                progs = q.recentProgress
-                out["n_batches"] = len(progs)
-                out["streaks_emitted"] = runner.rows_emitted
-                out["state_keys_driver_held"] = len(runner.state)
-            continue
         else:
             result, mode = failure_streaks(ev), "append"
         t0 = time.time()
@@ -2155,7 +2128,6 @@ def main() -> None:
                 "ss_join",
                 "ss_join_outer",
                 "streaks",
-                "streaks_jvm",
             ):
                 if qfilter and which not in qfilter:
                     continue
