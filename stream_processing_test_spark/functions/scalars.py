@@ -111,11 +111,3 @@ def crosses_next_utc_midnight_col(ts: Column, wait_minutes: int) -> Column:
     next_midnight = F.date_trunc("DAY", ts) + F.expr("INTERVAL 1 DAY")
     return ts + F.expr(f"INTERVAL {int(wait_minutes)} MINUTES") >= next_midnight
 
-
-def truncate_message(col: Column, limit: int = 18000, keep: int = 17900) -> Column:
-    """Webhook message cap (F11; reference HttpServer.cpp:126-129):
-    messages over ``limit`` chars are truncated to ``keep`` + ellipsis."""
-    return F.when(
-        F.length(col) > limit,
-        F.concat(F.substring(col, 1, keep), F.lit("…")),
-    ).otherwise(col)

@@ -20,8 +20,8 @@ Scale posture: report formatting is driver-side BY DESIGN — reports
 are human-facing (≤ thousands of rows, paginated to ≤30-row webhook
 posts). The data plane never collects; only the final report
 DataFrame, already aggregated and sorted, is collected for
-formatting. For large sorted exports use ``write_csv`` which stays
-fully distributed.
+formatting. ``write_csv`` writes its one file from an executor, so a
+CSV export never passes through the driver.
 """
 
 from __future__ import annotations
@@ -41,16 +41,15 @@ CSV_REPORT_BATCH = 30  # StreamTest.cpp:1239-1243
 VENDOR_REPORT_BATCH = 2  # StreamTest.cpp:572-574
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """S7: CSV file sink with header. ``single_file`` mirrors the
-    reference's one-file report (coalesce(1) — fine for report-sized
-    output); pass False to keep one file per partition at scale."""
-    out = df.coalesce(1) if single_file else df
+def write_csv(df: DataFrame, path: str) -> None:
+    """S7: CSV file sink with header, one file like the reference's
+    report (coalesce(1) — fine for report-sized output)."""
     # the CSV writer trims cell whitespace by default (write-side
     # ignore*WhiteSpace=true) — report fields carrying error text must
     # land verbatim
     (
-        out.write.mode("overwrite")
+        df.coalesce(1)
+        .write.mode("overwrite")
         .option("header", True)
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")

@@ -555,22 +555,19 @@ def _register_envelope_rollup() -> None:
         construction), aggregated with the SAME rollup
         (:func:`_envelope_rollup_agg`) in complete mode, against the
         SAME DuckDB oracle as ``envelope_rollup`` — batch/stream ingest
-        parity proven by the driver, not just pytest.
-
-        Built on a cloned session so the memory-sink run's
-        state-partition override cannot leak to concurrent queries
-        (same pattern as ``streaming_daily_scores``)."""
+        parity proven by the driver, not just pytest."""
         from stream_processing_test_spark.streaming.pipeline import (
-            run_to_memory,
+            replay_to_memory,
         )
 
         out = _envelope_fixture(spark, sf_dir)
-        scoped = spark.newSession()
-        landed = stream_probe_events(scoped, out, fmt="json")
-        import hashlib
-
-        name = "stream_envelope_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        return run_to_memory(_envelope_rollup_agg(landed), name)
+        return replay_to_memory(
+            spark,
+            sf_dir,
+            lambda scoped, _: _envelope_rollup_agg(
+                stream_probe_events(scoped, out, fmt="json")
+            ),
+        )
 
 
 _register_envelope_rollup()

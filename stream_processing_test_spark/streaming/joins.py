@@ -18,24 +18,21 @@ makes).
 
 Scale notes (100 TB posture):
 - State is keyed by user_id (join) / event_id (dedup) — uniform keys,
-  no skew; state-store partitions are bounded by `run_to_memory`'s
-  `state_partitions` in tests and sized to the cluster in deployment.
+  no skew; state-store partitions are `pipeline.STATE_PARTITIONS` in
+  the registered replays and sized to the cluster in deployment.
 - The interval is the state bound: 1 h of click state per user, not
   the full history.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.registry import register
-from stream_processing_test_spark.streaming.pipeline import (
-    events_stream,
-    run_to_memory,
-)
+from stream_processing_test_spark.streaming.pipeline import replay_to_memory
 
 _SS_JOIN_ORACLE = """
 SELECT CAST(p.event_id AS BIGINT) AS purchase_id,
@@ -51,19 +48,16 @@ JOIN events c
 """
 
 
-@register(
-    "streaming_click_purchase_join",
-    oracle=_SS_JOIN_ORACLE,
-    survey_ops="⊘stream-stream-join,T1,T5", tier=0
-)
-def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: every (purchase, click) pair by the
-    same user with the click at most 1 h before the purchase. Inner
-    join → matches emit immediately; the watermark + interval let Spark
-    evict click state older than the join window."""
-    path = os.path.join(sf_dir, "events.parquet")
+def click_purchase_pairs(
+    events: Callable[[], DataFrame], how: str
+) -> DataFrame:
+    """Stream-stream interval join of purchases (left) to clicks
+    (right) by the same user with the click at most 1 h before the
+    purchase; ``how`` is the join type. Each side reads its own
+    ``events()`` stream. The 2 h watermarks plus the interval let
+    Spark evict click state older than the join window."""
     clicks = (
-        events_stream(spark, path)
+        events()
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -73,24 +67,39 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("click_ts", "2 hours")
     )
     purchases = (
-        events_stream(spark, path)
+        events()
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("user_id"),
+            "user_id",
             F.col("ts").alias("purchase_ts"),
         )
         .withWatermark("purchase_ts", "2 hours")
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("click_ts") <= F.col("purchase_ts")),
-        "inner",
+        how,
     ).select("purchase_id", "click_id", "user_id")
-    name = f"ss_join_{abs(hash(sf_dir)) % 10_000}"
-    return run_to_memory(joined, name, output_mode="append")
+
+
+@register(
+    "streaming_click_purchase_join",
+    oracle=_SS_JOIN_ORACLE,
+    survey_ops="⊘stream-stream-join,T1,T5", tier=0
+)
+def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner interval join: every (purchase, click) pair
+    by the same user with the click at most 1 h before the purchase.
+    Inner join → matches emit immediately."""
+    return replay_to_memory(
+        spark,
+        sf_dir,
+        lambda _, events: click_purchase_pairs(events, "inner"),
+        "append",
+    )
 
 
 _SDEDUP_ORACLE = """
@@ -112,18 +121,18 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, then counted per type. The oracle is the batch count of
     the ORIGINAL events — equality proves the duplicates were fully
     removed."""
-    path = os.path.join(sf_dir, "events.parquet")
-    once = events_stream(spark, path).select("event_id", "ts", "event_type")
-    twice = once.union(
-        events_stream(spark, path).select("event_id", "ts", "event_type")
-    )
-    deduped = (
-        twice.withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    counts = deduped.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    name = f"sdedup_{abs(hash(sf_dir)) % 10_000}"
-    return run_to_memory(counts, name, output_mode="complete")
+
+    def counts(_, events):
+        once = events().select("event_id", "ts", "event_type")
+        twice = once.union(events().select("event_id", "ts", "event_type"))
+        return (
+            twice.withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .groupBy("event_type")
+            .agg(F.count("*").alias("n_events"))
+        )
+
+    return replay_to_memory(spark, sf_dir, counts)
 
 
 _SS_OUTER_ORACLE = """
@@ -163,59 +172,20 @@ def streaming_click_purchase_outer(
 
     Finite-replay mechanics: one far-future sentinel PER SIDE (a
     'click' and a 'purchase', user_id = -1, filtered from the result)
-    appended to the single replay file — the shared
-    :func:`pipeline.sentinel_replay` helper documents why each piece
-    is load-bearing (per-input watermark advance, real-events-first
-    ordering, the trailing no-data batch that flushes evicted state
-    through the outer join).
+    appended to the single replay file — :func:`pipeline.replay_to_memory`
+    documents why each piece is load-bearing (per-input watermark
+    advance, real-events-first ordering, the trailing no-data batch
+    that flushes evicted state through the outer join).
 
     Scale shape: identical to the inner variant — state keyed by
     user_id, bounded by (watermark delay x arrival rate), priced with
     rows-in-state at 1M/10M events in BENCH_SCALE's ss_join arm
     (BENCH_NOTES §r13-ssjoin-rungs).
     """
-    from stream_processing_test_spark.streaming.pipeline import (
-        sentinel_replay,
-    )
-
-    scoped = spark.newSession()
-    replay_dir = sentinel_replay(
-        scoped,
+    return replay_to_memory(
+        spark,
         sf_dir,
-        [(-1, "click"), (-2, "purchase")],
-        "ssouter_replay_",
+        lambda _, events: click_purchase_pairs(events, "left_outer"),
+        "append",
+        sentinels=[(-1, "click"), (-2, "purchase")],
     )
-
-    clicks = (
-        events_stream(scoped, replay_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(scoped, replay_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")
-        )
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_outer",
-    ).select("purchase_id", "click_id", "user_id")
-    name = f"ss_outer_{abs(hash(sf_dir)) % 10_000}"
-    out = run_to_memory(joined, name, output_mode="append")
-    return out.filter(F.col("user_id") >= 0)

@@ -33,6 +33,9 @@ group key hash exactly like the batch shuffle.
 from __future__ import annotations
 
 import os
+import tempfile
+from collections.abc import Callable, Sequence
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +44,12 @@ from pyspark.sql import types as T
 from stream_processing_test_spark.functions.scalars import availability_score
 from stream_processing_test_spark.operators.rollup import SCORES_ORACLE
 from stream_processing_test_spark.registry import register
+from stream_processing_test_spark.tables import load, normalize_event_ts
+
+# Shuffle (hence state-store) partitions of every replayed query; see
+# replay_to_memory for why it is a conf and why it is small.
+STATE_PARTITIONS = 8
+
 
 # Schema of the driver's events table; ``ts`` takes whichever dtype
 # the file materializes (see tables.normalize_event_ts) —
@@ -65,18 +74,13 @@ def events_stream(
 ) -> DataFrame:
     """T1: file-source event stream with the events schema.
 
-    ``path`` may be a single parquet file or a directory accumulating
-    event files (the production shape: the probe connector appends
-    one file per micro-batch). Spark's file stream source requires a
-    directory; a bare file is wrapped via a symlink in a temp dir."""
+    ``path`` is a directory (or a glob of directories) accumulating
+    event files — the production shape: the probe connector appends
+    one file per micro-batch. Spark's file stream source rejects a
+    bare file; :func:`replay_to_memory` replays one through a
+    directory."""
     # TIMESTAMP(NANOS) files read as long nanos (tables.load's reason)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(path):
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(os.path.abspath(path), os.path.join(d, os.path.basename(path)))
-        path = d
     # A file stream must declare its schema up front; probe the footer
     # with a (cheap, metadata-only) batch read so the declared ts dtype
     # matches how the file materializes (long for TIMESTAMP(NANOS),
@@ -88,71 +92,93 @@ def events_stream(
     reader = spark.readStream.schema(_events_raw_schema(ts_type)).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(path)
-    from stream_processing_test_spark.tables import normalize_event_ts
-
-    return normalize_event_ts(df)
+    return normalize_event_ts(reader.load(path))
 
 
-def sentinel_replay(
-    scoped: SparkSession,
+def replay_to_memory(
+    spark: SparkSession,
     sf_dir: str,
-    sentinels: list[tuple[int, str]],
-    prefix: str,
-) -> str:
-    """Write the events table plus far-future sentinel rows as ONE
-    parquet file and return its directory — the shared finite-replay
-    mechanic behind ``streaming_session_windows`` and
-    ``streaming_click_purchase_outer`` (extracted r14, VERDICT r13
-    item 7, so the watermark mechanics can't be re-derived subtly
-    wrong per query).
+    build: Callable[[SparkSession, Callable[[], DataFrame]], DataFrame],
+    output_mode: str = "complete",
+    sentinels: Sequence[tuple[int, str]] = (),
+) -> DataFrame:
+    """Replay ``<sf_dir>/events.parquet`` as a file stream, run the
+    streaming query ``build(scoped, events)`` returns over all of it
+    (Trigger.AvailableNow) into a memory sink, and return the final
+    table as a batch DataFrame — the harness of every registered
+    replay query. ``scoped`` is the session to build on; each
+    ``events()`` call opens one more event stream over the replay (a
+    stream-stream join opens one per side). Complete mode = the
+    reference's T3 full-recompute semantics, emitted incrementally.
 
-    Why each piece matters:
+    Session: ``scoped`` is a clone of ``spark`` (same SparkContext and
+    executors, its own SQLConf and catalog), so the memory-sink view
+    and the conf set here never reach the caller or queries running
+    beside it, and nothing needs restoring. Its shuffle partitions are
+    STATE_PARTITIONS: a stateful plan pins that count for the
+    checkpoint's lifetime, and each partition carries state-store and
+    task overhead every micro-batch — for ``applyInPandasWithState`` a
+    Python worker spawn (32 -> 8 measured 4x faster at sf0.01) — so a
+    count sized for relational shuffles wastes fixed cost when keys
+    are few. It has to be the conf: a stateful operator requires
+    HashPartitioning(key, shuffle partitions), so an upstream
+    repartition would only get a second exchange added back. A
+    large-keyspace deployment sizes it to the cluster instead.
+
+    Replay: the stream reads a TemporaryDirectory (the file stream
+    source rejects a bare file), removed once the stream has stopped —
+    the memory sink holds the result. Without ``sentinels`` it holds a
+    symlink to the events file. With them it holds ONE parquet file of
+    the events plus one far-future row (ts 2100-01-01, user_id = -1)
+    per ``(event_id, event_type)`` in ``sentinels``, and rows with
+    ``user_id < 0`` are dropped from the result. Why each piece
+    matters:
     - a finite stream's watermark stops at the LAST REAL EVENT, which
       would hold the final windows/unmatched state open forever; the
-      sentinels (ts 2100-01-01, user_id = -1 — callers filter
-      ``user_id >= 0``) are the 'later traffic' that closes them;
-    - ``sentinels`` is one ``(event_id, event_type)`` row per INPUT
-      the caller carves out of the replay (e.g. one 'click' + one
-      'purchase' for a two-sided join): a filtered input whose
-      event_type never includes a sentinel would keep ITS watermark —
-      and the query's global minimum — pinned at the last real event;
+      sentinels are the 'later traffic' that closes them;
+    - one sentinel per INPUT the query carves out of the replay (e.g.
+      one 'click' + one 'purchase' for a two-sided join): a filtered
+      input whose event_type never includes a sentinel would keep ITS
+      watermark — and the query's global minimum — pinned at the last
+      real event;
     - the single coalesced file means the first micro-batch contains
       every real event AND the sentinels together, so the watermark
       only advances AFTER all real events are in state (a
       sentinel-first file order would mark the real events late and
       drop them), and Spark's trailing no-data batch then flushes the
       evicted state through the operator."""
-    import tempfile
-    from datetime import datetime
-
-    from stream_processing_test_spark.tables import load
-
-    ev_batch = load(scoped, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    sent = scoped.createDataFrame(
-        [
-            (eid, datetime(2100, 1, 1), -1, etype, 0.0, "{}")
-            for eid, etype in sentinels
-        ],
-        schema,
-    )
-    replay_dir = tempfile.mkdtemp(prefix=prefix)
-    ev_batch.unionByName(sent).coalesce(1).write.mode("overwrite").parquet(
-        replay_dir
-    )
-    return replay_dir
+    scoped = spark.newSession()
+    scoped.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    with tempfile.TemporaryDirectory(prefix="events_replay_") as tmp:
+        replay_dir = os.path.join(tmp, "events")
+        if sentinels:
+            sent = scoped.createDataFrame(
+                [
+                    (eid, datetime(2100, 1, 1), -1, etype, 0.0, "{}")
+                    for eid, etype in sentinels
+                ],
+                _events_raw_schema(T.TimestampType()),
+            )
+            load(scoped, sf_dir, "events").select(*sent.columns).unionByName(
+                sent
+            ).coalesce(1).write.parquet(replay_dir)
+        else:
+            os.mkdir(replay_dir)
+            os.symlink(
+                os.path.abspath(os.path.join(sf_dir, "events.parquet")),
+                os.path.join(replay_dir, "events.parquet"),
+            )
+        result = build(scoped, lambda: events_stream(scoped, replay_dir))
+        (
+            result.writeStream.format("memory")
+            .queryName("replay")
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    out = scoped.table("replay")
+    return out.filter(F.col("user_id") >= 0) if sentinels else out
 
 
 def daily_rollup(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
@@ -178,48 +204,6 @@ def daily_rollup(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
     )
 
 
-def run_to_memory(
-    result: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Execute a streaming aggregation over all currently-available
-    input (Trigger.AvailableNow) into a memory sink; return the final
-    table as a batch DataFrame. Complete mode = the reference's T3
-    full-recompute semantics, emitted incrementally by Spark.
-
-    ``state_partitions`` bounds the stateful operator's partition
-    count for the run (stateful plans pin it for the checkpoint's
-    lifetime; each partition carries state-store + task overhead every
-    micro-batch, so a count sized for relational shuffles wastes
-    fixed cost when keys are few). None keeps the session setting —
-    what a large-keyspace deployment would do.
-
-    The override set/restore mutates the conf of the SESSION THAT
-    BUILT ``result`` (a stream is bound to its session, so it cannot
-    be re-scoped here): callers that may run concurrently with other
-    queries should build the stream on a cloned session
-    (``spark.newSession()``) as ``streaming_daily_scores`` and the
-    streak query do — the override is then invisible outside."""
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
-
-
 # The streaming rollup is oracle-checked with the SAME SQL as the batch
 # daily_scores — stream/batch parity is the correctness claim (T2/T3).
 @register(
@@ -230,15 +214,10 @@ def run_to_memory(
 def streaming_daily_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming daily availability scores: the events parquet replayed
     through a file-source stream, windowed-aggregated, and proven equal
-    to the batch query by the shared DuckDB oracle.
-
-    Built on a CLONED session (same SparkContext, separate SQLConf) so
-    run_to_memory's state-partition override never leaks to queries
-    running concurrently on the caller's session."""
-    scoped = spark.newSession()
-    ev = events_stream(scoped, os.path.join(sf_dir, "events.parquet"))
-    name = f"stream_scores_{abs(hash(sf_dir)) % 10_000}"
-    return run_to_memory(daily_rollup(ev), name)
+    to the batch query by the shared DuckDB oracle."""
+    return replay_to_memory(
+        spark, sf_dir, lambda _, events: daily_rollup(events())
+    )
 
 
 def final_update_state(raw: DataFrame) -> DataFrame:
@@ -289,11 +268,11 @@ def streaming_daily_scores_update(spark: SparkSession, sf_dir: str) -> DataFrame
     (the multi-batch path, where updates genuinely supersede each
     other and :func:`final_update_state` does real work, is pinned by
     test_streaming.test_update_mode_multi_batch_converges)."""
-    scoped = spark.newSession()
-    ev = events_stream(scoped, os.path.join(sf_dir, "events.parquet"))
-    name = f"stream_scores_upd_{abs(hash(sf_dir)) % 10_000}"
-    raw = run_to_memory(
-        daily_rollup(ev, watermark="1 day"), name, output_mode="update"
+    raw = replay_to_memory(
+        spark,
+        sf_dir,
+        lambda _, events: daily_rollup(events(), watermark="1 day"),
+        "update",
     )
     return final_update_state(raw)
 
@@ -417,9 +396,7 @@ def streaming_rate_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     not ingest)."""
     import time as _time
 
-    # newSession(): isolated SQLConf, so the state-partition setting
-    # needs no save/restore — it dies with the scoped session
-    scoped = spark.newSession()
+    scoped = spark.newSession()  # own SQLConf, as in replay_to_memory
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     name = "rate_rollup_drv"
     ev = rate_events_stream(
@@ -543,36 +520,33 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever. The replay therefore appends ONE far-future sentinel
     event (user_id = -1, excluded from results): exactly the
     production situation, where later traffic is what closes sessions.
-    The replay-file mechanics live in :func:`sentinel_replay` (shared
-    with the outer stream-stream join).
+    The replay-file mechanics are :func:`replay_to_memory`'s.
     """
-    scoped = spark.newSession()
-    replay_dir = sentinel_replay(
-        scoped, sf_dir, [(-1, "sentinel")], "sess_replay_"
-    )
 
-    ev = events_stream(scoped, replay_dir)
-    sessions = (
-        ev.withWatermark("ts", "0 seconds")
-        .groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("sw")
+    def sessions(_, events):
+        return (
+            events()
+            .withWatermark("ts", "0 seconds")
+            .groupBy(
+                "user_id", F.session_window("ts", "30 minutes").alias("sw")
+            )
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .select(
+                "user_id",
+                F.date_format(
+                    F.col("sw.start"), "yyyy-MM-dd HH:mm:ss"
+                ).alias("session_start"),
+                "n_events",
+                "total_value",
+            )
         )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format(F.col("sw.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            "n_events",
-            "total_value",
-        )
+
+    return replay_to_memory(
+        spark, sf_dir, sessions, "append", sentinels=[(-1, "sentinel")]
     )
-    name = f"stream_sessions_{abs(hash(sf_dir)) % 10_000}"
-    out = run_to_memory(sessions, name, output_mode="append")
-    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -666,13 +640,10 @@ def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the keyed state update — state rows = windows × types, and
     shuffle volume is 3× events. At 100 TB the slide/size ratio is the
     operator's cost dial (the reference's daily tumbling is the 1×
-    special case); watermarking bounds state to the open-window set.
-    Like the other replay queries it runs on a CLONED session so
-    run_to_memory's state-partition override cannot leak."""
-    scoped = spark.newSession()
-    ev = events_stream(scoped, os.path.join(sf_dir, "events.parquet"))
-    name = f"stream_sliding_{abs(hash(sf_dir)) % 10_000}"
-    return run_to_memory(sliding_rollup(ev), name)
+    special case); watermarking bounds state to the open-window set."""
+    return replay_to_memory(
+        spark, sf_dir, lambda _, events: sliding_rollup(events())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -749,12 +720,11 @@ def streaming_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (facts arrive as a stream; the entity dimension is a slowly
     changing table read per micro-batch). Events replayed through the
     file-source stream; equality with the batch join+agg is proven by
-    the shared DuckDB oracle. Cloned session for the state-partition
-    override, like every streaming query here."""
-    from stream_processing_test_spark.tables import load
-
-    scoped = spark.newSession()
-    ev = events_stream(scoped, os.path.join(sf_dir, "events.parquet"))
-    customer = load(scoped, sf_dir, "customer")
-    name = f"stream_enriched_{abs(hash(sf_dir)) % 10_000}"
-    return run_to_memory(enriched_rollup(ev, customer), name)
+    the shared DuckDB oracle."""
+    return replay_to_memory(
+        spark,
+        sf_dir,
+        lambda scoped, events: enriched_rollup(
+            events(), load(scoped, sf_dir, "customer")
+        ),
+    )

@@ -26,7 +26,6 @@ Kafka per-partition order; the tests feed ordered file chunks).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stream_processing_test_spark.registry import register
+from stream_processing_test_spark.streaming.pipeline import replay_to_memory
 
 MIN_STREAK = 3
 
@@ -164,31 +164,6 @@ def streaming_failure_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streak detection run over the events file replayed as
     a stream (availableNow), oracle-checked against the SQL islands
     formulation — custom stateful operator + batch parity in one."""
-    from stream_processing_test_spark.streaming.pipeline import events_stream
-
-    # Each state partition spawns a Python worker per micro-batch; with
-    # O(thousands) of keys the spawn cost dominates (32 -> 8 partitions
-    # measured 4x faster at sf0.01). A real deployment sizes this to
-    # keys/executor-memory, not to the relational shuffle width.
-    #
-    # The stateful operator REQUIRES HashPartitioning(key, shuffle
-    # partitions) — a manual repartition(8) upstream would just get a
-    # second exchange added back — so the knob must be the conf itself.
-    # It is scoped to a CLONED session (same SparkContext/executors,
-    # separate SQLConf): concurrent queries on the parent session never
-    # observe the override, and there is nothing to restore on exit.
-    scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    ev = events_stream(scoped, os.path.join(sf_dir, "events.parquet"))
-    name = f"streaks_{abs(hash(sf_dir)) % 10_000}"
-    q = (
-        failure_streaks(ev)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return replay_to_memory(
+        spark, sf_dir, lambda _, events: failure_streaks(events()), "append"
     )
-    q.awaitTermination()
-    # the memory-sink view lives in the scoped session's catalog
-    return scoped.table(name)

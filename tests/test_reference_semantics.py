@@ -22,7 +22,6 @@ from stream_processing_test_spark.functions.scalars import (
     crosses_next_utc_midnight_col,
     first_real_resolution,
     parse_bitrate_kbps,
-    truncate_message,
 )
 from stream_processing_test_spark.schemas import (
     RESOLUTION_CUSTOM,
@@ -89,20 +88,6 @@ def test_parse_bitrate(spark):
     )
     out = [r["k"] for r in df.select(parse_bitrate_kbps(F.col("b")).alias("k")).collect()]
     assert out == [1234, None, None, 900, None]
-
-
-# ---------------------------------------------------------------------------
-# F11 — webhook 18 000-char truncation (HttpServer.cpp:126-129)
-# ---------------------------------------------------------------------------
-
-
-def test_truncate_message(spark):
-    long = "a" * 18001
-    short = "b" * 18000
-    df = _df(spark, {"m": [long, short]}, "m STRING")
-    out = [r["t"] for r in df.select(truncate_message(F.col("m")).alias("t")).collect()]
-    assert len(out[0]) == 17901 and out[0].endswith("…")
-    assert out[1] == short  # exactly at the limit -> untouched
 
 
 # ---------------------------------------------------------------------------

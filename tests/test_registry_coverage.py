@@ -41,7 +41,7 @@ TEST_SURFACE_OPS = {
     "S9": "tests/test_sinks (markdown formatter)",
     "S10": "tests/test_sinks (batched report emitter)",
     "S11": "tests/test_sources (JSON event envelope)",
-    "F11": "tests/test_sinks + test_reference_semantics (18k truncation)",
+    "F11": "tests/test_sinks (18k truncation)",
     "T7": "tests/test_sources (cancellation/timeouts)",
     "T8": "tests/test_streaming (finalize_to_dimension)",
 }

@@ -17,7 +17,7 @@ from stream_processing_test_spark.streaming.pipeline import (
     daily_rollup,
     events_stream,
     finalize_to_dimension,
-    run_to_memory,
+    replay_to_memory,
 )
 from tests.conftest import SF_SMALL
 
@@ -28,9 +28,8 @@ def test_stream_batch_parity(spark):
     Streaming is an incrementally-executed batch query."""
     from stream_processing_test_spark.operators.rollup import daily_scores
 
-    stream_result = run_to_memory(
-        daily_rollup(events_stream(spark, f"{SF_SMALL}/events.parquet")),
-        "parity_stream",
+    stream_result = replay_to_memory(
+        spark, SF_SMALL, lambda _, events: daily_rollup(events())
     )
     batch_result = daily_scores(spark, SF_SMALL)
     got = sorted(map(tuple, stream_result.collect()))
@@ -48,11 +47,12 @@ def test_incremental_micro_batches_converge(spark, tmp_path):
     parts = ev.randomSplit([1.0, 1.0, 1.0], seed=7)
     for i, p in enumerate(parts):
         p.coalesce(1).write.parquet(str(src / f"chunk{i}"))
-    stream_result = run_to_memory(
-        daily_rollup(
-            events_stream(spark, f"{src}/chunk*/", max_files_per_trigger=1)
+    stream_result = replay_to_memory(
+        spark,
+        SF_SMALL,
+        lambda scoped, _: daily_rollup(
+            events_stream(scoped, f"{src}/chunk*/", max_files_per_trigger=1)
         ),
-        "incremental_stream",
     )
     from stream_processing_test_spark.operators.rollup import daily_scores
 
@@ -75,10 +75,7 @@ def test_update_mode_multi_batch_converges(spark, tmp_path):
 
     from stream_processing_test_spark.operators.rollup import daily_scores
     from stream_processing_test_spark.streaming.pipeline import (
-        daily_rollup,
-        events_stream,
         final_update_state,
-        run_to_memory,
     )
 
     src = tmp_path / "events_ordered"
@@ -99,13 +96,14 @@ def test_update_mode_multi_batch_converges(spark, tmp_path):
             .coalesce(1)
             .write.parquet(str(src / f"chunk{i}"))
         )
-    raw = run_to_memory(
-        daily_rollup(
-            events_stream(spark, f"{src}/chunk*/", max_files_per_trigger=1),
+    raw = replay_to_memory(
+        spark,
+        SF_SMALL,
+        lambda scoped, _: daily_rollup(
+            events_stream(scoped, f"{src}/chunk*/", max_files_per_trigger=1),
             watermark="1 day",
         ),
-        "update_multi_batch",
-        output_mode="update",
+        "update",
     )
     assert raw.count() > raw.select("user_id", "day").distinct().count(), (
         "expected a multi-update history, got one row per key — the "
@@ -114,6 +112,37 @@ def test_update_mode_multi_batch_converges(spark, tmp_path):
     got = sorted(map(tuple, final_update_state(raw).collect()))
     want = sorted(map(tuple, daily_scores(spark, SF_SMALL).collect()))
     assert got == want
+
+
+def test_replays_leave_no_tempdir_and_no_caller_state(spark, tmp_path, monkeypatch):
+    """Each registered replay runs on a cloned session over a replay
+    dir it removes once the stream stops: nothing is left under the
+    tempdir, and the caller's conf, catalog and active streams are as
+    they were."""
+    import tempfile
+
+    from stream_processing_test_spark.registry import all_queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    queries = all_queries()
+    for name in (
+        "streaming_daily_scores",
+        "streaming_session_windows",
+        "streaming_click_purchase_outer",
+    ):
+        assert queries[name].fn(spark, SF_SMALL).collect(), name
+    assert list(tmp_path.iterdir()) == []
+
+    # a caller whose shuffle width differs from the replays' own
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    views = {t.name for t in caller.catalog.listTables()}
+    for name in ("streaming_click_purchase_join", "streaming_dedup"):
+        assert queries[name].fn(caller, SF_SMALL).collect(), name
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert {t.name for t in caller.catalog.listTables()} == views
+    assert caller.streams.active == []
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_stream_static_dim_update_semantics(spark, tmp_path):
@@ -213,6 +242,10 @@ def test_finalize_to_dimension_upserts_scores(spark, tmp_path):
     upsert into the source-dimension parquet, idempotent on re-run."""
     dim_path = str(tmp_path / "dim")
     ckpt = str(tmp_path / "ckpt")
+    # the file stream source reads directories, not a bare file
+    src = tmp_path / "events"
+    src.mkdir()
+    (src / "events.parquet").symlink_to(f"{SF_SMALL}/events.parquet")
     user_ids = [
         r["user_id"]
         for r in spark.read.parquet(f"{SF_SMALL}/events.parquet")
@@ -237,9 +270,7 @@ def test_finalize_to_dimension_upserts_scores(spark, tmp_path):
         )
     ).write.parquet(dim_path)
 
-    finalize_to_dimension(
-        spark, f"{SF_SMALL}/events.parquet", dim_path, ckpt
-    )
+    finalize_to_dimension(spark, str(src), dim_path, ckpt)
     dim = spark.read.parquet(dim_path)
     scored = dim.filter(F.col("flow_score").isNotNull())
     assert scored.count() > 0
@@ -265,9 +296,7 @@ def test_finalize_to_dimension_upserts_scores(spark, tmp_path):
     # over the same input leaves the dimension unchanged
     before = sorted(map(tuple, spark.read.parquet(dim_path).collect()))
     shutil.rmtree(ckpt)
-    finalize_to_dimension(
-        spark, f"{SF_SMALL}/events.parquet", dim_path, ckpt
-    )
+    finalize_to_dimension(spark, str(src), dim_path, ckpt)
     after = sorted(map(tuple, spark.read.parquet(dim_path).collect()))
     assert before == after
 

@@ -27,11 +27,11 @@ PYTEST_PINNED_OPS = {
     "tests/test_sinks.py + tests/test_jdbc.py (merge semantics, "
     "idempotence, JDBC twin)",
     "S8": "webhook sink (truncate/batch/pace) — sinks/reports.py; "
-    "tests/test_sinks.py (mock sink, batching, pacing)",
+    "tests/test_sinks.py (mock sink, batching; pacing untested)",
     "S9": "markdown table formatter — sinks/reports.py; "
     "tests/test_sinks.py (golden format)",
-    "F11": "18 000-char truncation — functions/scalars.py + "
-    "sinks/reports.py; tests/test_sinks.py (boundary-exact, "
+    "F11": "18 000-char truncation — sinks/reports.py; "
+    "tests/test_sinks.py (boundary-exact, "
     "HttpServer.cpp:126-129 parity)",
     "T7": "cancellation / timeout — sources/probe.py; "
     "tests/test_sources.py (stop-flag, watchdog, TERM→KILL escalation)",

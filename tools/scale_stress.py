@@ -1668,12 +1668,16 @@ def streaming_run(spark, tdir: str, which: str, repeats: int) -> dict:
 
     Records min-of-``repeats`` wall, the derived sustained events/s,
     and the final-progress state-store numbers (rows + bytes) — the
-    state-growth story the batch ladders can't see. Same 8
-    state-partition setting as the registered queries (scoped to a
+    state-growth story the batch ladders can't see. Same
+    STATE_PARTITIONS setting as the registered queries (scoped to a
     cloned session)."""
     from pyspark.sql import functions as F
 
+    from stream_processing_test_spark.streaming.joins import (
+        click_purchase_pairs,
+    )
     from stream_processing_test_spark.streaming.pipeline import (
+        STATE_PARTITIONS,
         daily_rollup,
         events_stream,
         sliding_rollup,
@@ -1691,10 +1695,14 @@ def streaming_run(spark, tdir: str, which: str, repeats: int) -> dict:
     samples: list[float] = []
     for i in range(repeats):
         scoped = spark.newSession()
-        scoped.conf.set("spark.sql.shuffle.partitions", "8")
-        ev = events_stream(
-            scoped, path, max_files_per_trigger=max(1, n_files // 4)
-        )
+        scoped.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+
+        def stream(scoped=scoped):
+            return events_stream(
+                scoped, path, max_files_per_trigger=max(1, n_files // 4)
+            )
+
+        ev = stream()
         if n_events is None:
             n_events = scoped.read.parquet(path).count()
             out["n_events"] = n_events
@@ -1734,38 +1742,8 @@ def streaming_run(spark, tdir: str, which: str, repeats: int) -> dict:
             # direct eviction-timing evidence, and unmatched LEFT rows
             # held to the eviction horizon can exceed the inner arm's
             # state — the rung records both.
-            ev2 = events_stream(
-                scoped, path, max_files_per_trigger=max(1, n_files // 4)
-            )
-            clicks = (
-                ev.filter(F.col("event_type") == "click")
-                .select(
-                    F.col("event_id").alias("click_id"),
-                    F.col("user_id").alias("c_user_id"),
-                    F.col("ts").alias("click_ts"),
-                )
-                .withWatermark("click_ts", "2 hours")
-            )
-            purchases = (
-                ev2.filter(F.col("event_type") == "purchase")
-                .select(
-                    F.col("event_id").alias("purchase_id"),
-                    "user_id",
-                    F.col("ts").alias("purchase_ts"),
-                )
-                .withWatermark("purchase_ts", "2 hours")
-            )
             join_type = "inner" if which == "ss_join" else "left_outer"
-            result = purchases.join(
-                clicks,
-                (F.col("user_id") == F.col("c_user_id"))
-                & (
-                    F.col("click_ts")
-                    >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")
-                )
-                & (F.col("click_ts") <= F.col("purchase_ts")),
-                join_type,
-            ).select("purchase_id", "click_id", "user_id")
+            result = click_purchase_pairs(stream, join_type)
             mode = "append"
             if which == "ss_join_outer":
                 # foreachBatch so the null-padded (unmatched-purchase)
