@@ -20,8 +20,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from stream_processing_test_spark import profile
 from stream_processing_test_spark.registry import all_queries
-from stream_processing_test_spark.session import get_spark, release_pinned_rdds
+from stream_processing_test_spark.session import get_spark
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -301,57 +302,6 @@ def _drift_report(
     }
 
 
-def _task_time_ms_for_stages(spark, stage_ids) -> int | None:
-    """Sum of executorRunTime (ms, max over attempts) for the given
-    stage ids, from the driver's AppStatusStore — the executor-side
-    cost ledger the UI's Stages tab reads. Used to attribute per-query
-    EXECUTOR TASK TIME alongside wall: at sf0.1 wall is dominated by
-    fixed driver costs (plan build, barriers), so an 8-vs-32-core wall
-    ratio is ~1 and reads as 'cpus ignored' (PERF r16 flagged exactly
-    that, a false positive — VERDICT r16 item 4/next-2). Task time is
-    what actually scales with cores. Best-effort: any reflection
-    failure returns None and the bench emits wall only."""
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm = sc._jvm
-        empty_statuses = jvm.java.util.Collections.emptyList()
-        empty_quantiles = sc._gateway.new_array(jvm.double, 0)
-        total = 0
-        for sid in stage_ids:
-            # Seq[v1.StageData], one entry per attempt; max is the
-            # attempt that actually completed the work
-            seq = store.stageData(
-                sid, False, empty_statuses, False, empty_quantiles
-            )
-            it = seq.iterator()
-            best = 0
-            while it.hasNext():
-                rt = it.next().executorRunTime()
-                if rt > best:
-                    best = rt
-            total += best
-        return total
-    except Exception:
-        return None
-
-
-def _group_stage_ids(spark, group: str) -> set[int]:
-    """All stage ids of the jobs submitted under ``group`` (the bench
-    wraps each timed query in its own job group, so AQE's extra jobs
-    are included and other queries' stages excluded)."""
-    try:
-        tracker = spark.sparkContext.statusTracker()
-        ids: set[int] = set()
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info is not None:
-                ids.update(info.stageIds)
-        return ids
-    except Exception:
-        return set()
-
-
 def _calibration_probe(spark) -> float:
     """Fixed-cost, data-independent CPU probe: a codegen'd xxhash64
     fold over a literal range — no I/O, no shuffle, no cache effects.
@@ -395,52 +345,44 @@ def main() -> None:
     # per-round probes the normalization mean is run-weighted and any
     # mid-run window shows up in the cal list itself.
     cals = [_calibration_probe(spark)]
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    # one profile record per successful repeat (profile.run: wall,
+    # plan build vs execution, jobs, executor task time)
+    runs: dict[str, list[dict]] = {name: [] for name in HEADLINE}
     # Per-query failure boundary (ADVICE r11): a data-dependent raise
     # in one operator (e.g. the k-means zero-centroid fail-loud path)
     # must not abort the other 60+ slots' measurements — the error is
     # RECORDED in the artifact (never swallowed silently) and the run
     # continues.
     errors: dict[str, str] = {}
-    # executor task time per query per repeat (ms of executorRunTime
-    # summed over the query's own job-group stages) — additive
-    # instrumentation; the TIMED quantity is unchanged (wall around the
-    # same noop write). See VERDICT r16 next-round item 2: per-query
-    # task time lets a low-core comparison measure executor-side
-    # scaling where the sf0.1 wall is driver-bound.
-    task_samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for rep in range(repeats):
         for name in HEADLINE:
             fn = specs[name].fn
-            spark.catalog.clearCache()  # each query pays for (only) its own caches
-            release_pinned_rdds(spark)  # incl. checkpoint pins (kmeans assignments)
-            group = f"bench:{name}:{rep}"
-            spark.sparkContext.setJobGroup(group, name)
-            t0 = time.time()
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                _, rec = profile.run(
+                    spark, lambda: fn(spark, sf_dir), f"bench:{name}:{rep}"
+                )
             except Exception as exc:  # noqa: BLE001 — recorded, not hidden
                 errors[name] = repr(exc)[:300]
                 continue
-            finally:
-                spark.sparkContext.setJobGroup(f"bench:after:{name}", "")
-            samples[name].append(round(time.time() - t0, 3))
-            stage_ids = _group_stage_ids(spark, group)
-            if stage_ids:
-                task_ms = _task_time_ms_for_stages(spark, stage_ids)
-                if task_ms is not None:
-                    task_samples[name].append(round(task_ms / 1000.0, 3))
+            runs[name].append(rec)
         cals.append(_calibration_probe(spark))
     cal_start, cal_end = cals[0], cals[-1]
 
-    timings = {name: min(ts) for name, ts in samples.items() if ts}
-    # executor-side cost per query: min over repeats (same estimator as
-    # wall — least-interfered sample). Streaming queries run their
-    # micro-batch jobs on the stream-execution thread, OUTSIDE the
-    # bench's job group, so their value covers foreground stages only.
-    task_sec = {
-        name: min(ts) for name, ts in task_samples.items() if ts
-    }
+    def per_repeat(key: str) -> dict[str, list]:
+        return {
+            name: [round(r[key], 3) for r in recs if r[key] is not None]
+            for name, recs in runs.items()
+        }
+
+    def min_over_repeats(per_query: dict[str, list]) -> dict:
+        # min over repeats: the least-interfered sample, and for build
+        # jobs it leaves out the one-off job of a table's first read
+        return {name: min(vs) for name, vs in per_query.items() if vs}
+
+    samples = per_repeat("wall_s")
+    task_samples = per_repeat("task_s")
+    timings = min_over_repeats(samples)
+    task_sec = min_over_repeats(task_samples)
     # per-query [min, median, max]: throttle noise shows up as a
     # median/max far above min, visible in the artifact itself
     spread = {
@@ -488,6 +430,11 @@ def main() -> None:
         # driver-bound sf0.1 wall (VERDICT r16 item 2)
         "queries_task_sec": task_sec,
         "task_samples": task_samples,
+        # per-query driver-side plan-build seconds and the jobs that ran
+        # inside the build (> 0: the query materializes while building,
+        # so its build seconds include that execution), min over repeats
+        "queries_build_sec": min_over_repeats(per_repeat("build_s")),
+        "queries_build_jobs": min_over_repeats(per_repeat("build_jobs")),
         # host-throttle drift probe: same fixed-cost job at run start
         # and end; end/start >> 1 means the host slowed during the run
         "calibration": {

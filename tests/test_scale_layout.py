@@ -530,9 +530,9 @@ def test_connected_components_one_job_per_round(spark):
     diff form) serializes rounds on the driver at scale. AQE and
     broadcast are disabled so query-internal helper jobs (broadcast
     builds, AQE stage materialization) don't blur the count."""
+    from stream_processing_test_spark import profile
     from stream_processing_test_spark.llm.cluster import connected_components
 
-    sc = spark.sparkContext
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -545,10 +545,10 @@ def test_connected_components_one_job_per_round(spark):
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11)], "src LONG, dst LONG"
         )
-        sc.setJobGroup("cc_jobs", "connected_components job count")
-        labels = connected_components(edges)
-        sc.setJobGroup("cc_after", "")
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_jobs"))
+        labels, rec = profile.run(
+            spark, lambda: connected_components(edges), "cc_jobs"
+        )
+        n_jobs = rec["build_jobs"]
         assert n_jobs == 2, f"expected 2 two-hop round jobs (no setup job), got {n_jobs}"
         got = sorted((r["node"], r["component"]) for r in labels.collect())
         assert got == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]

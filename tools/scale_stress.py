@@ -57,6 +57,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from stream_processing_test_spark import profile  # noqa: E402
 from stream_processing_test_spark.session import release_pinned_rdds  # noqa: E402
 
 VOCAB_SIZE = 30_000
@@ -283,37 +284,39 @@ def multimodal_run(spark, tdir: str, repeats: int) -> dict:
 
     media = spark.read.parquet(os.path.join(tdir, "media_png.parquet"))
 
-    def timed(build_df, agg: bool = False) -> tuple[float, list]:
-        samples = []
-        for _ in range(repeats):
-            spark.catalog.clearCache()
-            release_pinned_rdds(spark)
-            t0 = time.time()
-            df = build_df()
-            if agg:
-                df.collect()
-            else:
-                df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 2))
+    def timed(build_df, label: str) -> tuple[float, list]:
+        samples = [
+            round(
+                profile.run(spark, build_df, f"{label}:{tdir}:{i}")[1]["wall_s"], 2
+            )
+            for i in range(repeats)
+        ]
         return min(samples), samples
 
     n_images, png_mb = media.count(), None
     bytes_total = media.agg(F.sum(F.length("payload"))).collect()[0][0]
     png_mb = round(bytes_total / 1e6, 1)
-    scan_wall, scan_samples = timed(
-        lambda: media.agg(
+    # the scan baseline is timed through collect(), not the noop sink
+    scan_samples = []
+    for _ in range(repeats):
+        spark.catalog.clearCache()
+        release_pinned_rdds(spark)
+        t0 = time.time()
+        media.agg(
             F.count("*").alias("n"),
             F.sum(F.length("payload")).alias("payload_bytes"),
-        ),
-        agg=True,
-    )
+        ).collect()
+        scan_samples.append(round(time.time() - t0, 2))
+    scan_wall = min(scan_samples)
     out["png_scan"] = {
         "wall_sec": scan_wall,
         "samples": scan_samples,
         "n_images": n_images,
         "payload_mb": png_mb,
     }
-    feat_wall, feat_samples = timed(lambda: extract_features(media))
+    feat_wall, feat_samples = timed(
+        lambda: extract_features(media), "png_features"
+    )
     decode_sec = _attributed_delta(feat_wall, scan_wall)
     out["png_features"] = {
         "wall_sec": feat_wall,
@@ -322,7 +325,9 @@ def multimodal_run(spark, tdir: str, repeats: int) -> dict:
         "decode_mb_per_s": round(png_mb / decode_sec, 1) if decode_sec else None,
         "images_per_s": round(n_images / decode_sec) if decode_sec else None,
     }
-    rz_wall, rz_samples = timed(lambda: resize_images(media, target=32))
+    rz_wall, rz_samples = timed(
+        lambda: resize_images(media, target=32), "png_resize"
+    )
     rz_sec = _attributed_delta(rz_wall, scan_wall)
     out["png_resize"] = {
         "wall_sec": rz_wall,
@@ -1104,18 +1109,16 @@ def vector_ivf_run(
         out["train_target"] = train_target
     samples: list[float] = []
     for i in range(repeats):
-        spark.catalog.clearCache()
-        release_pinned_rdds(spark)
-        t0 = time.time()
-        res = ivf_topk(emb, q, **kw)
         # r14 timed-region fix: the lazy result must be DRIVEN inside
         # the sample — previously only plan construction + the eager
         # trainer collects were timed and the probed search ran
         # untimed in the i==0 recall block, so recorded ivf walls
         # under-reported (BENCH_NOTES §r14-ladder); pre-fix rows are
         # not comparable
-        res.write.format("noop").mode("overwrite").save()
-        samples.append(round(time.time() - t0, 2))
+        res, rec = profile.run(
+            spark, lambda: ivf_topk(emb, q, **kw), f"ivf:{tdir}:{i}"
+        )
+        samples.append(round(rec["wall_s"], 2))
         if i == 0:
             out["rows"] = res.count()
             # exact top-k ground truth — the REGISTERED brute-force
@@ -1201,12 +1204,12 @@ def vector_appendadc_run(
     }
     samples: list[float] = []
     for i in range(repeats):
-        spark.catalog.clearCache()
-        release_pinned_rdds(spark)
-        t0 = time.time()
-        res = ivfpq_topk(base, q, rerank=rerank, large_batch=True)
-        res.write.format("noop").mode("overwrite").save()
-        samples.append(round(time.time() - t0, 2))
+        res, rec = profile.run(
+            spark,
+            lambda: ivfpq_topk(base, q, rerank=rerank, large_batch=True),
+            f"appendadc:{tdir}:{i}",
+        )
+        samples.append(round(rec["wall_s"], 2))
         if i == 0:
             got = {
                 (r["query_id"], r["neighbor_id"]) for r in res.collect()
@@ -1361,24 +1364,26 @@ def vector_ivfprobe_run(spark, tdir: str, repeats: int) -> dict:
     out: dict = {"n_lists": lists, "n_queries": N_QUERIES}
     for arm, n_probe in (("fixed", N_PROBE), ("auto", auto_probe(lists))):
         samples: list[float] = []
-        rec = None
+        recall = None
         for i in range(repeats):
-            spark.catalog.clearCache()
-            release_pinned_rdds(spark)
-            t0 = time.time()
-            res = ivf_topk(emb, q, n_lists=lists, n_probe=n_probe)
-            res.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 2))
+            res, rec = profile.run(
+                spark,
+                lambda: ivf_topk(emb, q, n_lists=lists, n_probe=n_probe),
+                f"ivfprobe:{arm}:{tdir}:{i}",
+            )
+            samples.append(round(rec["wall_s"], 2))
             if i == 0:
                 got = {
                     (r["query_id"], r["neighbor_id"]) for r in res.collect()
                 }
-                rec = round(len(exact_pairs & got) / max(len(exact_pairs), 1), 3)
+                recall = round(
+                    len(exact_pairs & got) / max(len(exact_pairs), 1), 3
+                )
             release_local_checkpoint(res)
         out[arm] = {
             "n_probe": n_probe,
             "fraction_searched": round(n_probe / lists, 4),
-            "recall_at_k": rec,
+            "recall_at_k": recall,
             "wall_sec": min(samples),
             "samples": samples,
         }
@@ -1537,15 +1542,11 @@ def vector_qbatch_run(
             .filter(F.col("rk") <= TOP_K)
         )
 
-    def timed(build) -> float:
-        walls = []
-        for _ in range(repeats):
-            spark.catalog.clearCache()
-            release_pinned_rdds(spark)
-            t0 = time.time()
-            build().write.format("noop").mode("overwrite").save()
-            walls.append(round(time.time() - t0, 2))
-        return min(walls)
+    def timed(build, label: str) -> float:
+        return min(
+            round(profile.run(spark, build, f"{label}:{tdir}:{i}")[1]["wall_s"], 2)
+            for i in range(repeats)
+        )
 
     for B in batches:
         q = emb.filter(F.col("vec_id") < B).select(
@@ -1554,7 +1555,7 @@ def vector_qbatch_run(
         pt: dict = {}
         if "brute" in arms:
             if n * B <= BRUTE_PAIR_CAP:
-                pt["brute"] = timed(lambda: brute_plan(q))
+                pt["brute"] = timed(lambda: brute_plan(q), f"brute:{B}")
             else:
                 pt["brute"] = None
                 pt["brute_skipped"] = (
@@ -1562,7 +1563,7 @@ def vector_qbatch_run(
                 )
         if "pq" in arms:
             if n * B <= PQ_GATHER_CAP:
-                pt["pq"] = timed(lambda: pq_topk(emb, q))
+                pt["pq"] = timed(lambda: pq_topk(emb, q), f"pq:{B}")
             else:
                 pt["pq"] = None
                 pt["pq_skipped"] = (
@@ -1570,14 +1571,15 @@ def vector_qbatch_run(
                 )
         if "ivf" in arms:
             pt["ivf"] = timed(
-                lambda: ivf_topk(emb, q, n_lists=auto_lists(n))
+                lambda: ivf_topk(emb, q, n_lists=auto_lists(n)), f"ivf:{B}"
             )
         if "ivfauto" in arms:
             from stream_processing_test_spark.llm.similarity import auto_probe
 
             L = auto_lists(n)
             pt["ivfauto"] = timed(
-                lambda: ivf_topk(emb, q, n_lists=L, n_probe=auto_probe(L))
+                lambda: ivf_topk(emb, q, n_lists=L, n_probe=auto_probe(L)),
+                f"ivfauto:{B}",
             )
         out["points"][str(B)] = pt
         print(f"[qbatch B={B}] {pt}", flush=True)
@@ -1874,13 +1876,11 @@ def time_query(spark, name: str, sf_dir: str, repeats: int) -> dict:
 
     fn = all_queries()[name].fn
     samples, rows = [], None
-    for _ in range(repeats):
-        spark.catalog.clearCache()
-        release_pinned_rdds(spark)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        samples.append(round(time.time() - t0, 2))
+    for i in range(repeats):
+        df, rec = profile.run(
+            spark, lambda: fn(spark, sf_dir), f"{name}:{sf_dir}:{i}"
+        )
+        samples.append(round(rec["wall_s"], 2))
         if rows is None:
             rows = df.count()
     return {"wall_sec": min(samples), "samples": samples, "rows": rows}

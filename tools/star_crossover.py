@@ -18,13 +18,13 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
+from stream_processing_test_spark import profile
 from stream_processing_test_spark.llm.cluster import connected_components
 from stream_processing_test_spark.session import get_spark
 
@@ -58,22 +58,32 @@ def main() -> int:
     repeats = 2  # interleaved rounds per diameter
     out = {"total_edges": total_edges, "by_diameter": {}}
     for d in diameters:
-        edges = chain_forest(spark, total_edges, d).localCheckpoint(eager=True)
+        # lazy over range(): profile.run releases pinned RDDs, so a
+        # checkpointed edge frame would not survive the first run
+        edges = chain_forest(spark, total_edges, d)
         samples: dict[str, list[float]] = {"minlabel": [], "star": []}
-        n = 0
-        for _ in range(repeats):  # interleaved A,B,A,B — throttle-fair
+        jobs: dict[str, list[int]] = {"minlabel": [], "star": []}
+        task_s: dict[str, list[float | None]] = {"minlabel": [], "star": []}
+        for rep in range(repeats):  # interleaved A,B,A,B — throttle-fair
             for algo in ("minlabel", "star"):
-                t0 = time.time()
-                labels = connected_components(
-                    edges, algorithm=algo, max_iter=max(200, d)
+                labels, rec = profile.run(
+                    spark,
+                    lambda: connected_components(
+                        edges, algorithm=algo, max_iter=max(200, d)
+                    ),
+                    f"star:{d}:{algo}:{rep}",
                 )
-                n = labels.count()
-                samples[algo].append(round(time.time() - t0, 3))
+                samples[algo].append(round(rec["wall_s"], 3))
+                # jobs = driver barriers, the cost a hop change moves
+                jobs[algo].append(rec["jobs"])
+                task_s[algo].append(rec["task_s"])
         row = {
             "minlabel": min(samples["minlabel"]),
             "star": min(samples["star"]),
-            "n_nodes": n,
+            "n_nodes": labels.count(),
             "samples": samples,
+            "jobs": jobs,
+            "task_s": task_s,
         }
         row["ratio_star_over_minlabel"] = round(
             row["star"] / row["minlabel"], 3
