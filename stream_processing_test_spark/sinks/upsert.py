@@ -72,13 +72,15 @@ def merge_upsert(
 
 
 def upsert_parquet(
-    spark: SparkSession,
+    target: DataFrame,
     updates: DataFrame,
     target_path: str,
     key: str,
     always_set: tuple[str, ...] = (),
 ) -> None:
     """Read-modify-overwrite upsert for a parquet target directory.
+    ``target`` is the caller's read of ``target_path``, so a caller that
+    also inspects the stored rows reads the directory once.
 
     Plain-parquet stand-in for MERGE INTO: the merged result is
     written distributed to a staging directory (so we never overwrite
@@ -96,11 +98,10 @@ def upsert_parquet(
     disappears."""
     import uuid
 
-    target = spark.read.parquet(target_path)
     merged = merge_upsert(target, updates, key, always_set)
     staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
     merged.write.mode("overwrite").parquet(staging)
-    swap_directory(spark, staging, target_path)
+    swap_directory(target.sparkSession, staging, target_path)
 
 
 def upsert_newest_day(scores: DataFrame, dim_path: str) -> None:
@@ -131,8 +132,8 @@ def upsert_newest_day(scores: DataFrame, dim_path: str) -> None:
         )
         .select("id", "s.*")
     )
-    spark = scores.sparkSession
-    target = spark.read.parquet(dim_path)
+    # one read serves the guard and the merge
+    target = scores.sparkSession.read.parquet(dim_path)
     if "day" in target.columns:
         current = target.select("id", F.col("day").alias("cur_day"))
         latest = (
@@ -158,7 +159,7 @@ def upsert_newest_day(scores: DataFrame, dim_path: str) -> None:
     # looked up at call time, so a wrapper installed on this module's
     # ``upsert_parquet`` sees every write
     upsert_parquet(
-        spark, latest, dim_path, "id", always_set=("flow_score", "day")
+        target, latest, dim_path, "id", always_set=("flow_score", "day")
     )
 
 

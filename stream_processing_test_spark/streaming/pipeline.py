@@ -460,25 +460,47 @@ def finalize_to_dimension(
     (window, source) rows — possibly SEVERAL windows per source — and
     ``sinks.upsert.upsert_newest_day`` writes the newest day per
     source, never older than the stored one. Re-emission of the same
-    rows is idempotent; checkpointing makes restarts exactly-once."""
+    rows is idempotent; checkpointing makes restarts exactly-once.
+
+    The caller's session conf is as it was on return, raised or not."""
     from stream_processing_test_spark.sinks.upsert import upsert_newest_day
 
-    ev = events_stream(spark, events_path, max_files_per_trigger)
-    scores = daily_rollup(ev, watermark).select(
-        F.col("user_id").cast("long").alias("id"),
-        "day",
-        "flow_score",
-        "n_detection",
-        "n_error",
-    )
-    q = (
-        scores.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda batch_df, _: upsert_newest_day(batch_df, dim_path))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    saved = {
+        k: spark.conf.get(k, None)
+        for k in (nodata, "spark.sql.legacy.parquet.nanosAsLong")
+    }
+    # No watermark-only batch after the data batch. In update mode it
+    # emits no rows, yet it would pay a state commit and a full upsert
+    # of the dimension; evicting the windows it closes moves to the next
+    # data batch. Set on the caller's session, not a newSession() clone:
+    # StreamingQueryListeners are per session, so a clone's query would
+    # be invisible to the caller's listeners. The checkpoint does not
+    # record this conf, so runs with and without it share checkpoints.
+    spark.conf.set(nodata, "false")
+    try:
+        ev = events_stream(spark, events_path, max_files_per_trigger)
+        scores = daily_rollup(ev, watermark).select(
+            F.col("user_id").cast("long").alias("id"),
+            "day",
+            "flow_score",
+            "n_detection",
+            "n_error",
+        )
+        q = (
+            scores.writeStream.outputMode("update")
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(lambda batch_df, _: upsert_newest_day(batch_df, dim_path))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _STREAM_SESSIONS_ORACLE = """

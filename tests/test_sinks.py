@@ -126,9 +126,13 @@ def test_upsert_parquet_idempotent(spark, tmp_path):
     updates = spark.createDataFrame(
         pd.DataFrame({"id": [2], "flow_score": [99]}), "id LONG, flow_score INT"
     )
-    upsert_parquet(spark, updates, path, "id", always_set=("flow_score",))
+    upsert_parquet(
+        spark.read.parquet(path), updates, path, "id", always_set=("flow_score",)
+    )
     first = sorted(map(tuple, spark.read.parquet(path).collect()))
-    upsert_parquet(spark, updates, path, "id", always_set=("flow_score",))
+    upsert_parquet(
+        spark.read.parquet(path), updates, path, "id", always_set=("flow_score",)
+    )
     second = sorted(map(tuple, spark.read.parquet(path).collect()))
     assert first == second  # T8: day-end finalization is idempotent
     got = {r["id"]: r["flow_score"] for r in spark.read.parquet(path).collect()}

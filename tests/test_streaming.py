@@ -8,8 +8,11 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# the benchmark's StreamingQueryListener (tracing.ProgressLog)
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
 
 from pyspark.sql import functions as F
 
@@ -20,6 +23,7 @@ from stream_processing_test_spark.streaming.pipeline import (
     replay_to_memory,
 )
 from tests.conftest import SF_SMALL
+from tracing import ProgressLog
 
 
 def test_stream_batch_parity(spark):
@@ -550,6 +554,127 @@ def test_finalize_warns_on_dayless_dimension(spark, tmp_path):
     assert any("no 'day' column" in str(w.message) for w in caught)
     dim = spark.read.parquet(dim_path)
     assert dim.filter(dim.flow_score.isNotNull()).count() > 0
+
+
+def _score_dim(spark, path, user_ids):
+    """An unscored source dimension over ``user_ids``."""
+    spark.createDataFrame(
+        pd.DataFrame({"id": sorted(user_ids), "day": [None] * len(user_ids)}),
+        "id LONG, day STRING",
+    ).selectExpr(
+        "id", "day", "CAST(NULL AS INT) AS flow_score",
+        "CAST(NULL AS LONG) AS n_detection", "CAST(NULL AS LONG) AS n_error",
+    ).write.parquet(path)
+
+
+_FINALIZE_CONFS = (
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
+def test_finalize_one_batch_one_upsert_per_round(spark, tmp_path, monkeypatch):
+    """A finalize over a newly landed chunk runs one micro-batch (no
+    watermark-only batch after it) and one dimension upsert, on the
+    caller's session (its listener sees the run), and leaves the
+    caller's conf as it was, after a normal call and a raising one."""
+    import stream_processing_test_spark.sinks.upsert as upsert_mod
+    from pyspark.errors import StreamingQueryException
+
+    upserts = []
+    real = upsert_mod.upsert_parquet
+
+    def counted(*args, **kwargs):
+        upserts.append(args[2])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(upsert_mod, "upsert_parquet", counted)
+    src = tmp_path / "incoming"
+    src.mkdir()
+    ev = _write_event_chunks(spark, src, n=2)
+    hidden = tmp_path / "hidden"
+    hidden.mkdir()
+    chunks = sorted(src.glob("chunk*"))
+    chunks[1].rename(hidden / chunks[1].name)
+    dim_path, ckpt = str(tmp_path / "dim"), str(tmp_path / "ckpt")
+    _score_dim(
+        spark, dim_path, [r[0] for r in ev.select("user_id").distinct().collect()]
+    )
+
+    caller = spark.newSession()  # a conf no earlier test has touched
+    confs = {k: caller.conf.get(k, None) for k in _FINALIZE_CONFS}
+    log = ProgressLog()
+    caller.streams.addListener(log)
+    try:
+        for r in range(2):
+            if r == 1:  # land the second chunk
+                (hidden / chunks[1].name).rename(chunks[1])
+            upserts.clear()
+            finalize_to_dimension(caller, f"{src}/chunk*/", dim_path, ckpt)
+            assert upserts == [dim_path]
+            assert {k: caller.conf.get(k, None) for k in _FINALIZE_CONFS} == confs
+        for batches in log.wait_runs(2):
+            assert [b["input_rows"] > 0 for b in batches] == [True]
+
+        with pytest.raises(StreamingQueryException):
+            finalize_to_dimension(
+                caller, f"{src}/chunk*/", str(tmp_path / "no_dim"),
+                str(tmp_path / "ckpt2"),
+            )
+        assert {k: caller.conf.get(k, None) for k in _FINALIZE_CONFS} == confs
+    finally:
+        caller.streams.removeListener(log)
+
+
+def test_finalize_evicts_closed_day_in_next_data_batch(spark, tmp_path):
+    """With no watermark-only batches, a day closed by round 2's
+    watermark is evicted in round 3's data batch: the state then holds
+    only the newer day's keys, and the dimension carries their scores."""
+    import datetime as dt
+
+    from stream_processing_test_spark.tables import normalize_event_ts
+
+    d = dt.datetime(2024, 3, 1)
+    rounds = [  # (users, first event time); later rounds are never late
+        (range(1, 7), d + dt.timedelta(hours=1)),
+        (range(1, 5), d + dt.timedelta(days=1, hours=1)),
+        (range(3, 9), d + dt.timedelta(days=1, hours=5)),
+    ]
+    src = tmp_path / "incoming"
+    src.mkdir()
+    dim_path, ckpt = str(tmp_path / "dim"), str(tmp_path / "ckpt")
+    _score_dim(spark, dim_path, range(1, 9))
+    log = ProgressLog()
+    spark.streams.addListener(log)
+    try:
+        for r, (users, t0) in enumerate(rounds):
+            rows = [
+                (r * 100 + i, t0 + dt.timedelta(minutes=i), u,
+                 "error" if (u + i) % 3 == 0 else "detect", 1.0, "")
+                for u in users
+                for i in range(3)
+            ]
+            spark.createDataFrame(
+                rows, "event_id LONG, ts TIMESTAMP, user_id LONG, "
+                "event_type STRING, value DOUBLE, props STRING",
+            ).coalesce(1).write.parquet(str(src / f"chunk{r}"))
+            finalize_to_dimension(spark, f"{src}/chunk*/", dim_path, ckpt)
+        last = log.wait_runs(3)[-1][-1]
+    finally:
+        spark.streams.removeListener(log)
+
+    next_day = (d + dt.timedelta(days=1)).strftime("%Y-%m-%d")
+    batch = daily_rollup(
+        normalize_event_ts(spark.read.parquet(f"{src}/chunk*/"))
+    ).filter(F.col("day") == next_day)
+    want = {r["user_id"]: (next_day, r["flow_score"]) for r in batch.collect()}
+    assert last["state_rows"] == len(want) == 8
+    got = {
+        r["id"]: (r["day"], r["flow_score"])
+        for r in spark.read.parquet(dim_path).collect()
+        if r["id"] in want
+    }
+    assert got == want
 
 
 def test_rate_source_daily_scores_bounded(spark):
