@@ -716,9 +716,7 @@ def embedding_lsh_pairs(
     r9 hold-recall policy (recall >= RECALL_FLOOR at COS_DESIGN as
     planes rise). Both are the production default. Explicit values
     support the scale ladder (tools/scale_stress.py), which measures
-    this exact pipeline at several (tables, occupancy) points, and the
-    fixed-plane contrast rung that demonstrates the quadratic the auto
-    sizing removes.
+    this exact pipeline at its own (tables, occupancy) point.
 
     ``emb.v`` may be ``array<float>`` (preferred) or ``array<double>``:
     every fold casts to double AT THE EXPRESSION, so the numbers are

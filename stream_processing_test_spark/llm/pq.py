@@ -687,7 +687,6 @@ def _pq_oracle(
     n_codes: int = PQ_CODES,
     iters: int = PQ_ITERS,
     top_k: int = TOP_K,
-    rerank: int | None = None,
 ) -> str:
     """DuckDB oracle replaying the WHOLE PQ pipeline — per-subspace
     codebook training (Lloyd unrolled into CTE pairs over the same
@@ -695,20 +694,15 @@ def _pq_oracle(
     :func:`_pq_train_ctes`), full-corpus encoding, integer LUT
     construction, ADC scoring, top-k. Follows
     :func:`similarity._ivf_oracle`'s construction; the L2/argmin and
-    integer-LUT specifics are documented at their Spark twins.
-    ``rerank=None`` (the registered mode since r10) recomputes
-    :func:`auto_rerank` from the oracle's own COUNT(*) via
-    :func:`_rerank_cte` — the shortlist bound becomes a scalar
-    subquery over that CTE, so the oracle replays the hold-recall
-    policy at any corpus size."""
+    integer-LUT specifics are documented at their Spark twins. The
+    shortlist bound recomputes :func:`auto_rerank` from the oracle's
+    own COUNT(*) via :func:`_rerank_cte` — a scalar subquery over that
+    CTE, so the oracle replays the hold-recall policy at any corpus
+    size."""
     from stream_processing_test_spark.llm.similarity import (
         _train_shift_ctes,
     )
 
-    if rerank is None:
-        rr_cte, rerank_bound = f"{_rerank_cte()},\n", "(SELECT rerank FROM rr)"
-    else:
-        rr_cte, rerank_bound = "", str(rerank)
     pieces_sql, codes_union, lut_union = _pq_train_ctes(
         n_subs=n_subs, n_codes=n_codes, iters=iters
     )
@@ -719,7 +713,8 @@ WITH esig AS (
     FROM embeddings
 ),
 {_train_shift_ctes()},
-{rr_cte}{pieces_sql},
+{_rerank_cte()},
+{pieces_sql},
 codes AS ({codes_union}),
 lut AS ({lut_union}),
 adc AS (
@@ -729,7 +724,7 @@ adc AS (
     WHERE codes.vec_id <> l.query_id
     GROUP BY 1, 2
 ),
-{_adc_tail_sql(rerank_bound, top_k)}
+{_adc_tail_sql("(SELECT rerank FROM rr)", top_k)}
 """
 
 
@@ -737,15 +732,12 @@ def pq_topk(
     emb: DataFrame,
     queries: DataFrame,
     top_k: int = TOP_K,
-    rerank: int | None = None,
 ) -> DataFrame:
     """ADC search core with exact re-ranking (ADC+R, Jégou et al.
     2011 §VII): codes + per-query integer lookup tables shortlist
     ``rerank`` candidates per query, then the original vectors score
-    JUST the shortlist exactly. ``rerank=None`` (the registered mode)
-    sizes the shortlist from a corpus count probe via
-    :func:`auto_rerank` — the r10 hold-recall policy; an explicit int
-    pins it (the scale harness's dial).
+    JUST the shortlist exactly. The shortlist is sized from a corpus
+    count probe via :func:`auto_rerank` — the r10 hold-recall policy.
 
     ``emb`` is (vec_id, v); ``queries`` is (query_id, qv). The
     codebook trains on the hash-capped sample, the corpus encodes in
@@ -767,8 +759,7 @@ def pq_topk(
     # auto_rerank shortlist policy and the training gate's
     # auto_train_shift (pq_codebooks forwards it to train_sample)
     n_rows = emb.select("vec_id").count()
-    if rerank is None:
-        rerank = auto_rerank(n_rows)
+    rerank = auto_rerank(n_rows)
     rows = pq_codebooks(emb, n_rows=n_rows)
     if not rows:
         return _empty_topk(emb.sparkSession)

@@ -549,9 +549,7 @@ def auto_train_shift(n_rows: int, target: int = IVF_TRAIN_TARGET) -> int:
     return s
 
 
-def _train_shift_ctes(
-    target: int = IVF_TRAIN_TARGET, count_from: str = "embeddings"
-) -> str:
+def _train_shift_ctes(count_from: str = "embeddings") -> str:
     """DuckDB CTE pair ``nv(n), sh(s)`` recomputing
     :func:`auto_train_shift` over the live corpus count, plus the
     ``train`` CTE applying the same md5 gate to ``esig``.
@@ -564,9 +562,9 @@ def _train_shift_ctes(
     gate = phash_sql("CAST(vec_id AS VARCHAR)")
     return f"""nv AS (SELECT COUNT(*) AS n FROM {count_from}),
 sh AS (
-    SELECT CASE WHEN n <= {target} THEN 0
+    SELECT CASE WHEN n <= {IVF_TRAIN_TARGET} THEN 0
            ELSE (SELECT MIN(s) FROM range(1, 41) t(s)
-                 WHERE ({target} * (CAST(1 AS BIGINT) << s)) >= n)
+                 WHERE ({IVF_TRAIN_TARGET} * (CAST(1 AS BIGINT) << s)) >= n)
            END AS s
     FROM nv
 ),
@@ -576,10 +574,10 @@ train AS (
 )"""
 
 
-def train_sample(base, target: int = IVF_TRAIN_TARGET, n_rows: int | None = None):
+def train_sample(base, n_rows: int | None = None):
     """The deterministic hash-capped training sample shared by every
     driver-local quantizer trainer (IVF's :func:`kmeans_lists`, PQ's
-    ``pq_codebooks``): ~n/2^s <= target rows gated by
+    ``pq_codebooks``): ~n/2^s <= IVF_TRAIN_TARGET rows gated by
     ``phash(vec_id) % 2^s == 0`` with ``s`` from
     :func:`auto_train_shift`. One definition on purpose — the gate is
     replayed by ``_train_shift_ctes`` in every oracle, so a change
@@ -589,7 +587,7 @@ def train_sample(base, target: int = IVF_TRAIN_TARGET, n_rows: int | None = None
     from stream_processing_test_spark.llm.hashing import phash
 
     n = n_rows if n_rows is not None else base.count()
-    shift = auto_train_shift(n, target)
+    shift = auto_train_shift(n, IVF_TRAIN_TARGET)
     if not shift:
         return base
     return base.filter(
@@ -684,7 +682,6 @@ def train_ivf_cents(
     emb: DataFrame,
     k: int = IVF_LISTS,
     iters: int = IVF_ITERS,
-    train_target: int = IVF_TRAIN_TARGET,
     n_rows: int | None = None,
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """The TRAINING half of :func:`kmeans_lists`: the deterministic
@@ -702,8 +699,8 @@ def train_ivf_cents(
     base = emb.select("vec_id", "v")
     if n_rows is None:
         n_rows = base.count()  # the count train_sample would pay anyway
-    train = train_sample(base, train_target, n_rows=n_rows)
-    # bounded collect: ~n/2^s <= train_target rows of (id, dim doubles)
+    train = train_sample(base, n_rows=n_rows)
+    # bounded collect: ~n/2^s <= IVF_TRAIN_TARGET rows of (id, dim doubles)
     cents = _ivf_lloyd_numpy(
         [(r["vec_id"], r["v"]) for r in train.collect()], k=k, iters=iters
     )
@@ -717,7 +714,6 @@ def kmeans_lists(
     emb: DataFrame,
     k: int = IVF_LISTS,
     iters: int = IVF_ITERS,
-    train_target: int = IVF_TRAIN_TARGET,
     n_rows: int | None = None,
     checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
@@ -727,7 +723,7 @@ def kmeans_lists(
 
     TRAINING IS SAMPLED AND DRIVER-LOCAL (since r9 — VERDICT r8
     item 4): the Lloyd passes run on a deterministic hash-sample of
-    ≈``train_target`` rows (``phash(vec_id) % 2^s == 0`` with ``s``
+    ≈``IVF_TRAIN_TARGET`` rows (``phash(vec_id) % 2^s == 0`` with ``s``
     from :func:`auto_train_shift` — the repo's seedless-gate idiom),
     and because that sample is BOUNDED BY CONSTRUCTION (like the k
     centroids themselves, it is model state, not data), it is
@@ -740,7 +736,7 @@ def kmeans_lists(
     §r8) AND ~1.3 s/pass of pure Catalyst/codegen overhead at
     fixture sizes (measured r9). Now training cost is capped and the
     corpus pays one assignment scan. At fixture sizes
-    (n <= train_target) the shift is 0 and the training set is the
+    (n <= IVF_TRAIN_TARGET) the shift is 0 and the training set is the
     full corpus, so the trained centroids are identical to the
     pre-r9 full-corpus Lloyd's.
 
@@ -774,9 +770,7 @@ def kmeans_lists(
     # (pipelined re-scan for the final assignment — persisting the
     # corpus is the cost this design avoids at 100 TB)
     base = emb.select("vec_id", "v")
-    cents, centroids = train_ivf_cents(
-        base, k=k, iters=iters, train_target=train_target, n_rows=n_rows
-    )
+    cents, centroids = train_ivf_cents(base, k=k, iters=iters, n_rows=n_rows)
     # Assignment strategy: the Arrow-batched numpy argmax, at EVERY
     # size (r11 decision — BENCH_NOTES §r11-assign-arrow). Three forms
     # were measured head-to-head (decision table below): the
@@ -1126,9 +1120,8 @@ def route_queries(
     n_probe: int,
     carry_qv: bool = False,
 ) -> DataFrame:
-    """Query→list routing shared by :func:`ivf_topk`, the IVF-PQ
-    composition (pq.ivfpq_topk) and the scale harness's probed-volume
-    probe: each query keeps its ``n_probe`` most-similar coarse
+    """Query→list routing shared by :func:`ivf_topk` and the IVF-PQ
+    composition (pq.ivfpq_topk): each query keeps its ``n_probe`` most-similar coarse
     centroids (round-6 cosine desc, list_id asc — the exact tie-break
     the oracles' ROW_NUMBER replays). ``centroids`` is the k-row
     driver-held relation from :func:`kmeans_lists`, so the crossJoin
@@ -1158,14 +1151,10 @@ def ivf_topk(
     n_lists: int = IVF_LISTS,
     n_probe: int = N_PROBE,
     top_k: int = TOP_K,
-    train_target: int = IVF_TRAIN_TARGET,
     large_batch: bool = False,
 ) -> DataFrame:
     """IVF search core: k-means lists + probed-list exact scoring.
     ``emb`` is (vec_id, v); ``queries`` is (query_id, qv).
-    ``train_target`` caps the quantizer's training sample (see
-    :func:`kmeans_lists`); the scale ladder's full-training contrast
-    passes a huge value to disable sampling.
 
     ``large_batch`` adapts the plan for big query batches, where
     |queries| x probed-list size makes the scored relation huge (the
@@ -1187,9 +1176,7 @@ def ivf_topk(
     skew they relieve."""
     from pyspark.sql import Window
 
-    assign, centroids = kmeans_lists(
-        emb, k=n_lists, train_target=train_target
-    )
+    assign, centroids = kmeans_lists(emb, k=n_lists)
     # centroids is a driver-held broadcast LocalRelation (k rows — see
     # kmeans_lists), so query routing no longer hangs off the
     # assignment lineage: the assignment is consumed exactly once (the

@@ -249,6 +249,97 @@ def test_scale_stress_marker_invalidates_on_gen_change(tmp_path):
     assert calls == [1, 1] and s3.get("reused") is None
 
 
+def test_scale_stress_merge_keeps_previous_keys():
+    """A rerun of one tier or query must lose nothing the previous
+    artifact recorded: tiers and tier keys it did not run, queries it
+    did not time, and top-level keys it did not recompute (the retired
+    fixed-4 contrast ratios). A key the run produced takes the new
+    value."""
+    import sys as _sys
+
+    _sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import scale_stress as ss
+
+    prev = {
+        "metric": "dedup_ladder_scale_stress",
+        "calibration_runs": [{"tiers": "vec_fixed4"}],
+        "tiers": {
+            "vec_fixed4": {"fixed4": {"wall_sec": 3.1}},
+            "x1": {
+                "corpus": {"n_docs": 5_000},
+                "queries": {"dup_clusters": {"wall_sec": 2.0}},
+                "keep_canonical_staged": {"total_sec": 4.0},
+            },
+        },
+        "vec_fixed4_ratio_2x": 3.94,
+        "scaling_ratio_x10_over_x1": {"dup_clusters": 9.0},
+    }
+    result = {
+        "metric": "dedup_ladder_scale_stress",
+        "calibration_runs": [{"tiers": "x1"}],
+        "tiers": {
+            "x1": {
+                "corpus": {"n_docs": 5_000, "reused": True},
+                "queries": {"dedup_ngram_jaccard": {"wall_sec": 1.0}},
+            },
+        },
+        "scaling_ratio_x10_over_x1": {"dup_clusters": 8.0},
+    }
+    ss._merge_previous(result, prev)
+
+    assert result["tiers"]["vec_fixed4"] == {"fixed4": {"wall_sec": 3.1}}
+    x1 = result["tiers"]["x1"]
+    assert x1["keep_canonical_staged"] == {"total_sec": 4.0}
+    assert set(x1["queries"]) == {"dup_clusters", "dedup_ngram_jaccard"}
+    assert x1["corpus"] == {"n_docs": 5_000, "reused": True}
+    assert result["vec_fixed4_ratio_2x"] == 3.94
+    assert result["scaling_ratio_x10_over_x1"] == {"dup_clusters": 8.0}
+    assert result["calibration_runs"] == [{"tiers": "vec_fixed4"}, {"tiers": "x1"}]
+
+
+def test_scale_stress_kept_runners_complete(spark, tmp_path):
+    """Every runner the scale ladder keeps completes on tiny corpora
+    made by the tool's own generators, so a signature drift in the
+    package calls it makes (events_stream, click_purchase_pairs,
+    embedding_lsh_pairs, the keep-verdict gate) fails here instead of
+    on the next multi-hour rerun."""
+    import sys as _sys
+
+    _sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import scale_stress as ss
+
+    docs, vecs, events = (str(tmp_path / d) for d in ("docs", "vecs", "events"))
+    for d in (docs, vecs, events):
+        Path(d).mkdir()
+    ss.gen_corpus(docs, 300, 0.4)
+    ss.gen_vectors(vecs, 2_000, 0.2)
+    ss.gen_events(events, 5_000)
+
+    q = ss.time_query(spark, "dedup_ngram_jaccard", docs, 1)
+    assert q["rows"] > 0 and len(q["samples"]) == 1
+
+    staged = ss.overbudget_staged(spark, docs)
+    gate = staged["gate"]
+    assert staged["pairs_rows"] > 0 and gate["clustered_nodes"] > 0
+    # a tiny node set fits the broadcast budget, so the hint applies
+    assert 0 < gate["est_bytes"] <= gate["threshold_bytes"]
+    assert gate["broadcast_hint_applied"] is True
+    assert staged["verdict_rows_total"] == 300
+    assert 0 < staged["verdict_rows_kept"] < 300
+    assert staged["verdict_join_node"] != "unknown"
+
+    lsh = ss.vector_lsh_run(spark, vecs, 1)
+    assert lsh["n_vecs"] == 2_000 and lsh["tables"] == ss.VEC_TABLES
+    assert lsh["target_occupancy"] == ss.VEC_OCCUPANCY
+    assert lsh["pairs"] > 0 and lsh["planted_recall"] > 0
+
+    for which in ss.STREAM_ARMS:
+        run = ss.streaming_run(spark, events, which, 1)
+        assert run["n_events"] == 5_000, which
+        assert run["n_batches"] > 0 and run["events_per_sec"] > 0, which
+        assert run["state_rows_total"] is not None, which
+
+
 def _fold_reference_labels(V, cents_sorted):
     """Pure pre-r13 parity chain, re-derived independently: dots and
     norms fold left-to-right across dims, sims round half-up to 6
