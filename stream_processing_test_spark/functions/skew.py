@@ -35,9 +35,8 @@ def salted_aggregate(
     keys: Sequence[str],
     partial_aggs: Sequence[Column],
     final_aggs: Sequence[Column],
-    n_salts: int = DEFAULT_SALT,
 ) -> DataFrame:
-    """Two-phase aggregation with an explicit salt.
+    """Two-phase aggregation with an explicit ``DEFAULT_SALT``-way salt.
 
     ``partial_aggs`` aggregate within (keys..., salt); ``final_aggs``
     combine the partials per key (they reference the partial aliases).
@@ -50,7 +49,7 @@ def salted_aggregate(
         )
     """
     salted = df.withColumn(
-        "__salt", (F.rand(seed=42) * n_salts).cast("int")
+        "__salt", (F.rand(seed=42) * DEFAULT_SALT).cast("int")
     )
     partial = salted.groupBy(*keys, "__salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*final_aggs)

@@ -41,6 +41,10 @@ from stream_processing_test_spark.llm.hashing import phash, phash_sql
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.session import release_local_checkpoint
 
+# min-label rounds before the auto path falls back to star: the
+# measured crossover in BENCH_STAR_CROSSOVER.json (tools/star_crossover.py)
+MINLABEL_BUDGET = 4
+
 
 def connected_components(
     edges: DataFrame,
@@ -48,7 +52,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     algorithm: str = "auto",
-    minlabel_budget: int = 4,
     with_count: bool = False,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component = min
@@ -59,7 +62,7 @@ def connected_components(
     - ``"auto"`` (default): min-label propagation — measured fastest
       on the dense little cliques near-dup graphs are (sf0.1 real dup
       graph: 4.34 s vs star's 5.06 s, BENCH_r05) — but if it has not
-      converged within ``minlabel_budget`` rounds (8 hops: covers any
+      converged within ``MINLABEL_BUDGET`` rounds (8 hops: covers any
       diameter-8 component, far beyond realistic dup-cluster diameter
       1-3), fall back to the O(log d) large-star/small-star path
       instead of burning diameter-many driver barriers. The budget is
@@ -108,7 +111,7 @@ def connected_components(
         return (labels, labels.count()) if with_count else labels
     if algorithm not in ("minlabel", "auto"):
         raise ValueError(f"unknown algorithm {algorithm!r}: auto|minlabel|star")
-    budget = minlabel_budget if algorithm == "auto" else max_iter
+    budget = MINLABEL_BUDGET if algorithm == "auto" else max_iter
     # LAZY localCheckpoint, not persist() (r17): ``sym`` is consumed as
     # a ``{sym}`` parameter inside propagate()'s SQL every pass, and
     # Spark 4.1's df-parameter substitution does not match the

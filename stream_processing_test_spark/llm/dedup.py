@@ -73,7 +73,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shingles(
     doc: DataFrame,
-    text_col: str = "text",
     n: int = SHINGLE_N,
     distinct: bool = True,
 ) -> DataFrame:
@@ -120,7 +119,7 @@ def shingles(
     # trips per call at this host's 1-10 ms/trip, and shingles() runs
     # ~10x per bench round across its consumers (same expressions,
     # same values — runtime CSE already shared the repeated split()).
-    w = f"split({text_col}, ' ')"
+    w = "split(text, ' ')"
     grams = (
         f"transform(sequence(1, size({w}) - {n - 1}), "
         f"i -> array_join(slice({w}, i, {n}), ' '))"

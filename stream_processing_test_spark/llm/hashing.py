@@ -55,10 +55,9 @@ def phash(col: Column | str, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(c), 1, PHASH_HEX), 16, 10).cast("long")
 
 
-def phash_sql(expr: str, seed: int | None = None) -> str:
-    """DuckDB twin of :func:`phash`. ``expr`` is a SQL string expression."""
-    if seed is not None:
-        expr = f"'{seed}:' || {expr}"
+def phash_sql(expr: str) -> str:
+    """DuckDB twin of unseeded :func:`phash`. ``expr`` is a SQL string
+    expression."""
     return f"CAST('0x' || substr(md5({expr}), 1, {PHASH_HEX}) AS BIGINT)"
 
 

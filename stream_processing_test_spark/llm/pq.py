@@ -82,12 +82,7 @@ _MICRO = 1_000_000  # LUT quantum: 1e-6 units
 # query's wall at fixture scale.
 
 
-def auto_rerank(
-    n_rows: int,
-    floor: int = PQ_RERANK,
-    shift: int = PQ_RERANK_SHIFT,
-    cap: int = PQ_RERANK_MAX,
-) -> int:
+def auto_rerank(n_rows: int) -> int:
     """Hold-recall shortlist policy for ADC+R (VERDICT r9 item 1) —
     the PQ twin of ``similarity.auto_tables``: with a FIXED shortlist
     the re-ranked fraction rerank/n shrinks as the corpus grows and
@@ -96,8 +91,8 @@ def auto_rerank(
     touches only |queries| × rerank raw vectors — BENCH_NOTES.md
     §r9-pq-dial: rerank 1600 at 200 k = 0.92 recall at FLAT wall).
 
-    The rule holds the fraction instead: ``rerank = n >> shift``
-    (shift 7 ≈ 0.78% of the corpus — the measured 0.92-recall
+    The rule holds the fraction instead: ``rerank = n >> 7``
+    (PQ_RERANK_SHIFT; ≈ 0.78% of the corpus — the measured 0.92-recall
     operating point at 200 k vectors, well above the declared 0.75
     floor), floored at the fixture regime's PQ_RERANK and clamped at
     PQ_RERANK_MAX (where the IVF-PQ composition takes over — see the
@@ -106,20 +101,16 @@ def auto_rerank(
     COUNT(*) (:func:`_rerank_cte`) and shortlists the identical rows
     at any corpus size. At fixture sizes (n <= 12 800) this resolves
     to the PQ_RERANK floor — fixture plans and hashes unchanged."""
-    return min(max(floor, n_rows >> shift), cap)
+    return min(max(PQ_RERANK, n_rows >> PQ_RERANK_SHIFT), PQ_RERANK_MAX)
 
 
-def _rerank_cte(
-    floor: int = PQ_RERANK,
-    shift: int = PQ_RERANK_SHIFT,
-    cap: int = PQ_RERANK_MAX,
-) -> str:
+def _rerank_cte() -> str:
     """DuckDB CTE ``rr(rerank)`` replaying :func:`auto_rerank` over the
     ``nv(n)`` corpus-count CTE that ``_train_shift_ctes`` already
     defines — same integer rule, same count, no float crosses the
     engine boundary."""
     return f"""rr AS (
-    SELECT LEAST(GREATEST({floor}, n >> {shift}), {cap}) AS rerank FROM nv
+    SELECT LEAST(GREATEST({PQ_RERANK}, n >> {PQ_RERANK_SHIFT}), {PQ_RERANK_MAX}) AS rerank FROM nv
 )"""
 
 
@@ -515,15 +506,10 @@ def _seq_sq_l2_sql(a: str, b: str, d: int) -> str:
     return f"GREATEST((({xsq} - 2.0 * {dot}) + {csq}), 0)"
 
 
-def _pq_train_ctes(
-    n_subs: int = PQ_SUBS,
-    n_codes: int = PQ_CODES,
-    iters: int = PQ_ITERS,
-    q_src: str | None = None,
-) -> tuple[str, str, str]:
+def _pq_train_ctes(q_src: str | None = None) -> tuple[str, str, str]:
     """The per-subspace PQ training/encode/LUT CTE chain shared by the
     pure-PQ oracle and the IVF-PQ composition's oracle: for each
-    subspace, subtrain → seeds → ``iters`` × (assign → recompute →
+    subspace, subtrain → seeds → ``PQ_ITERS`` × (assign → recompute →
     reseed) Lloyd over the ``train`` CTE → full-corpus ``enc{s}`` →
     per-query ``qlut{s}``. Returns ``(pieces_sql, codes_union,
     lut_union)`` — the UNIONs flatten the per-subspace relations into
@@ -563,7 +549,7 @@ def _pq_train_ctes(
         return f"""{name}_rs AS (
     SELECT m.code, f.sub AS centroid
     FROM (SELECT t.code, ROW_NUMBER() OVER (ORDER BY t.code) AS r
-          FROM range({n_codes}) t(code)
+          FROM range({PQ_CODES}) t(code)
           WHERE t.code NOT IN (SELECT code FROM {raw})) m
     JOIN (SELECT a.vec_id, a.sub, ROW_NUMBER() OVER (
               ORDER BY ROUND({dist}, 6) DESC, a.vec_id ASC) AS r
@@ -579,7 +565,7 @@ def _pq_train_ctes(
 
     pieces = []
     enc_names, lut_names = [], []
-    for s in range(n_subs):
+    for s in range(PQ_SUBS):
         lo, hi = s * d + 1, (s + 1) * d
         pieces.append(
             f"subtrain{s} AS MATERIALIZED (SELECT vec_id, v[{lo}:{hi}] AS sub FROM train)"
@@ -588,10 +574,10 @@ def _pq_train_ctes(
     SELECT (ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1) AS code, sub AS centroid
     FROM (SELECT vec_id, sub,
                  CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-          FROM subtrain{s} ORDER BY h, vec_id LIMIT {n_codes})
+          FROM subtrain{s} ORDER BY h, vec_id LIMIT {PQ_CODES})
 )""")
         cents = f"seeds{s}"
-        for i in range(iters):
+        for i in range(PQ_ITERS):
             pieces.append(assign(f"assign{s}_{i}", f"subtrain{s}", cents))
             cents = f"cent{s}_{i + 1}"
             pieces.append(recompute(f"{cents}_raw", f"assign{s}_{i}"))
@@ -614,11 +600,11 @@ def _pq_train_ctes(
 
     codes_union = "\nUNION ALL ".join(
         f"SELECT vec_id, {s} AS s, code FROM {enc_names[s]}"
-        for s in range(n_subs)
+        for s in range(PQ_SUBS)
     )
     lut_union = "\nUNION ALL ".join(
         f"SELECT query_id, {s} AS s, code, ipart, cnsq FROM {lut_names[s]}"
-        for s in range(n_subs)
+        for s in range(PQ_SUBS)
     )
     return ",\n".join(pieces), codes_union, lut_union
 
@@ -682,12 +668,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
 FROM ranked WHERE rk <= {top_k}{guard}"""
 
 
-def _pq_oracle(
-    n_subs: int = PQ_SUBS,
-    n_codes: int = PQ_CODES,
-    iters: int = PQ_ITERS,
-    top_k: int = TOP_K,
-) -> str:
+def _pq_oracle() -> str:
     """DuckDB oracle replaying the WHOLE PQ pipeline — per-subspace
     codebook training (Lloyd unrolled into CTE pairs over the same
     hash-gated ``train`` CTE the Spark side samples:
@@ -703,9 +684,7 @@ def _pq_oracle(
         _train_shift_ctes,
     )
 
-    pieces_sql, codes_union, lut_union = _pq_train_ctes(
-        n_subs=n_subs, n_codes=n_codes, iters=iters
-    )
+    pieces_sql, codes_union, lut_union = _pq_train_ctes()
 
     return f"""
 WITH esig AS (
@@ -724,15 +703,11 @@ adc AS (
     WHERE codes.vec_id <> l.query_id
     GROUP BY 1, 2
 ),
-{_adc_tail_sql("(SELECT rerank FROM rr)", top_k)}
+{_adc_tail_sql("(SELECT rerank FROM rr)", TOP_K)}
 """
 
 
-def pq_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    top_k: int = TOP_K,
-) -> DataFrame:
+def pq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """ADC search core with exact re-ranking (ADC+R, Jégou et al.
     2011 §VII): codes + per-query integer lookup tables shortlist
     ``rerank`` candidates per query, then the original vectors score
@@ -771,7 +746,7 @@ def pq_topk(
     # no explode, no keyed sum, the whole score rides the encode's
     # map-only stage
     scored = _adc_gather(enc.crossJoin(F.broadcast(lutw)))
-    return _adc_rank(scored, emb, queries, rerank, top_k)
+    return _adc_rank(scored, emb, queries, rerank, TOP_K)
 
 
 def _empty_topk(spark: SparkSession) -> DataFrame:
@@ -1097,7 +1072,7 @@ def ivfpq_search(
     )
 
 
-def _ivfpq_oracle(top_k: int = TOP_K, n_probe: int | None = None) -> str:
+def _ivfpq_oracle() -> str:
     """DuckDB oracle for the IVF-PQ composition: the IVF Lloyd chain
     in DYNAMIC-list mode (``_ivf_lloyd_ctes(n_lists=None)`` bounded by
     the ``nl`` CTE replaying :func:`similarity.auto_lists`) + the PQ
@@ -1113,8 +1088,6 @@ def _ivfpq_oracle(top_k: int = TOP_K, n_probe: int | None = None) -> str:
         auto_lists_ctes,
     )
 
-    if n_probe is None:
-        n_probe = N_PROBE
     lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     pieces_sql, codes_union, lut_union = _pq_train_ctes()
 
@@ -1141,7 +1114,7 @@ probed AS (
                ROW_NUMBER() OVER (PARTITION BY q.query_id
                    ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
                             c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {n_probe}
+        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
 ),
 adc AS (
     SELECT l.query_id, codes.vec_id,
@@ -1153,7 +1126,7 @@ adc AS (
     WHERE codes.vec_id <> l.query_id
     GROUP BY 1, 2
 ),
-{_adc_tail_sql("(SELECT rerank FROM rr)", top_k)}
+{_adc_tail_sql("(SELECT rerank FROM rr)", TOP_K)}
 """
 
 

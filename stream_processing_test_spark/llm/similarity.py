@@ -176,23 +176,19 @@ def auto_planes(
     return p
 
 
-def auto_planes_ctes(
-    src: str = "embeddings",
-    target_occupancy: int = LSH_TARGET_OCCUPANCY,
-    min_planes: int = N_PLANES,
-    max_planes: int = MAX_PLANES,
-) -> str:
+def auto_planes_ctes() -> str:
     """DuckDB CTE pair ``nv(n), np(planes)`` recomputing
-    :func:`auto_planes` over the live row count of ``src`` — the same
-    integer rule (smallest ``p`` in ``[min_planes, max_planes]`` with
-    ``target * 2^p >= n``), so the oracle sizes its planes from the
-    same corpus count the Spark query probes."""
-    return f"""nv AS (SELECT COUNT(*) AS n FROM {src}),
+    :func:`auto_planes` at its defaults over the live row count of
+    ``embeddings`` — the same integer rule (smallest ``p`` in
+    ``[N_PLANES, MAX_PLANES]`` with ``LSH_TARGET_OCCUPANCY * 2^p >= n``),
+    so the oracle sizes its planes from the same corpus count the Spark
+    query probes."""
+    return f"""nv AS (SELECT COUNT(*) AS n FROM embeddings),
 np AS (
-    SELECT CASE WHEN n <= {target_occupancy} THEN {min_planes}
-           ELSE (SELECT MIN(p) FROM range({min_planes}, {max_planes + 1}) t(p)
-                 WHERE ({target_occupancy} * (CAST(1 AS BIGINT) << p)) >= n
-                    OR p = {max_planes})
+    SELECT CASE WHEN n <= {LSH_TARGET_OCCUPANCY} THEN {N_PLANES}
+           ELSE (SELECT MIN(p) FROM range({N_PLANES}, {MAX_PLANES + 1}) t(p)
+                 WHERE ({LSH_TARGET_OCCUPANCY} * (CAST(1 AS BIGINT) << p)) >= n
+                    OR p = {MAX_PLANES})
            END AS planes
     FROM nv
 )"""
@@ -273,7 +269,6 @@ def hyperplane_tables(
     emb: DataFrame,
     n_tables: int = N_TABLES,
     n_planes: int = N_PLANES,
-    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """(vec_id, table_id, bucket): each vector hashed into one bucket
     per LSH table via random-hyperplane sign signatures.
@@ -307,7 +302,7 @@ def hyperplane_tables(
     # 4096 multiply-adds per vector: parallelize when the scan is a
     # single row group (no-op at real scan widths)
     emb = parallelize_narrow_scan(emb)
-    W = plane_weights(n_tables, n_planes, dim)
+    W = plane_weights(n_tables, n_planes, EMBED_DIM)
 
     # The weight matrix is 4096 doubles; building it as F.lit() columns
     # costs thousands of py4j round-trips PER QUERY CALL (~3 s of
@@ -340,7 +335,6 @@ def hyperplane_tables(
 def bucket_ctes(
     n_tables: int | None = N_TABLES,
     n_planes: int | None = N_PLANES,
-    dim: int = EMBED_DIM,
 ) -> str:
     """DuckDB CTE chain ``esig(vec_id, v), hp(t, p, w), buckets(vec_id,
     table_id, bucket)`` replaying :func:`hyperplane_tables` exactly —
@@ -380,10 +374,10 @@ def bucket_ctes(
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
     FROM embeddings
 ),
-{np_cte}{plane_weights_cte(gen_tables, gen_planes, dim)},
+{np_cte}{plane_weights_cte(gen_tables, gen_planes, EMBED_DIM)},
 buckets AS (
     SELECT e.vec_id, hp.t AS table_id,
-           SUM(CASE WHEN list_sum(list_transform(range({dim}), i -> v[i+1] * w[i+1])) > 0
+           SUM(CASE WHEN list_sum(list_transform(range({EMBED_DIM}), i -> v[i+1] * w[i+1])) > 0
                     THEN (1 << p) ELSE 0 END) AS bucket
     FROM esig e, hp{np_src}
     WHERE {plane_bound} AND {table_bound}
@@ -715,7 +709,6 @@ def kmeans_lists(
     k: int = IVF_LISTS,
     iters: int = IVF_ITERS,
     n_rows: int | None = None,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic spherical k-means over (vec_id, v): returns
     ``(assign, centroids)`` — ``assign(vec_id, v, list_id)`` and
@@ -799,16 +792,7 @@ def kmeans_lists(
             "vec_id", "v", "CAST(0 AS INT) AS list_id"
         )
     else:
-        assign = _assign_arrow(base, cents)
-        if checkpoint:
-            # ``checkpoint=False`` (r12): a SINGLE-CONSUMER caller —
-            # the IVF-PQ composition, whose assignment feeds exactly
-            # one encode pass — skips the materialization: writing
-            # then re-reading the ~550-byte-wide rows was measured at
-            # a material share of the 2M-vector wall (BENCH_NOTES
-            # §r12-ivfpq-attrib) and buys nothing when no second
-            # action re-reads the index.
-            assign = assign.localCheckpoint(eager=False)
+        assign = _assign_arrow(base, cents).localCheckpoint(eager=False)
     return assign, centroids
 
 
@@ -875,8 +859,6 @@ def _assign_arrow(
     vectorized numpy argmax over 10k-row Arrow batches is the §2.9
     exception the guide prescribes."""
     cs = sorted(cents)
-    cent_ids = [lid for lid, _ in cs]
-    cent_rows = [c for _, c in cs]
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in base.schema.fields
     ) + ", list_id int"
@@ -1229,13 +1211,9 @@ def ivf_topk(
     return finish_with(result)
 
 
-def _ivf_lloyd_ctes(
-    n_lists: int | None = IVF_LISTS,
-    iters: int = IVF_ITERS,
-    dim: int = EMBED_DIM,
-) -> tuple[str, str]:
+def _ivf_lloyd_ctes(n_lists: int | None = IVF_LISTS) -> tuple[str, str]:
     """The spherical-k-means CTE chain shared by the IVF oracle and
-    the IVF-PQ composition's oracle: ``seeds`` → ``iters`` ×
+    the IVF-PQ composition's oracle: ``seeds`` → ``IVF_ITERS`` ×
     (assign → recompute → reseed) over the ``train`` CTE →
     ``assign_final`` over the full ``esig``. Returns ``(sql,
     final_cents_name)``. ``n_lists=None`` (the composition's mode)
@@ -1268,7 +1246,7 @@ def _ivf_lloyd_ctes(
         return f"""{name} AS (
     SELECT list_id, list(m ORDER BY pos) AS centroid FROM (
         SELECT list_id, pos, ROUND(AVG(v[pos+1]), 6) AS m
-        FROM {assigned}, range({dim}) rr(pos)
+        FROM {assigned}, range({EMBED_DIM}) rr(pos)
         GROUP BY list_id, pos)
     GROUP BY list_id
 )"""
@@ -1314,7 +1292,7 @@ def _ivf_lloyd_ctes(
 )"""
     ]
     cents = "seeds"
-    for i in range(iters):
+    for i in range(IVF_ITERS):
         steps.append(assign(f"assign{i}", cents))
         cents = f"cent{i + 1}"
         steps.append(recompute(f"{cents}_raw", f"assign{i}"))
@@ -1323,15 +1301,9 @@ def _ivf_lloyd_ctes(
     return ",\n".join(steps), cents
 
 
-def _ivf_oracle(
-    n_lists: int = IVF_LISTS,
-    iters: int = IVF_ITERS,
-    n_probe: int = N_PROBE,
-    top_k: int = TOP_K,
-    dim: int = EMBED_DIM,
-) -> str:
+def _ivf_oracle() -> str:
     """DuckDB oracle replaying the WHOLE IVF pipeline — including the
-    iterative k-means quantizer, unrolled into ``iters`` assign/recompute
+    iterative k-means quantizer, unrolled into ``IVF_ITERS`` assign/recompute
     CTE pairs (:func:`_ivf_lloyd_ctes`). Possible because every
     cross-engine float hazard is rounded away at the source (see
     :func:`kmeans_lists`): seed choice is the portable hash,
@@ -1342,7 +1314,7 @@ def _ivf_oracle(
     gates (:func:`_train_shift_ctes` recomputes
     :func:`auto_train_shift` from the oracle's own COUNT(*)) — and
     only ``assign_final`` scans the full ``esig``."""
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=n_lists, iters=iters, dim=dim)
+    lloyd, cents = _ivf_lloyd_ctes()
 
     return f"""
 WITH esig AS (
@@ -1358,7 +1330,7 @@ probed AS (
                ROW_NUMBER() OVER (PARTITION BY q.query_id
                    ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
                             c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {n_probe}
+        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
 ),
 sims AS (
     SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -1375,7 +1347,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
        CAST(neighbor_id AS BIGINT) AS neighbor_id,
        cos_sim,
        CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {top_k}
+FROM ranked WHERE rk <= {TOP_K}
 """
 
 
@@ -1432,13 +1404,13 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, q)
 
 
-def _ivf_auto_probe_oracle(top_k: int = TOP_K, dim: int = EMBED_DIM) -> str:
+def _ivf_auto_probe_oracle() -> str:
     """DuckDB oracle for the auto-scaled IVF operating point: the
     dynamic-list Lloyd chain (``_ivf_lloyd_ctes(n_lists=None)``
     bounded by the ``nl`` CTE) plus the ``npr`` CTE replaying
     :func:`auto_probe` — both integer rules recomputed from the
     oracle's own COUNT(*), so the replay holds at any corpus size."""
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None, dim=dim)
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     return f"""
 WITH esig AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1472,7 +1444,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
        CAST(neighbor_id AS BIGINT) AS neighbor_id,
        cos_sim,
        CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {top_k}
+FROM ranked WHERE rk <= {TOP_K}
 """
 
 
@@ -1650,8 +1622,6 @@ def auto_path(
 def _auto_oracle(
     adc_rows: int | None = None,
     brute_max: int | None = None,
-    top_k: int = TOP_K,
-    dim: int = EMBED_DIM,
 ) -> str:
     """DuckDB oracle replaying :func:`auto_path`, the r15 ivf EXEC
     rule, and every reachable branch: the decision CTE recomputes the
@@ -1682,11 +1652,11 @@ def _auto_oracle(
         adc_rows = APPEND_ADC_ROWS
     if brute_max is None:
         brute_max = BRUTE_MAX_ROWS
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None, dim=dim)
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     pieces_sql, codes_union, lut_union = _pq_train_ctes()
     adc_tail = _adc_tail_sql(
         "(SELECT rerank FROM rr)",
-        top_k,
+        TOP_K,
         with_approx=False,
         guard=" AND (SELECT path FROM decision) = 'ivf_adc'",
     )
@@ -1763,14 +1733,14 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
        cos_sim,
        CAST(rk AS BIGINT) AS rk
 FROM e_ranked
-WHERE rk <= {top_k} AND (SELECT path FROM decision) = 'ivf_exact'
+WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'ivf_exact'
 UNION ALL
 SELECT CAST(query_id AS BIGINT) AS query_id,
        CAST(neighbor_id AS BIGINT) AS neighbor_id,
        cos_sim,
        CAST(rk AS BIGINT) AS rk
 FROM b_ranked
-WHERE rk <= {top_k} AND (SELECT path FROM decision) = 'brute'
+WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'brute'
 """
 
 
@@ -1918,12 +1888,7 @@ def append_rerank(n_base: int, n_batch: int) -> int:
 
 
 def _append_oracle(
-    iters: int = IVF_ITERS,
-    n_probe: int = N_PROBE,
-    top_k: int = TOP_K,
-    dim: int = EMBED_DIM,
     adc_rows: int = APPEND_ADC_ROWS,
-    rerank_cap: int = APPEND_RERANK_CAP,
     spill_rows: int = APPEND_SPILL_ROWS,
     window_queries: int = APPEND_WINDOW_QUERIES,
 ) -> str:
@@ -1950,8 +1915,7 @@ def _append_oracle(
     per-query row — differing only in the ``rr`` rerank rule, which
     windows the batch size (``LEAST(b, window_queries)``) exactly as
     :func:`append_rerank` is called per window on the Spark side.
-    ``adc_rows``/``rerank_cap``/``spill_rows``/``window_queries`` are
-    parameters so the forced-dispatch pytests can regenerate the
+    ``adc_rows``/``spill_rows``/``window_queries`` are parameters so the forced-dispatch pytests can regenerate the
     oracle with zero crossovers and gate the ADC and windowed
     branches cross-engine at fixture scale (the registered constants
     never dispatch past exact below ladder scale)."""
@@ -1963,11 +1927,11 @@ def _append_oracle(
         _pq_train_ctes,
     )
 
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None, iters=iters, dim=dim)
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     pieces_sql, codes_union, lut_union = _pq_train_ctes(q_src="qsrc")
     adc_tail = _adc_tail_sql(
         "(SELECT rerank FROM rr)",
-        top_k,
+        TOP_K,
         q_rel="qsrc",
         with_approx=False,
         guard=" AND (SELECT path FROM decision) IN ('adc', 'windowed')",
@@ -1988,17 +1952,17 @@ rr0 AS (
 ),
 decision AS (
     SELECT CASE
-           WHEN b * {n_probe} * ((n + lists - 1) // lists) > {spill_rows}
+           WHEN b * {N_PROBE} * ((n + lists - 1) // lists) > {spill_rows}
            THEN 'windowed'
-           WHEN b * {n_probe} * ((n + lists - 1) // lists) > {adc_rows}
+           WHEN b * {N_PROBE} * ((n + lists - 1) // lists) > {adc_rows}
            THEN 'adc' ELSE 'exact' END AS path
     FROM nv, nl, nb
 ),
 rr AS (
     SELECT CASE WHEN (SELECT path FROM decision) = 'windowed'
-           THEN CASE WHEN LEAST(b, {window_queries}) * r0 > {rerank_cap}
+           THEN CASE WHEN LEAST(b, {window_queries}) * r0 > {APPEND_RERANK_CAP}
                      THEN {PQ_RERANK} ELSE r0 END
-           ELSE CASE WHEN b * r0 > {rerank_cap}
+           ELSE CASE WHEN b * r0 > {APPEND_RERANK_CAP}
                      THEN {PQ_RERANK} ELSE r0 END END AS rerank
     FROM rr0, nb
 ),
@@ -2014,7 +1978,7 @@ probed AS (
                ROW_NUMBER() OVER (PARTITION BY q.query_id
                    ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
                             c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {n_probe}
+        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
 ),
 e_sims AS (
     SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -2051,7 +2015,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
        cos_sim,
        CAST(rk AS BIGINT) AS rk
 FROM e_ranked
-WHERE rk <= {top_k} AND (SELECT path FROM decision) = 'exact'
+WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'exact'
 """
 
 

@@ -138,7 +138,6 @@ def per_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this matters: no per-group window ordering, pure
     map-side-combinable aggregation."""
     ev = load(spark, sf_dir, "events")
-    good = F.col("value") >= 0.5
     return ev.groupBy("user_id").agg(
         *_pivot_counts(),
         F.count("*").alias("n_detection"),

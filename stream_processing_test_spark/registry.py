@@ -150,6 +150,10 @@ PLAN_OPAQUE_QUERIES: dict[str, str] = {
     "decontaminate_embedding": "signature tables materialized in fn()",
     "dedup_embedding_lsh": "bucket+verify materialized in fn()",
     "embedding_knn_graph": "bucket+verify+rank materialized in fn()",
+    "envelope_rollup": "temp-dir write/read roundtrip materialized in fn()",
+    "envelope_rollup_csv": "temp-dir write/read roundtrip materialized in fn()",
+    "envelope_rollup_orc": "temp-dir write/read roundtrip materialized in fn()",
+    "envelope_rollup_parquet": "temp-dir write/read roundtrip materialized in fn()",
     "bpe_vocab_merges": "iterative merge trainer; 6-row result built on the driver",
     "semantic_dup_clusters": "knn graph checkpoint + connected-components loop in fn()",
     "dedup_incremental": "shared signature relation materialized in fn()",

@@ -121,7 +121,7 @@ def send_report_batches(
     Returns the number of batches sent.
 
     The reference paces posts at 500 ms (StreamTest.cpp:552, 605);
-    tests pass 0."""
+    ``pacing_s`` defaults to 0 (no pause), and no caller here paces."""
     header = df.columns
     rows = [tuple(r) for r in df.collect()]
     n_batches = 0

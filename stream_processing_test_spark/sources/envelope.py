@@ -28,12 +28,16 @@ through the same helpers, so the two paths cannot drift.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stream_processing_test_spark.functions.scalars import blank_to_null
 from stream_processing_test_spark.schemas import PROBE_EVENT_SCHEMA
+from stream_processing_test_spark.session import finish_with
 
 _FORMATS = ("json", "csv", "parquet", "orc")
 
@@ -209,9 +213,7 @@ def read_probe_events(
     return _read(spark.read, fmt, path, spark, multiline=multiline)
 
 
-def write_probe_events(
-    df: DataFrame, path: str, fmt: str = "json", mode: str = "append"
-) -> None:
+def write_probe_events(df: DataFrame, path: str, fmt: str = "json") -> None:
     """S5 append-sink twin of :func:`read_probe_events`: land envelope
     events at ``path`` in ``fmt``. Text formats serialize
     ``created_time`` back to the reference's UTC string form and
@@ -234,7 +236,7 @@ def write_probe_events(
                 c = F.coalesce(c.cast("string"), F.lit(""))
             cols.append(c.alias(f.name))
         df = df.select(*cols)
-    writer = df.write.mode(mode).format(fmt)
+    writer = df.write.mode("append").format(fmt)
     if fmt == "csv":
         # the CSV WRITER trims cell whitespace by default
         # (ignore*WhiteSpace=true on write, unlike the reader) — which
@@ -293,56 +295,13 @@ FROM ev GROUP BY item
 """
 
 
-# (applicationId, sf_dir, fmt) -> resolved fixture path for this
-# session — the derivation is deterministic, so one write (or reuse of
-# a complete on-disk fixture) serves every consumer; the registry-wide
-# plan sweep and bench repeats would otherwise re-run the full
-# derive+write job just to build the frame. A dict, not a set: the
-# rename-race fallback can resolve to a process-private dir.
-_ENVELOPE_FIXTURES: dict[tuple[str, str, str], str] = {}
-
-# Bump on ANY change to the event derivation below or to the
-# write_probe_events serialization it rides through: the constant is
-# folded into the on-disk fixture dir name, so a code change lands on
-# a FRESH path instead of silently reusing a stale /tmp fixture
-# written by an older build (which the driver gate would then
-# "validate" without exercising the current S5 write path).
-_FIXTURE_VERSION = 2
-
-
-def _envelope_fixture(spark: SparkSession, sf_dir: str, fmt: str = "json") -> str:
-    """Land the deterministic reference-shaped envelope fixture for
-    ``sf_dir`` in ``fmt`` under the OS tempdir and return its path —
-    shared by the batch (``envelope_rollup`` / ``envelope_rollup_csv``)
-    and streaming (``streaming_envelope_rollup``) ingest queries.
-
-    Events derive from the customer table with portable-hash outcomes
-    (like ``probe_source_events``), serialized through the real S5
-    write edge (:func:`write_probe_events`: created_time/item in their
-    reference string forms, NULLs re-materialized as ``''``).
-
-    The dir key is a STABLE digest (md5, not Python's per-process-
-    salted ``hash``) of ``(sf_dir, fmt, _FIXTURE_VERSION, transport
-    schema)``, so every process running the SAME code lands on the same
-    path instead of orphaning a fresh tempdir per run — while any
-    change to the derivation or serialization (version bump) or to the
-    envelope schema lands on a fresh path instead of silently reusing a
-    stale fixture from an older build. Because the content is
-    deterministic, an EXISTING complete fixture (Spark's ``_SUCCESS``
-    commit marker present) is simply REUSED, never rewritten: no
-    overwrite can unlink files under another process's in-flight scan.
-    A missing/incomplete fixture is written to a process-private tmp
-    dir and swapped into place under an exclusive ``flock`` (held by
-    every writer of this protocol, auto-released on process death), so
-    the replace-incomplete-leftover path can never unlink a COMPLETE
-    fixture that another writer renamed into place between the check
-    and the claim. The dir is left to OS tempdir reaping — deleting it
-    eagerly would break consumers' lazy scans.
-    """
-    import hashlib
-    import os
-    import tempfile
-
+def _envelope_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic reference-shaped envelope events for
+    ``sf_dir``: derived from the customer table with portable-hash
+    outcomes (like ``probe_source_events``), in the typed
+    ``PROBE_EVENT_SCHEMA`` shape :func:`write_probe_events` serializes
+    (created_time/item in their reference string forms, NULLs
+    re-materialized as ``''``)."""
     from stream_processing_test_spark.llm.hashing import phash
     from stream_processing_test_spark.tables import load
 
@@ -352,7 +311,7 @@ def _envelope_fixture(spark: SparkSession, sf_dir: str, fmt: str = "json") -> st
 
     key = F.col("c_custkey").cast("string")
     hs = [phash(F.concat(F.lit(f"env{i}:"), key)) for i in range(4)]
-    ev = load(spark, sf_dir, "customer").select(
+    return load(spark, sf_dir, "customer").select(
         key.alias("url_id"),
         F.concat(F.lit("http://stream/"), key).alias("flow_address"),
         F.when(hs[0] % 10 < 8, 0)
@@ -374,70 +333,21 @@ def _envelope_fixture(spark: SparkSession, sf_dir: str, fmt: str = "json") -> st
         key.alias("target_matching_id"),
         F.lit("").alias("target_matching"),
     )
-    # euid in the digest: the stable path (and its .lock file) live in
-    # the world-writable tempdir, so two USERS running this code would
-    # otherwise share a path whose lock file only the first creator can
-    # reopen (open(..., 'w') on another uid's file raises
-    # PermissionError and silently degrades every later run to an
-    # unshared private copy). Per-user dirs make cross-user collisions
-    # impossible; same-user processes still share.
-    uid = getattr(os, "geteuid", lambda: 0)()
-    digest = hashlib.md5(
-        f"{sf_dir}|{fmt}|v{_FIXTURE_VERSION}|uid{uid}|"
-        f"{TRANSPORT_SCHEMA.json()}".encode()
-    ).hexdigest()[:8]
-    out = os.path.join(tempfile.gettempdir(), f"envelope_rollup_{digest}")
-    app = spark.sparkContext.applicationId
-    if (app, sf_dir, fmt) in _ENVELOPE_FIXTURES:
-        return _ENVELOPE_FIXTURES[(app, sf_dir, fmt)]
 
-    def complete(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
 
-    if not complete(out):
-        import shutil
-
-        tmp = f"{out}.tmp-{os.getpid()}"
-        write_probe_events(ev, tmp, fmt=fmt, mode="overwrite")
-        # Serialize every mutation of the stable path under flock:
-        # complete dirs are immutable-by-convention (reused, never
-        # renamed or deleted), so the only hazard is two writers racing
-        # the incomplete-leftover replacement — the lock closes the
-        # check-then-replace window in which one writer's just-renamed
-        # COMPLETE fixture could be rmtree'd by the other. flock is
-        # advisory but every writer is this function, and the OS drops
-        # it on process death (no stale-lockfile deadlock).
-        try:
-            import fcntl
-
-            with open(f"{out}.lock", "w") as lockf:
-                fcntl.flock(lockf, fcntl.LOCK_EX)
-                try:
-                    if complete(out):
-                        # another writer finished while we derived
-                        shutil.rmtree(tmp, ignore_errors=True)
-                    else:
-                        if os.path.exists(out):
-                            # incomplete leftover (crashed run): move it
-                            # aside atomically, then reclaim the path
-                            stale = f"{out}.stale-{os.getpid()}"
-                            os.rename(out, stale)
-                            shutil.rmtree(stale, ignore_errors=True)
-                        os.rename(tmp, out)
-                finally:
-                    fcntl.flock(lockf, fcntl.LOCK_UN)
-        except (OSError, ImportError):
-            # ImportError: no fcntl on non-POSIX hosts — the lock-free
-            # private-copy fallback below is still correct there.
-            # lock or swap failed (exotic filesystem, lost race against
-            # a non-locking peer) — fall back to whichever copy is
-            # complete; the private tmp dir is correct, merely unshared
-            if complete(out):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                out = tmp
-    _ENVELOPE_FIXTURES[(app, sf_dir, fmt)] = out
-    return out
+def _envelope_roundtrip_rollup(
+    spark: SparkSession, sf_dir: str, fmt: str
+) -> DataFrame:
+    """Land the envelope events as ``fmt`` in a temporary directory
+    through :func:`write_probe_events`, ingest them back through
+    :func:`read_probe_events`, and roll them up — materialized before
+    the directory goes, so the query leaves no files behind."""
+    with tempfile.TemporaryDirectory(prefix="envelope_") as tmp:
+        out = os.path.join(tmp, "events")
+        write_probe_events(_envelope_events(spark, sf_dir), out, fmt=fmt)
+        return finish_with(
+            _envelope_rollup_agg(read_probe_events(spark, out, fmt=fmt))
+        )
 
 
 def _envelope_rollup_agg(landed: DataFrame) -> DataFrame:
@@ -478,9 +388,7 @@ def _register_envelope_rollup() -> None:
         replays the derivation + rollup WITHOUT the write/read cycle —
         a hash mismatch means the adapter corrupted a value in
         transit."""
-        out = _envelope_fixture(spark, sf_dir)
-        landed = read_probe_events(spark, out, fmt="json")
-        return _envelope_rollup_agg(landed)
+        return _envelope_roundtrip_rollup(spark, sf_dir, "json")
 
     @register(
         "envelope_rollup_csv",
@@ -500,9 +408,7 @@ def _register_envelope_rollup() -> None:
         (VERDICT r7 item 5). Same rollup, same oracle as
         ``envelope_rollup``: a hash mismatch means the CSV write/read
         cycle corrupted a value in transit."""
-        out = _envelope_fixture(spark, sf_dir, fmt="csv")
-        landed = read_probe_events(spark, out, fmt="csv")
-        return _envelope_rollup_agg(landed)
+        return _envelope_roundtrip_rollup(spark, sf_dir, "csv")
 
     @register(
         "envelope_rollup_parquet",
@@ -520,9 +426,7 @@ def _register_envelope_rollup() -> None:
         schema, '' -> NULL). Same rollup, same oracle as
         ``envelope_rollup``: a hash mismatch means the parquet
         write/read cycle corrupted a value in transit."""
-        out = _envelope_fixture(spark, sf_dir, fmt="parquet")
-        landed = read_probe_events(spark, out, fmt="parquet")
-        return _envelope_rollup_agg(landed)
+        return _envelope_roundtrip_rollup(spark, sf_dir, "parquet")
 
     @register(
         "envelope_rollup_orc",
@@ -537,9 +441,7 @@ def _register_envelope_rollup() -> None:
         :func:`write_probe_events` and ingested back through
         :func:`read_probe_events`. Same rollup, same oracle as
         ``envelope_rollup``."""
-        out = _envelope_fixture(spark, sf_dir, fmt="orc")
-        landed = read_probe_events(spark, out, fmt="orc")
-        return _envelope_rollup_agg(landed)
+        return _envelope_roundtrip_rollup(spark, sf_dir, "orc")
 
     @register(
         "streaming_envelope_rollup",
@@ -549,7 +451,8 @@ def _register_envelope_rollup() -> None:
     )
     def streaming_envelope_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The STREAMING half of the envelope adapter, driver-checked:
-        the same JSON-lines fixture ingested through
+        the same events landed as JSON-lines in a temporary directory
+        (removed once the stream has stopped) and ingested through
         :func:`stream_probe_events` (file-source micro-batches, same
         schema/options/normalization as the batch read by
         construction), aggregated with the SAME rollup
@@ -560,14 +463,16 @@ def _register_envelope_rollup() -> None:
             replay_to_memory,
         )
 
-        out = _envelope_fixture(spark, sf_dir)
-        return replay_to_memory(
-            spark,
-            sf_dir,
-            lambda scoped, _: _envelope_rollup_agg(
-                stream_probe_events(scoped, out, fmt="json")
-            ),
-        )
+        with tempfile.TemporaryDirectory(prefix="envelope_") as tmp:
+            out = os.path.join(tmp, "events")
+            write_probe_events(_envelope_events(spark, sf_dir), out)
+            return replay_to_memory(
+                spark,
+                sf_dir,
+                lambda scoped, _: _envelope_rollup_agg(
+                    stream_probe_events(scoped, out, fmt="json")
+                ),
+            )
 
 
 _register_envelope_rollup()
@@ -577,12 +482,11 @@ def stream_probe_events(
     spark: SparkSession,
     path: str,
     fmt: str = "json",
-    multiline: bool = True,
 ) -> DataFrame:
     """Streaming twin of :func:`read_probe_events` — same schema, same
-    options, same normalization, file-source micro-batches.
-    ``multiline`` carries the same CSV splittability trade-off as the
-    batch read (see :func:`read_probe_events`)."""
+    options, same normalization, file-source micro-batches. CSV reads
+    multi-line, the batch read's default (see
+    :func:`read_probe_events`)."""
     if fmt in ("parquet", "orc"):
         # a file STREAM cannot self-describe (schema must exist before
         # data) — pin the typed schema up front
@@ -591,6 +495,4 @@ def stream_probe_events(
             .schema(PROBE_EVENT_SCHEMA)
             .load(path)
         )
-    return _read(
-        spark.readStream, fmt, path, spark, streaming=True, multiline=multiline
-    )
+    return _read(spark.readStream, fmt, path, spark, streaming=True)

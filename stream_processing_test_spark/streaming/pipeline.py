@@ -282,7 +282,6 @@ def rate_events_stream(
     rows_per_batch: int = 100,
     start_epoch: int = 1_705_276_800,  # 2024-01-15 00:00:00 UTC
     advance_ms: int = 21_600_000,  # 6h per micro-batch
-    num_partitions: int = 4,
     max_value: int | None = None,
 ) -> DataFrame:
     """T1 beyond file replay: a ``rate-micro-batch``-source event stream
@@ -315,7 +314,7 @@ def rate_events_stream(
         .option("rowsPerBatch", rows_per_batch)
         .option("startTimestamp", start_epoch * 1000)
         .option("advanceMillisPerBatch", advance_ms)
-        .option("numPartitions", num_partitions)
+        .option("numPartitions", 4)
         .load()
     )
     if max_value is not None:
@@ -449,7 +448,6 @@ def finalize_to_dimension(
     dim_path: str,
     checkpoint_dir: str,
     watermark: str = "0 seconds",
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """T8: end-to-end day-close pipeline — stream events, window-score
     per source, upsert scores into the source dimension parquet via
@@ -479,7 +477,7 @@ def finalize_to_dimension(
     # record this conf, so runs with and without it share checkpoints.
     spark.conf.set(nodata, "false")
     try:
-        ev = events_stream(spark, events_path, max_files_per_trigger)
+        ev = events_stream(spark, events_path)
         scores = daily_rollup(ev, watermark).select(
             F.col("user_id").cast("long").alias("id"),
             "day",

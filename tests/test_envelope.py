@@ -364,44 +364,6 @@ def test_multiline_csv_is_one_task_per_file(spark, tmp_path):
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
 
 
-def test_envelope_fixture_dir_is_process_stable_and_version_keyed(spark):
-    """The fixture dir key is a stable digest (md5, not the per-process-
-    salted ``hash``) of (sf_dir, fmt, _FIXTURE_VERSION, euid, transport
-    schema) — so a re-run in a NEW process (same user) lands on the same
-    path, while a derivation/serialization change (version bump) or a
-    schema change lands on a FRESH path instead of silently reusing a
-    stale fixture written by an older build. The euid component keeps
-    two USERS from sharing a path whose .lock file only the first
-    creator's uid can reopen (ADVICE r8)."""
-    import hashlib
-    import os
-    import tempfile
-
-    from stream_processing_test_spark.sources.envelope import (
-        _FIXTURE_VERSION,
-        TRANSPORT_SCHEMA,
-        _envelope_fixture,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    p1 = _envelope_fixture(spark, sf)
-    assert p1 == _envelope_fixture(spark, sf)
-    uid = getattr(os, "geteuid", lambda: 0)()
-    digest = hashlib.md5(
-        f"{sf}|json|v{_FIXTURE_VERSION}|uid{uid}|"
-        f"{TRANSPORT_SCHEMA.json()}".encode()
-    ).hexdigest()[:8]
-    assert p1 == f"{tempfile.gettempdir()}/envelope_rollup_{digest}"
-    # no applicationId in the path: a new process computes the same dir
-    assert spark.sparkContext.applicationId not in p1
-    # a version bump changes the path
-    bumped = hashlib.md5(
-        f"{sf}|json|v{_FIXTURE_VERSION + 1}|uid{uid}|"
-        f"{TRANSPORT_SCHEMA.json()}".encode()
-    ).hexdigest()[:8]
-    assert bumped != digest
-
-
 def test_streaming_envelope_rollup_matches_batch(spark):
     """Driver-gate twin check (VERDICT r6 item 3): the streamed
     envelope fixture must roll up IDENTICALLY to the batch ingest —
@@ -438,57 +400,32 @@ def test_write_read_roundtrip_all_formats(spark, envelope_dirs, tmp_path):
         assert _canon(read_probe_events(spark, dest, fmt=fmt)) == want, fmt
 
 
-def test_envelope_fixture_reuses_complete_and_replaces_incomplete(
-    spark, tmp_path, monkeypatch
-):
-    """Cross-process safety contract: a COMPLETE fixture (_SUCCESS
-    marker) is reused untouched — no overwrite may unlink files under
-    another process's in-flight scan; an INCOMPLETE leftover (crashed
-    run) is replaced with a fresh atomic write.
-
-    Scoped to a tmp_path-private tempdir (and the memo restored after):
-    the test deletes _SUCCESS and rewrites the fixture, which must not
-    race other tests (or a concurrent session on this host) lazily
-    scanning the SHARED /tmp fixture."""
+def test_envelope_queries_leave_no_files(spark, tmp_path, monkeypatch):
+    """Every envelope query lands its events in a temporary directory
+    that is gone when the query returns. With the tempdir pointed at
+    ``tmp_path``, all five queries (four batch formats and the stream)
+    match their shared DuckDB oracle row for row, so batch equals
+    stream, and nothing named ``envelope_*`` is left behind."""
     import os
     import tempfile
 
-    from stream_processing_test_spark.sources.envelope import (
-        _ENVELOPE_FIXTURES,
-        _envelope_fixture,
-    )
+    from stream_processing_test_spark.oracle import check_query, duckdb_connection
+    from stream_processing_test_spark.registry import all_queries
+    from tests.conftest import SF_SMALL
 
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    saved = dict(_ENVELOPE_FIXTURES)
-    _ENVELOPE_FIXTURES.clear()
-    try:
-        sf = "/root/testdata/sf0.001"
-        p = _envelope_fixture(spark, sf)
-        assert p.startswith(str(tmp_path))
-        assert os.path.exists(os.path.join(p, "_SUCCESS"))
-        stamp = os.path.getmtime(os.path.join(p, "_SUCCESS"))
-
-        # new process simulation: clear the session memo — the complete
-        # fixture on disk must be REUSED, not rewritten
-        _ENVELOPE_FIXTURES.clear()
-        assert _envelope_fixture(spark, sf) == p
-        assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == stamp
-
-        # crashed-run simulation: incomplete dir (no _SUCCESS) is
-        # replaced
-        _ENVELOPE_FIXTURES.clear()
-        os.remove(os.path.join(p, "_SUCCESS"))
-        got = _envelope_fixture(spark, sf)
-        assert got == p
-        assert os.path.exists(os.path.join(p, "_SUCCESS"))
-        # no tmp or stale dirs orphaned
-        parent, base = os.path.split(p)
-        leftovers = [
-            d
-            for d in os.listdir(parent)
-            if d.startswith(base + ".tmp-") or d.startswith(base + ".stale-")
-        ]
-        assert leftovers == []
-    finally:
-        _ENVELOPE_FIXTURES.clear()
-        _ENVELOPE_FIXTURES.update(saved)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    specs = all_queries()
+    con = duckdb_connection(SF_SMALL)
+    n_oracle = len(con.sql(specs["envelope_rollup"].oracle).fetchall())
+    assert n_oracle > 1
+    for name in (
+        "envelope_rollup",
+        "envelope_rollup_csv",
+        "envelope_rollup_parquet",
+        "envelope_rollup_orc",
+        "streaming_envelope_rollup",
+    ):
+        assert specs[name].oracle == specs["envelope_rollup"].oracle
+        status, detail, n_rows, _ = check_query(spark, con, specs[name], SF_SMALL)
+        assert (status, n_rows) == ("OK", n_oracle), (name, detail)
+    assert [d for d in os.listdir(tmp_path) if d.startswith("envelope_")] == []

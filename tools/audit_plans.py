@@ -63,9 +63,6 @@ def audit(plan: str) -> dict:
     )
     codegen = len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))
     py_stages = len(re.findall(r"(MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas)", plan))
-    global_window = bool(
-        re.search(r"Window[^\n]*\n(?:(?!partitionBy).)*", plan)
-    ) and "SinglePartition" in plan
     return {
         "scans": scans,
         "pushed": sum(1 for p in pushed if p.strip()),

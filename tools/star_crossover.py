@@ -1,10 +1,11 @@
 """Measure the min-label vs large-star/small-star crossover on
-high-diameter graphs — the evidence behind ``minlabel_budget`` in
-``connected_components(algorithm="auto")`` (llm/cluster.py).
+high-diameter graphs — the evidence behind ``MINLABEL_BUDGET`` in
+llm/cluster.py, the round count after which
+``connected_components(algorithm="auto")`` gives up on min-label.
 
 The ``auto`` path runs min-label (cheapest per round on the shallow
 clique graphs near-dup dedup produces) and falls back to the O(log d)
-star path after ``minlabel_budget`` rounds. That budget should be a
+star path after ``MINLABEL_BUDGET`` rounds. That budget should be a
 measured crossover, not a chosen constant: this tool times both
 algorithms on synthetic chain forests of fixed edge count and varying
 diameter, so the round where star overtakes min-label is read off a
