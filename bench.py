@@ -117,7 +117,7 @@ BENCH_EXCLUDED = {
     "resolution_classify": "per-row CASE dispatch; same map stage as headline per_source_rollup",
     "doc_fingerprint": "single JVM map pass over documents; same shape as token_count / doc_quality_score",
     "embedding_quantize_int8": "single JVM fold pass over embeddings; same scan+fold shape as headline embedding_norm_stats",
-    "ann_cosine_topk_int8": "broadcast brute-force twin of headline ann_cosine_topk over the dequantized column; identical search shape",
+    "ann_cosine_topk_int8": "runs headline ann_cosine_topk's search code (similarity.brute_topk) over the dequantized column",
     "ann_auto_topk": "measured-decision dispatcher (one parquet COUNT, then exactly one already-timed path: brute at bench corpora per auto_path); the decision surface itself is priced by BENCH_SCALE's qbatch arms",
     "pii_redact": "single regexp map pass over documents; same scan+map shape as headline token_count",
     "lang_id_ngram": "marker-count map pass over documents; same scan+map shape as headline token_count + doc_quality_score (slot ceded to the distinct ADC shape of ann_pq_topk)",

@@ -627,11 +627,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a production corpus by accident (the error names the LSH twin).
     The guard count is a 1-column scan, negligible next to the join
     it protects against."""
-    from stream_processing_test_spark.llm.similarity import _dot
+    from stream_processing_test_spark.llm.similarity import _dot, load_vectors
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     n = emb.select("vec_id").count()
     if n > EMBED_COSINE_MAX_ROWS:
         raise ValueError(
@@ -730,6 +728,7 @@ def embedding_lsh_pairs(
         auto_planes,
         auto_tables,
         hyperplane_tables,
+        rank_top_k,
     )
 
     if n_planes is None:
@@ -796,8 +795,6 @@ def embedding_lsh_pairs(
         )
     )
     if per_node_top_k is not None:
-        from pyspark.sql import Window
-
         rounded = F.round("raw_cos", 4).alias("cos_sim")
         # one row per (pair, direction) out of a single verify join —
         # explode, not a self-union, so the joins execute once
@@ -817,12 +814,7 @@ def embedding_lsh_pairs(
                 )
             ).alias("e")
         ).select("e.*")
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-        )
-        ranked = sym.withColumn(
-            "rk", F.row_number().over(w).cast("long")
-        ).filter(F.col("rk") <= per_node_top_k)
+        ranked = rank_top_k(sym, "vec_id", per_node_top_k)
         return finish_with(ranked, tables)
     result = pairs.filter(F.col("raw_cos") >= threshold).select(
         "doc_a", "doc_b", F.round("raw_cos", 4).alias("cos_sim")

@@ -18,6 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stream_processing_test_spark.llm.params import (
+    TOP_K,
+    VECTORS_SQL,
+    query_cte,
+    ranked_cte,
+    topk_select,
+)
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load
 
@@ -117,9 +124,8 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB: esig + per-vector scale CTEs, and the per-element
 # dequantized value (inside a list_transform over v, with `scale` in
 # scope from the s CTE)
-_SCALE_CTES = """esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+_SCALE_CTES = f"""esig AS (
+    {VECTORS_SQL}
 ),
 s AS (
     SELECT vec_id, v,
@@ -198,10 +204,9 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right like every fold in this package, so the DuckDB
     oracle replays bit-for-bit. Zero vectors take scale 0 with zero
     error (guarded CASE in both engines)."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    df = _with_scale(emb)
+    from stream_processing_test_spark.llm.similarity import load_vectors
+
+    df = _with_scale(load_vectors(spark, sf_dir))
     err = _guard_zero(F.transform("v", lambda x: x - _deq_elem(x)))
     df = df.withColumn("err", err)
     max_abs_err = F.aggregate(
@@ -218,10 +223,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _int8_topk_oracle() -> str:
-    from stream_processing_test_spark.llm.similarity import N_QUERIES, TOP_K
-
-    return f"""
+_INT8_TOPK_ORACLE = f"""
 WITH {_SCALE_CTES},
 deq AS (
     SELECT vec_id,
@@ -230,29 +232,21 @@ deq AS (
            END AS v
     FROM s
 ),
-q AS (SELECT vec_id AS query_id, v AS qv FROM deq WHERE vec_id < {N_QUERIES}),
+{query_cte("deq")},
 sims AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
            ROUND(list_cosine_similarity(q.qv, e.v), 4) AS cos_sim
     FROM q, deq e
     WHERE e.vec_id <> q.query_id
 ),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sims
-)
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {TOP_K}
+{ranked_cte("ranked", "sims", "query_id")}
+{topk_select("ranked", "query_id", TOP_K)}
 """
 
 
 @register(
     "ann_cosine_topk_int8",
-    oracle=_int8_topk_oracle(),
+    oracle=_INT8_TOPK_ORACLE,
     survey_ops="§7-similarity,⊘quantize",
     tier=0,
 )
@@ -266,45 +260,22 @@ def ann_cosine_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     number a pipeline owner trades the 4x footprint against).
 
     Dequantization q_i*scale happens at the expression (transform —
-    JVM-side, exact IEEE), so the search itself is the identical
-    broadcast-query/corpus-stream shape as the fp32 twin; in a real
-    lake the int8 column is what's stored and this transform is the
-    scan-time decode. The DuckDB oracle replays
-    quantize→dequantize→rank bit-for-bit."""
+    JVM-side, exact IEEE); the search itself is ``ann_cosine_topk``'s
+    search code (:func:`similarity.brute_topk`) run over the
+    dequantized frame instead of the fp32 one. In a real lake the
+    int8 column is what's stored and this transform is the scan-time
+    decode. The DuckDB oracle replays quantize→dequantize→rank
+    bit-for-bit."""
     from stream_processing_test_spark.llm.similarity import (
-        N_QUERIES,
-        TOP_K,
-        cosine,
+        brute_topk,
+        load_vectors,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    deq = _with_scale(emb).select(
+    deq = _with_scale(load_vectors(spark, sf_dir)).select(
         "vec_id",
         _guard_zero(F.transform("v", _deq_elem)).alias("v"),
     )
-    q = deq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    sims = (
-        deq.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return brute_topk(deq)
 
 
 SAMPLE_TARGET = 256  # diverse-sample size target; per-cluster quota =
@@ -328,8 +299,7 @@ def _diverse_oracle() -> str:
     lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {auto_lists_ctes()},
@@ -398,11 +368,10 @@ def embedding_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         auto_lists,
         cosine,
         kmeans_lists,
+        load_vectors,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     n = emb.select("vec_id").count()
     lists = auto_lists(n)
     quota = (SAMPLE_TARGET + lists - 1) // lists
@@ -515,8 +484,7 @@ v{t} AS (SELECT d, ROUND(w / nrm, 6) AS vd FROM w{t}, n{t})""")
     pieces = ",\n".join(steps)
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 tflat AS (
@@ -585,12 +553,11 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from stream_processing_test_spark.llm.similarity import (
         _dot,
+        load_vectors,
         train_sample,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     sample = sorted(
         (r["vec_id"], list(r["v"]))
         for r in train_sample(emb).collect()
@@ -655,8 +622,6 @@ def _mmr_greedy(pdf):
     import numpy as np
     import pandas as pd
 
-    from stream_processing_test_spark.llm.params import TOP_K
-
     pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
     m = len(pdf)
     v = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
@@ -698,8 +663,6 @@ def _mmr_oracle() -> str:
     kernel's first-max on id-sorted rows). The unroll is the Lloyd
     pattern for a greedy fixpoint; the selected-set union grows one
     CTE per step."""
-    from stream_processing_test_spark.llm.params import N_QUERIES, TOP_K
-
     lam, beta = MMR_LAMBDA, MMR_BETA
     steps = []
     for i in range(2, TOP_K + 1):
@@ -728,10 +691,9 @@ selall{i} AS MATERIALIZED (
     pieces = ",\n".join(steps)
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
-q AS (SELECT vec_id AS query_id, v AS qv FROM esig WHERE vec_id < {N_QUERIES}),
+{query_cte("esig")},
 pool AS MATERIALIZED (
     SELECT query_id, neighbor_id, rel FROM (
         SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -795,17 +757,15 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy's every argmax cross-engine."""
     from pyspark.sql import Window
 
-    from stream_processing_test_spark.llm.params import N_QUERIES
-    from stream_processing_test_spark.llm.similarity import cosine
+    from stream_processing_test_spark.llm.similarity import (
+        cosine,
+        load_vectors,
+        query_set,
+    )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    emb = load_vectors(spark, sf_dir)
     sims = (
-        emb.crossJoin(F.broadcast(q))
+        emb.crossJoin(F.broadcast(query_set(emb)))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -859,16 +819,8 @@ sym AS (
     UNION ALL
     SELECT doc_b AS vec_id, doc_a AS neighbor_id, cos_sim FROM verified
 ),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY vec_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sym
-)
-SELECT CAST(vec_id AS BIGINT) AS vec_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {KNN_GRAPH_K}
+{ranked_cte("ranked", "sym", "vec_id")}
+{topk_select("ranked", "vec_id", KNN_GRAPH_K)}
 """
 
 
@@ -939,11 +891,7 @@ sym AS (
     UNION ALL
     SELECT doc_b AS vec_id, doc_a AS neighbor_id, cos_sim FROM verified
 ),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY vec_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sym
-),
+{ranked_cte("ranked", "sym", "vec_id")},
 knn AS (
     SELECT vec_id, neighbor_id, cos_sim FROM ranked
     WHERE rk <= {KNN_GRAPH_K}

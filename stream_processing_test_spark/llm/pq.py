@@ -47,9 +47,12 @@ from stream_processing_test_spark.llm.params import (
     EMBED_DIM,
     N_QUERIES,
     TOP_K,
+    VECTORS_SQL,
+    probed_cte,
+    query_cte,
+    ranked_cte,
 )
 from stream_processing_test_spark.registry import register
-from stream_processing_test_spark.tables import load
 
 PQ_SUBS = 16  # subspaces (M in the paper)
 PQ_DSUB = EMBED_DIM // PQ_SUBS  # dims per subspace
@@ -656,11 +659,7 @@ exact AS (
     JOIN (SELECT vec_id, v FROM {q_rel}) q
       ON q.vec_id = s.query_id
 ),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM exact
-)
+{ranked_cte("ranked", "exact", "query_id")}
 SELECT CAST(query_id AS BIGINT) AS query_id,
        CAST(neighbor_id AS BIGINT) AS neighbor_id,
        cos_sim,{approx_col}
@@ -688,8 +687,7 @@ def _pq_oracle() -> str:
 
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {_rerank_cte()},
@@ -896,7 +894,11 @@ def _adc_rank(
     broadcast either way (16 B/query)."""
     from pyspark.sql import Window
 
-    from stream_processing_test_spark.llm.similarity import _norm, cosine
+    from stream_processing_test_spark.llm.similarity import (
+        _norm,
+        cosine,
+        rank_top_k,
+    )
 
     def maybe_b(df: DataFrame) -> DataFrame:
         return df if large_batch else F.broadcast(df)
@@ -930,13 +932,8 @@ def _adc_rank(
             F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
-        .select("query_id", "neighbor_id", "cos_sim", "approx_cos", "rk")
+    return rank_top_k(exact, "query_id", top_k).select(
+        "query_id", "neighbor_id", "cos_sim", "approx_cos", "rk"
     )
 
 
@@ -1093,8 +1090,7 @@ def _ivfpq_oracle() -> str:
 
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {_rerank_cte()},
@@ -1107,15 +1103,8 @@ codes AS (
     FROM pcodes p JOIN assign_final a USING (vec_id)
 ),
 lut AS ({lut_union}),
-q AS (SELECT vec_id AS query_id, v AS qv FROM esig WHERE vec_id < {N_QUERIES}),
-probed AS (
-    SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                            c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
-),
+{query_cte("esig")},
+{probed_cte(cents, N_PROBE, carry_qv=False)},
 adc AS (
     SELECT l.query_id, codes.vec_id,
            SUM(l.ipart) AS idot, SUM(l.cnsq) AS insq
@@ -1142,13 +1131,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only those lists, and the auto_rerank shortlist is exactly
     re-ranked. See :func:`ivfpq_topk` for the composition's scale
     story and the policy defaults."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    from stream_processing_test_spark.llm.similarity import (
+        load_vectors,
+        query_set,
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivfpq_topk(emb, q)
+
+    emb = load_vectors(spark, sf_dir)
+    return ivfpq_topk(emb, query_set(emb))
 
 
 @register(
@@ -1167,10 +1156,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression/scale story and the oracle-parity design (driver-local
     bounded training, 6-decimal rounding bridges, associative integer
     ADC)."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    from stream_processing_test_spark.llm.similarity import (
+        load_vectors,
+        query_set,
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return pq_topk(emb, q)
+
+    emb = load_vectors(spark, sf_dir)
+    return pq_topk(emb, query_set(emb))

@@ -24,7 +24,7 @@ Two paths, mirroring the dedup ladder:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.llm.hashing import (
@@ -39,13 +39,20 @@ from stream_processing_test_spark.session import (
 )
 from stream_processing_test_spark.tables import load
 
-# TOP_K / N_QUERIES / EMBED_DIM live in the leaf ``params`` module
-# (see its docstring for the r14 import-order story) and are
-# re-exported here — every established import site keeps working.
+# TOP_K / N_QUERIES / EMBED_DIM and the oracles' top-k SQL live in the
+# leaf ``params`` module (see its docstring for the r14 import-order
+# story); the constants are re-exported here — every established
+# import site keeps working.
 from stream_processing_test_spark.llm.params import (  # noqa: F401
     EMBED_DIM,
     N_QUERIES,
     TOP_K,
+    VECTORS_SQL,
+    probed_cte,
+    probed_sims_cte,
+    query_cte,
+    ranked_cte,
+    topk_select,
 )
 
 
@@ -66,6 +73,56 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# The Spark side of the top-k contract (the SQL side is in ``params``).
+
+
+def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the embeddings table with ``v`` widened to double."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
+def query_set(emb: DataFrame) -> DataFrame:
+    """(query_id, qv): the registered query set of a (vec_id, v) frame."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def tie_break() -> tuple[Column, Column]:
+    """The top-k order: rounded cosine DESC, neighbor_id ASC — the
+    cross-engine determinism rule the oracles' ROW_NUMBER replays."""
+    return F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+
+
+def rank_top_k(sims: DataFrame, part: str, k: int) -> DataFrame:
+    """The ``k`` best ``sims`` rows per ``part`` under
+    :func:`tie_break`, numbered 1.. as the long column ``rk``."""
+    w = Window.partitionBy(part).orderBy(*tie_break())
+    return (
+        sims.withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= k)
+    )
+
+
+def brute_topk(emb: DataFrame) -> DataFrame:
+    """Exact top-k of the query set of ``emb`` (vec_id, v) against all
+    of ``emb``: the query rows are broadcast, so the corpus streams
+    through one task wave with no shuffle before the rank."""
+    q = query_set(emb)
+    sims = (
+        emb.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
+        )
+    )
+    return rank_top_k(sims, "query_id", TOP_K)
+
+
 _BRUTE_ORACLE = f"""
 WITH q AS (
     SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}
@@ -76,16 +133,8 @@ WITH q AS (
                list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 4) AS cos_sim
     FROM q, embeddings e
     WHERE e.vec_id <> q.query_id
-), ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sims
-)
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {TOP_K}
+), {ranked_cte("ranked", "sims", "query_id")}
+{topk_select("ranked", "query_id", TOP_K)}
 """
 
 
@@ -99,30 +148,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision and ROUNDED to 4 decimals BEFORE ranking in both Spark
     and DuckDB, with neighbor_id as tie-break — float noise in the
     last ulp cannot reorder the top-k."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    sims = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return brute_topk(load_vectors(spark, sf_dir))
 
 
 N_TABLES = 16  # independent LSH tables (OR-amplification: recall)
@@ -371,8 +397,7 @@ def bucket_ctes(
     else:
         gen_tables, table_bound = n_tables, "TRUE"
     return f"""esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {np_cte}{plane_weights_cte(gen_tables, gen_planes, EMBED_DIM)},
 buckets AS (
@@ -403,16 +428,8 @@ sims AS (
     JOIN esig eq ON eq.vec_id = c.query_id
     JOIN esig en ON en.vec_id = c.neighbor_id
 ),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sims
-)
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {TOP_K}
+{ranked_cte("ranked", "sims", "query_id")}
+{topk_select("ranked", "query_id", TOP_K)}
 """
 
 
@@ -459,9 +476,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy curve; the scale ladder measures planted-pair recall at the
     operating points the rule selects up through the 100 M-row regime
     (BENCH_SCALE.json)."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     n_planes = auto_planes(emb.select("vec_id").count())
     n_tables = auto_tables(n_planes)
     # persisted: the query side and the corpus side of the bucket join
@@ -490,28 +505,16 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-verify: join the vectors back onto the deduped id pairs —
     # the query side is N_QUERIES rows (broadcast), the neighbor side
     # is an equi-join against the corpus.
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
     sims = (
         cand.join(emb, cand.neighbor_id == emb.vec_id)
-        .join(F.broadcast(qv), "query_id")
+        .join(F.broadcast(query_set(emb)), "query_id")
         .select(
             "query_id",
             "neighbor_id",
             F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    result = (
-        sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= TOP_K)
-    )
-    return finish_with(result, tables)
+    return finish_with(rank_top_k(sims, "query_id", TOP_K), tables)
 
 
 # ---------------------------------------------------------------------------
@@ -1105,12 +1108,10 @@ def route_queries(
     """Query→list routing shared by :func:`ivf_topk` and the IVF-PQ
     composition (pq.ivfpq_topk): each query keeps its ``n_probe`` most-similar coarse
     centroids (round-6 cosine desc, list_id asc — the exact tie-break
-    the oracles' ROW_NUMBER replays). ``centroids`` is the k-row
+    ``params.probed_cte`` replays). ``centroids`` is the k-row
     driver-held relation from :func:`kmeans_lists`, so the crossJoin
     is |queries|×k broadcast rows. Returns (query_id, list_id) plus
     ``qv`` when ``carry_qv`` (the probed-search form)."""
-    from pyspark.sql import Window
-
     keep = ["query_id", "qv", "list_id"] if carry_qv else ["query_id", "list_id"]
     w_route = Window.partitionBy("query_id").orderBy(
         F.col("c_sim").desc(), F.col("list_id").asc()
@@ -1156,8 +1157,6 @@ def ivf_topk(
     ordering, so results and oracle are unchanged. Default off: at
     interactive batch sizes the extra exchanges cost more than the
     skew they relieve."""
-    from pyspark.sql import Window
-
     assign, centroids = kmeans_lists(emb, k=n_lists)
     # centroids is a driver-held broadcast LocalRelation (k rows — see
     # kmeans_lists), so query routing no longer hangs off the
@@ -1187,15 +1186,8 @@ def ivf_topk(
             F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    from stream_processing_test_spark.session import finish_with
-
     if large_batch:
-        wl = Window.partitionBy("query_id", "salt").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-        )
+        wl = Window.partitionBy("query_id", "salt").orderBy(*tie_break())
         sims = (
             sims.withColumn(
                 "salt", F.pmod(F.hash("neighbor_id"), F.lit(32))
@@ -1204,11 +1196,7 @@ def ivf_topk(
             .filter(F.col("rk1") <= top_k)
             .drop("salt", "rk1")
         )
-    result = (
-        sims.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= top_k)
-    )
-    return finish_with(result)
+    return finish_with(rank_top_k(sims, "query_id", top_k))
 
 
 def _ivf_lloyd_ctes(n_lists: int | None = IVF_LISTS) -> tuple[str, str]:
@@ -1318,36 +1306,15 @@ def _ivf_oracle() -> str:
 
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {lloyd},
-q AS (SELECT vec_id AS query_id, v AS qv FROM esig WHERE vec_id < {N_QUERIES}),
-probed AS (
-    SELECT query_id, qv, list_id FROM (
-        SELECT q.query_id, q.qv, c.list_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                            c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
-),
-sims AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos_sim
-    FROM assign_final a JOIN probed p USING (list_id)
-    WHERE a.vec_id <> p.query_id
-),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sims
-)
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {TOP_K}
+{query_cte("esig")},
+{probed_cte(cents, N_PROBE, carry_qv=True)},
+{probed_sims_cte("sims")},
+{ranked_cte("ranked", "sims", "query_id")}
+{topk_select("ranked", "query_id", TOP_K)}
 """
 
 
@@ -1395,13 +1362,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plain parameter of :func:`ivf_topk` / :func:`pq.ivfpq_topk` for
     deployments that choose differently.
     """
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_topk(emb, q)
+    emb = load_vectors(spark, sf_dir)
+    return ivf_topk(emb, query_set(emb))
 
 
 def _ivf_auto_probe_oracle() -> str:
@@ -1413,38 +1375,17 @@ def _ivf_auto_probe_oracle() -> str:
     lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {auto_lists_ctes()},
 {auto_probe_ctes()},
 {lloyd},
-q AS (SELECT vec_id AS query_id, v AS qv FROM esig WHERE vec_id < {N_QUERIES}),
-probed AS (
-    SELECT query_id, qv, list_id FROM (
-        SELECT q.query_id, q.qv, c.list_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                            c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= (SELECT probes FROM npr)
-),
-sims AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos_sim
-    FROM assign_final a JOIN probed p USING (list_id)
-    WHERE a.vec_id <> p.query_id
-),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM sims
-)
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {TOP_K}
+{query_cte("esig")},
+{probed_cte(cents, "(SELECT probes FROM npr)", carry_qv=True)},
+{probed_sims_cte("sims")},
+{ranked_cte("ranked", "sims", "query_id")}
+{topk_select("ranked", "query_id", TOP_K)}
 """
 
 
@@ -1469,15 +1410,11 @@ def ann_ivf_auto_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolves to 16 and auto_probe(16) = N_PROBE = 2, so the selection
     and hashes coincide with ``ann_ivf_topk`` — the rules, not the
     fixture plans, are what this query registers."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    emb = load_vectors(spark, sf_dir)
+    lists = auto_lists(emb.select("vec_id").count())
+    return ivf_topk(
+        emb, query_set(emb), n_lists=lists, n_probe=auto_probe(lists)
     )
-    n = emb.select("vec_id").count()
-    lists = auto_lists(n)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_topk(emb, q, n_lists=lists, n_probe=auto_probe(lists))
 
 
 # --------------------------------------------------------------------
@@ -1662,8 +1599,7 @@ def _auto_oracle(
     )
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    {VECTORS_SQL}
 ),
 {_train_shift_ctes()},
 {auto_lists_ctes()},
@@ -1679,26 +1615,10 @@ decision AS (
     FROM nv, nl, npr
 ),
 {lloyd},
-q AS (SELECT vec_id AS query_id, v AS qv FROM esig WHERE vec_id < {N_QUERIES}),
-probed AS (
-    SELECT query_id, qv, list_id FROM (
-        SELECT q.query_id, q.qv, c.list_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                            c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= (SELECT probes FROM npr)
-),
-e_sims AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos_sim
-    FROM assign_final a JOIN probed p USING (list_id)
-    WHERE a.vec_id <> p.query_id
-),
-e_ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM e_sims
-),
+{query_cte("esig")},
+{probed_cte(cents, "(SELECT probes FROM npr)", carry_qv=True)},
+{probed_sims_cte("e_sims")},
+{ranked_cte("e_ranked", "e_sims", "query_id")},
 {pieces_sql},
 pcodes AS ({codes_union}),
 codes AS (
@@ -1721,26 +1641,14 @@ b_sims AS (
            ROUND(list_cosine_similarity(q.qv, e.v), 4) AS cos_sim
     FROM q, esig e WHERE e.vec_id <> q.query_id
 ),
-b_ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM b_sims
-),
+{ranked_cte("b_ranked", "b_sims", "query_id")},
 {adc_tail}
 UNION ALL
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM e_ranked
-WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'ivf_exact'
+{topk_select("e_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM decision) = 'ivf_exact'
 UNION ALL
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM b_ranked
-WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'brute'
+{topk_select("b_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM decision) = 'brute'
 """
 
 
@@ -1827,12 +1735,8 @@ def _auto_ivf_exec(
     probes = auto_probe(lists)
     probed_rows = N_QUERIES * probes * ((n_rows + lists - 1) // lists)
     if probed_rows > adc_rows:
-        emb = load(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
+        emb = load_vectors(spark, sf_dir)
+        q = query_set(emb)
         if probed_rows > spill_rows:
             return _append_windowed(
                 emb, q, n_rows, N_QUERIES, window_queries, n_probe=probes
@@ -1938,8 +1842,7 @@ def _append_oracle(
     )
     return f"""
 WITH esig AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings WHERE vec_id % {INGEST_MOD} <> 0
+    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} <> 0
 ),
 {_train_shift_ctes(count_from="esig")},
 {auto_lists_ctes()},
@@ -1968,29 +1871,12 @@ rr AS (
 ),
 {lloyd},
 qsrc AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings WHERE vec_id % {INGEST_MOD} = 0
+    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} = 0
 ),
 q AS (SELECT vec_id AS query_id, v AS qv FROM qsrc),
-probed AS (
-    SELECT query_id, qv, list_id FROM (
-        SELECT q.query_id, q.qv, c.list_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY ROUND(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                            c.list_id ASC) AS pr
-        FROM q CROSS JOIN {cents} c) WHERE pr <= {N_PROBE}
-),
-e_sims AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos_sim
-    FROM assign_final a JOIN probed p USING (list_id)
-    WHERE a.vec_id <> p.query_id
-),
-e_ranked AS (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-    FROM e_sims
-),
+{probed_cte(cents, N_PROBE, carry_qv=True)},
+{probed_sims_cte("e_sims")},
+{ranked_cte("e_ranked", "e_sims", "query_id")},
 {pieces_sql},
 pcodes AS ({codes_union}),
 codes AS (
@@ -2010,12 +1896,8 @@ adc AS (
 ),
 {adc_tail}
 UNION ALL
-SELECT CAST(query_id AS BIGINT) AS query_id,
-       CAST(neighbor_id AS BIGINT) AS neighbor_id,
-       cos_sim,
-       CAST(rk AS BIGINT) AS rk
-FROM e_ranked
-WHERE rk <= {TOP_K} AND (SELECT path FROM decision) = 'exact'
+{topk_select("e_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM decision) = 'exact'
 """
 
 
@@ -2077,11 +1959,7 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture scale by forced-dispatch pytests (the registered
     crossovers never trip below ladder scale).
     """
-    from stream_processing_test_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     is_new = F.col("vec_id") % INGEST_MOD == 0
     base = emb.filter(~is_new)
     q = emb.filter(is_new).select(

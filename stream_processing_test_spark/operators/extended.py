@@ -292,7 +292,7 @@ def props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SESSION_GAP_MIN = 30
 
-_SESSION_ORACLE = f"""
+SESSION_ORACLE = f"""
 WITH seq AS (
     SELECT user_id, ts, value,
            CASE WHEN lag(ts) OVER w IS NULL
@@ -314,17 +314,12 @@ GROUP BY user_id, sess_seq
 """
 
 
-@register("session_windows", oracle=_SESSION_ORACLE, survey_ops="⊘session,T2")
-def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: events closer than SESSION_GAP_MIN
-    minutes merge into one session per user. Uses Spark's native
-    ``session_window`` (merging-interval state logic in the engine, no
-    self-join); the oracle is the classic gaps-and-islands SQL, so the
-    check also proves the two formulations agree. Works identically
-    over a stream (same expression + watermark)."""
-    ev = load(spark, sf_dir, "events")
+def session_rollup(events: DataFrame) -> DataFrame:
+    """(user_id, session_start, n_events, total_value) per gap session
+    of ``events`` — batch or stream; a stream sets its watermark
+    first."""
     return (
-        ev.groupBy(
+        events.groupBy(
             "user_id",
             F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("sw"),
         )
@@ -341,6 +336,18 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
+
+
+@register("session_windows", oracle=SESSION_ORACLE, survey_ops="⊘session,T2")
+def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessionization: events closer than SESSION_GAP_MIN
+    minutes merge into one session per user. Uses Spark's native
+    ``session_window`` (merging-interval state logic in the engine, no
+    self-join); the oracle is the classic gaps-and-islands SQL, so the
+    check also proves the two formulations agree. The same
+    :func:`session_rollup` runs over a stream in
+    ``streaming_session_windows``."""
+    return session_rollup(load(spark, sf_dir, "events"))
 
 
 # Time-decay scoring: reference epoch (2024-02-01 UTC, after the

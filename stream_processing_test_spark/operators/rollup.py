@@ -20,7 +20,7 @@ props ⇒ the dynamic JSON envelope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.functions.scalars import (
@@ -226,15 +226,35 @@ def error_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESOLUTION_ORACLE = """
+# The 'WxH' test column both resolution queries derive from the events
+# envelope's k: the value of the first bound k is under, else _WXH_ELSE.
+_WXH_LADDER = (
+    (10, "0x0"),
+    (25, ""),
+    (45, "1920x1080"),
+    (60, "1280x720"),
+    (70, "1111x999"),
+    (80, "3840x2160"),
+)
+_WXH_ELSE = "640x480"
+_WXH_SQL = (
+    "CASE "
+    + "\n                ".join(f"WHEN k < {b} THEN '{v}'" for b, v in _WXH_LADDER)
+    + f"\n                ELSE '{_WXH_ELSE}' END"
+)
+
+
+def _wxh(k: Column) -> Column:
+    """The Spark twin of ``_WXH_SQL``."""
+    out = F  # F.when opens the chain, Column.when extends it
+    for bound, wxh in _WXH_LADDER:
+        out = out.when(k < bound, wxh)
+    return out.otherwise(_WXH_ELSE)
+
+
+_RESOLUTION_ORACLE = f"""
 WITH derived AS (
-    SELECT CASE WHEN k < 10 THEN '0x0'
-                WHEN k < 25 THEN ''
-                WHEN k < 45 THEN '1920x1080'
-                WHEN k < 60 THEN '1280x720'
-                WHEN k < 70 THEN '1111x999'
-                WHEN k < 80 THEN '3840x2160'
-                ELSE '640x480' END AS video_resolution
+    SELECT {_WXH_SQL} AS video_resolution
     FROM (SELECT CAST(regexp_extract(props, '"k": (\\d+)', 1) AS INT) AS k FROM events)
 ), classified AS (
     SELECT video_resolution,
@@ -270,15 +290,7 @@ def resolution_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events")
     k = F.regexp_extract("props", r'"k": (\d+)', 1).cast("int")
-    wxh = (
-        F.when(k < 10, "0x0")
-        .when(k < 25, "")
-        .when(k < 45, "1920x1080")
-        .when(k < 60, "1280x720")
-        .when(k < 70, "1111x999")
-        .when(k < 80, "3840x2160")
-        .otherwise("640x480")
-    )
+    wxh = _wxh(k)
     classified = ev.select(
         wxh.alias("video_resolution"),
         classify_resolution(wxh).alias("resolution_type"),
@@ -295,16 +307,10 @@ def resolution_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ATTR_ORACLE = """
+_ATTR_ORACLE = f"""
 WITH attrs AS (
     SELECT user_id, event_id,
-           CASE WHEN k < 10 THEN '0x0'
-                WHEN k < 25 THEN ''
-                WHEN k < 45 THEN '1920x1080'
-                WHEN k < 60 THEN '1280x720'
-                WHEN k < 70 THEN '1111x999'
-                WHEN k < 80 THEN '3840x2160'
-                ELSE '640x480' END AS video_resolution,
+           {_WXH_SQL} AS video_resolution,
            CASE WHEN k % 7 < 2 THEN '' ELSE 'proto' || CAST(k % 7 AS VARCHAR) END AS protocol,
            CASE WHEN k % 5 = 0 THEN '' ELSE CAST(400 + k * 3 AS VARCHAR) END AS bitrate
     FROM (SELECT user_id, event_id,

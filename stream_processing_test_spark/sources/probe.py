@@ -34,7 +34,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stream_processing_test_spark.schemas import ERROR_CODES, RESOLUTION_MAP
+from stream_processing_test_spark.schemas import (
+    ERROR_CODES,
+    PROBE_EVENT_SCHEMA,
+    RESOLUTION_MAP,
+)
 
 # One probe outcome per source; field set mirrors PROBE_EVENT_SCHEMA
 # minus created_time (stamped at emit, like StreamTest.cpp:296).
@@ -250,15 +254,6 @@ def ffprobe_prober(
     return {"item": 0, "return_value": "", **meta}
 
 
-PROBE_RESULT_SCHEMA = (
-    "url_id STRING, flow_address STRING, item INT, return_value STRING, "
-    "lag_details STRING, streaming_protocol STRING, bitrate STRING, "
-    "stream_length STRING, video_format STRING, video_resolution STRING, "
-    "audio_format STRING, audio_sampling_rate STRING, "
-    "created_time TIMESTAMP, target_matching_id STRING, target_matching STRING"
-)
-
-
 _CANCELLED = {"item": 1012, "return_value": "cancelled", **_EMPTY_META}
 _WEDGED = {"item": 1012, "return_value": "wedged", **_EMPTY_META}
 
@@ -320,6 +315,7 @@ def probe_sources(
 
     ensure_package_shipped(sources.sparkSession)
     stamp = created_time or datetime.now(timezone.utc).replace(tzinfo=None)
+    cols = PROBE_EVENT_SCHEMA.fieldNames()
 
     def one(url_id: str, url: str) -> dict:
         if stop is not None and stop():
@@ -343,10 +339,9 @@ def probe_sources(
                 pdf["target_matching_id"].astype(str).to_numpy()
             )
             out["target_matching"] = pdf["target_matching"].astype(str).to_numpy()
-            cols = [c.split()[0] for c in PROBE_RESULT_SCHEMA.split(", ")]
             yield out[cols]
 
-    return sources.mapInPandas(op, schema=PROBE_RESULT_SCHEMA)
+    return sources.mapInPandas(op, schema=PROBE_EVENT_SCHEMA)
 
 
 from stream_processing_test_spark.registry import register  # noqa: E402

@@ -42,6 +42,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stream_processing_test_spark.functions.scalars import availability_score
+from stream_processing_test_spark.operators.extended import (
+    SESSION_ORACLE,
+    session_rollup,
+)
 from stream_processing_test_spark.operators.rollup import SCORES_ORACLE
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load, normalize_event_ts
@@ -501,38 +505,17 @@ def finalize_to_dimension(
                 spark.conf.set(k, v)
 
 
-_STREAM_SESSIONS_ORACLE = """
-WITH seq AS (
-    SELECT user_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                  OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_sess
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), sess AS (
-    SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS UNBOUNDED PRECEDING) AS sess_seq
-    FROM seq
-)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       ROUND(SUM(value), 4) AS total_value
-FROM sess GROUP BY user_id, sess_seq
-"""
-
-
 @register(
     "streaming_session_windows",
-    oracle=_STREAM_SESSIONS_ORACLE,
+    oracle=SESSION_ORACLE,
     survey_ops="T2,T5,⊘session",
     tier=2,
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization AS A STREAM: the same 30-minute
-    ``session_window`` expression as the batch ``session_windows``
-    query, run in append mode with a watermark over the replayed
-    events — proven equal to the batch gaps-and-islands oracle.
+    """Gap sessionization AS A STREAM: the batch ``session_windows``
+    query's :func:`session_rollup`, run in append mode with a
+    watermark over the replayed events — checked against the same
+    gaps-and-islands oracle.
 
     Append-mode session windows only emit once the watermark passes a
     session's close, and a finite replay's watermark stops at the last
@@ -544,25 +527,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def sessions(_, events):
-        return (
-            events()
-            .withWatermark("ts", "0 seconds")
-            .groupBy(
-                "user_id", F.session_window("ts", "30 minutes").alias("sw")
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 4).alias("total_value"),
-            )
-            .select(
-                "user_id",
-                F.date_format(
-                    F.col("sw.start"), "yyyy-MM-dd HH:mm:ss"
-                ).alias("session_start"),
-                "n_events",
-                "total_value",
-            )
-        )
+        return session_rollup(events().withWatermark("ts", "0 seconds"))
 
     return replay_to_memory(
         spark, sf_dir, sessions, "append", sentinels=[(-1, "sentinel")]
