@@ -340,17 +340,26 @@ def _with_cluster_sizes(comp: DataFrame) -> DataFrame:
     )
 
 
-_CLUSTER_ORACLE = f"""
-WITH RECURSIVE {NGRAM_PAIR_CTES},
-edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
+def cc_walk_ctes(pairs: str) -> str:
+    """The DuckDB twin of :func:`connected_components` for an oracle
+    (under ``WITH RECURSIVE``): ``edges`` — both directions of the
+    ``pairs`` relation's (doc_a, doc_b) — its ``nodes``, and the
+    recursive min-label ``walk(node, lbl)``. Each oracle's ``comp``
+    takes ``MIN(lbl)`` per node."""
+    return f"""edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM {pairs}
           UNION ALL
-          SELECT doc_b, doc_a FROM pairs),
+          SELECT doc_b, doc_a FROM {pairs}),
 nodes AS (SELECT DISTINCT e_src AS node FROM edges),
 walk(node, lbl) AS (
     SELECT node, node FROM nodes
     UNION
     SELECT e.e_dst, w.lbl FROM walk w JOIN edges e ON e.e_src = w.node
-),
+)"""
+
+
+_CLUSTER_ORACLE = f"""
+WITH RECURSIVE {NGRAM_PAIR_CTES},
+{cc_walk_ctes("pairs")},
 comp AS (SELECT node AS doc_id, MIN(lbl) AS component FROM walk GROUP BY node)
 SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
        CAST(c.component AS BIGINT) AS component,
@@ -403,15 +412,7 @@ def dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KEEP_ORACLE = f"""
 WITH RECURSIVE {NGRAM_PAIR_CTES},
-edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM pairs),
-nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-walk(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.e_dst, w.lbl FROM walk w JOIN edges e ON e.e_src = w.node
-),
+{cc_walk_ctes("pairs")},
 comp AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node)
 SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
        CAST(COALESCE(c.component, d.doc_id) AS BIGINT) AS component,
@@ -473,7 +474,7 @@ def _auto_broadcast_threshold_bytes(spark: SparkSession) -> int:
 
 
 def with_keep_verdict(
-    docs: DataFrame, comp: DataFrame, n_nodes: int | None = None
+    docs: DataFrame, comp: DataFrame, n_nodes: int
 ) -> DataFrame:
     """Append (component, keep) to a corpus frame via a left join
     against the clustered-node set — the map-side verdict shared by
@@ -483,23 +484,19 @@ def with_keep_verdict(
     The broadcast hint is size-GATED, never assumed: on real web-scale
     corpora near-dup dedup removes 30-50% of documents, so the
     clustered-node set is the SAME order as the corpus — a forced
-    broadcast of it would OOM every executor. ``comp`` is already
-    materialized (the component loop local-checkpoints it), so its row
-    count is a cheap block scan; the hint is applied only when the
-    measured size fits the session's own auto-broadcast byte budget
+    broadcast of it would OOM every executor. ``n_nodes`` is the
+    clustered-node count the caller's CC loop already measured (it
+    rides the last round's convergence job —
+    ``connected_components(with_count=True)``, r16), so the gate costs
+    no extra job; the hint is applied only when that size fits the
+    session's own auto-broadcast byte budget
     (``spark.sql.autoBroadcastJoinThreshold`` — needed because the
     planner sees a LogicalRDD with unknown stats and would never
     broadcast on its own). Over budget — or with broadcasting disabled
     — the join is left to the planner/AQE as an ordinary shuffle join.
     Layout-asserted for all three callers in test_scale_layout
     (hint under default conf, shuffle join with the threshold off)."""
-    # ``n_nodes`` (r16): callers that ran the CC loop already know the
-    # clustered-node count (it rides the last round's convergence job —
-    # connected_components(with_count=True)), so the size gate needs no
-    # extra count job; None keeps the original measured-count probe.
     thr = _auto_broadcast_threshold_bytes(docs.sparkSession)
-    if n_nodes is None:
-        n_nodes = comp.count()
     # one parameterized-SQL round trip (r16): same left join + coalesce
     # verdict, with the size-gated broadcast expressed as the SQL hint
     # (identical planner effect to F.broadcast on the build side)
@@ -522,15 +519,7 @@ TRAIN_PCT = 90  # train share of the 0-99 hash gate
 
 _SPLIT_ORACLE = f"""
 WITH RECURSIVE {NGRAM_PAIR_CTES},
-edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM pairs),
-nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-walk(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.e_dst, w.lbl FROM walk w JOIN edges e ON e.e_src = w.node
-),
+{cc_walk_ctes("pairs")},
 comp AS (SELECT node AS doc_id, MIN(lbl) AS component FROM walk GROUP BY node),
 alldocs AS (
     SELECT d.doc_id,

@@ -241,6 +241,7 @@ def vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_oracle() -> str:
+    from stream_processing_test_spark.llm.cluster import cc_walk_ctes
     from stream_processing_test_spark.llm.dedup import NGRAM_PAIR_CTES
     from stream_processing_test_spark.llm.sampling import _SAMPLE_CASE_SQL
     from stream_processing_test_spark.llm.text import (
@@ -250,15 +251,7 @@ def _curation_oracle() -> str:
 
     return f"""
 WITH RECURSIVE {NGRAM_PAIR_CTES},
-edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-          UNION ALL
-          SELECT doc_b, doc_a FROM pairs),
-nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-walk(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.e_dst, w.lbl FROM walk w JOIN edges e ON e.e_src = w.node
-),
+{cc_walk_ctes("pairs")},
 comp AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node),
 dropped AS (SELECT node AS doc_id FROM comp WHERE node <> component),
 {QUALITY_FEATS_CTE},

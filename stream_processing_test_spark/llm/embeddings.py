@@ -864,9 +864,10 @@ def embedding_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_clusters_oracle() -> str:
     """DuckDB replay: the k-NN graph chain (identical CTEs to the
     ``embedding_knn_graph`` oracle), mutual-edge filter at the shared
-    near-dup threshold, then the recursive min-label walk the
-    ``dup_clusters`` oracle established — transitivity checked
-    end-to-end, not assumed."""
+    near-dup threshold, then the recursive min-label walk
+    (:func:`cluster.cc_walk_ctes`) — transitivity checked end-to-end,
+    not assumed."""
+    from stream_processing_test_spark.llm.cluster import cc_walk_ctes
     from stream_processing_test_spark.llm.dedup import (
         EMBED_COSINE_THRESHOLD,
     )
@@ -903,15 +904,7 @@ mutual AS (
     WHERE a.vec_id < a.neighbor_id
       AND a.cos_sim >= {EMBED_COSINE_THRESHOLD}
 ),
-edges AS (SELECT doc_a AS e_src, doc_b AS e_dst FROM mutual
-          UNION ALL
-          SELECT doc_b, doc_a FROM mutual),
-nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-walk(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT e.e_dst, w.lbl FROM walk w JOIN edges e ON e.e_src = w.node
-),
+{cc_walk_ctes("mutual")},
 comp AS (SELECT node AS vec_id, MIN(lbl) AS component FROM walk GROUP BY node)
 SELECT CAST(c.vec_id AS BIGINT) AS vec_id,
        CAST(c.component AS BIGINT) AS component,

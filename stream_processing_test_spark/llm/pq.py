@@ -937,6 +937,30 @@ def _adc_rank(
     )
 
 
+def ivfadc_index(
+    emb: DataFrame, n_rows: int, n_lists: int
+) -> tuple[DataFrame, DataFrame, list[tuple[int, int, list[float]]]] | None:
+    """Build an IVFADC index over ``emb`` (vec_id, v) of ``n_rows``
+    rows: PQ codebooks, then an ``n_lists`` coarse quantizer, both
+    trained driver-local on the shared hash-capped sample, then ONE
+    fused corpus pass (:func:`pq_assign_encode_arrow`) — no separate
+    assignment pass, no checkpoint (the r12 attribution measured the
+    wide-row materialization as dead weight). Returns ``(enc,
+    centroids, rows)`` for :func:`ivfpq_search`, or None when either
+    model trained empty (an empty corpus, or a sample with no nonzero
+    vector: the quantizer skips zero norms, the codebooks do not) —
+    callers answer with :func:`_empty_topk`."""
+    from stream_processing_test_spark.llm.similarity import train_ivf_cents
+
+    rows = pq_codebooks(emb, n_rows=n_rows)
+    if not rows:
+        return None
+    cents, centroids = train_ivf_cents(emb, k=n_lists, n_rows=n_rows)
+    if not cents:
+        return None
+    return pq_assign_encode_arrow(emb, cents, rows), centroids, rows
+
+
 def ivfpq_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -975,7 +999,6 @@ def ivfpq_topk(
     from stream_processing_test_spark.llm.similarity import (
         N_PROBE,
         auto_lists,
-        train_ivf_cents,
     )
 
     if n_probe is None:
@@ -985,17 +1008,10 @@ def ivfpq_topk(
         rerank = auto_rerank(n_rows)
     if n_lists is None:
         n_lists = auto_lists(n_rows)
-    rows = pq_codebooks(emb, n_rows=n_rows)
-    if not rows:
+    index = ivfadc_index(emb, n_rows, n_lists)
+    if index is None:
         return _empty_topk(emb.sparkSession)
-    # train only (no separate assignment pass, no checkpoint — the r12
-    # attribution already measured the wide-row materialization as
-    # dead weight here): assignment and encode run FUSED in one Arrow
-    # pass below, so the corpus crosses the Python boundary once
-    cents, centroids = train_ivf_cents(emb, k=n_lists, n_rows=n_rows)
-    if not cents:
-        return _empty_topk(emb.sparkSession)
-    enc = pq_assign_encode_arrow(emb, cents, rows)
+    enc, centroids, rows = index
     return ivfpq_search(
         enc,
         centroids,
@@ -1015,10 +1031,10 @@ def ivfpq_search(
     rows: list[tuple[int, int, list[float]]],
     emb: DataFrame,
     queries: DataFrame,
-    n_probe: int | None = None,
+    n_probe: int,
+    rerank: int,
+    large_batch: bool,
     top_k: int = TOP_K,
-    rerank: int = PQ_RERANK,
-    large_batch: bool = False,
 ) -> DataFrame:
     """Search a STANDING IVFADC index: ``enc`` is the encoded index
     relation (vec_id, list_id, c0..c{M-1}) from
@@ -1032,13 +1048,8 @@ def ivfpq_search(
     training, assignment, or encode per window: exactly the 100 TB
     shape, where the index is a materialized table and searches are
     the recurring cost."""
-    from stream_processing_test_spark.llm.similarity import (
-        N_PROBE,
-        route_queries,
-    )
+    from stream_processing_test_spark.llm.similarity import route_queries
 
-    if n_probe is None:
-        n_probe = N_PROBE
     lutw = _lut_wide(queries, rows)
     probed = route_queries(queries, centroids, n_probe)
     if large_batch:
@@ -1069,42 +1080,22 @@ def ivfpq_search(
     )
 
 
-def _ivfpq_oracle() -> str:
-    """DuckDB oracle for the IVF-PQ composition: the IVF Lloyd chain
-    in DYNAMIC-list mode (``_ivf_lloyd_ctes(n_lists=None)`` bounded by
-    the ``nl`` CTE replaying :func:`similarity.auto_lists`) + the PQ
-    training/encode/LUT chain (:func:`_pq_train_ctes`) + the probed
-    ADC join + the shared shortlist/re-rank tail with the ``rr``
-    auto_rerank bound. Both policy rules and the training gate are
-    recomputed from the oracle's own COUNT(*) — the whole composition
-    replays at any corpus size."""
-    from stream_processing_test_spark.llm.similarity import (
-        N_PROBE,
-        _ivf_lloyd_ctes,
-        _train_shift_ctes,
-        auto_lists_ctes,
-    )
-
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
-    pieces_sql, codes_union, lut_union = _pq_train_ctes()
-
-    return f"""
-WITH esig AS (
-    {VECTORS_SQL}
-),
-{_train_shift_ctes()},
-{_rerank_cte()},
-{auto_lists_ctes()},
-{lloyd},
-{pieces_sql},
+def _probed_adc_ctes(q_src: str | None = None) -> str:
+    """The probed-ADC oracle chain shared by every IVF-PQ replay: the
+    PQ training/encode/LUT CTEs (:func:`_pq_train_ctes`, ``q_src`` as
+    there), each code row tagged with its ``assign_final`` list, and
+    ``adc(query_id, vec_id, idot, insq)`` — the integer ADC sums over
+    the lists the ``probed`` CTE routes each query to, self-pairs
+    excluded (the SQL twin of :func:`ivfpq_search`'s gather).
+    :func:`_adc_tail_sql` takes it from there."""
+    pieces_sql, codes_union, lut_union = _pq_train_ctes(q_src)
+    return f"""{pieces_sql},
 pcodes AS ({codes_union}),
 codes AS (
     SELECT p.vec_id, a.list_id, p.s, p.code
     FROM pcodes p JOIN assign_final a USING (vec_id)
 ),
 lut AS ({lut_union}),
-{query_cte("esig")},
-{probed_cte(cents, N_PROBE, carry_qv=False)},
 adc AS (
     SELECT l.query_id, codes.vec_id,
            SUM(l.ipart) AS idot, SUM(l.cnsq) AS insq
@@ -1114,7 +1105,37 @@ adc AS (
               AND l.s = codes.s AND l.code = codes.code
     WHERE codes.vec_id <> l.query_id
     GROUP BY 1, 2
+)"""
+
+
+def _ivfpq_oracle() -> str:
+    """DuckDB oracle for the IVF-PQ composition: the IVF Lloyd chain
+    in DYNAMIC-list mode (``_ivf_lloyd_ctes(n_lists=None)`` bounded by
+    the ``nl`` CTE replaying :func:`similarity.auto_lists`), the
+    N_PROBE routing, the probed ADC (:func:`_probed_adc_ctes`) and the
+    shared shortlist/re-rank tail with the ``rr`` auto_rerank bound.
+    Both policy rules and the training gate are recomputed from the
+    oracle's own COUNT(*) — the whole composition replays at any
+    corpus size."""
+    from stream_processing_test_spark.llm.similarity import (
+        N_PROBE,
+        _ivf_lloyd_ctes,
+        _train_shift_ctes,
+        auto_lists_ctes,
+    )
+
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
+    return f"""
+WITH esig AS (
+    {VECTORS_SQL}
 ),
+{_train_shift_ctes()},
+{_rerank_cte()},
+{auto_lists_ctes()},
+{lloyd},
+{query_cte("esig")},
+{probed_cte(cents, N_PROBE, carry_qv=False)},
+{_probed_adc_ctes()},
 {_adc_tail_sql("(SELECT rerank FROM rr)", TOP_K)}
 """
 

@@ -24,6 +24,8 @@ Two paths, mirroring the dedup ladder:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1556,207 +1558,10 @@ def auto_path(
     return "pq" if need_recall_floor else "ivf"
 
 
-def _auto_oracle(
-    adc_rows: int | None = None,
-    brute_max: int | None = None,
-) -> str:
-    """DuckDB oracle replaying :func:`auto_path`, the r15 ivf EXEC
-    rule, and every reachable branch: the decision CTE recomputes the
-    full ladder from the oracle's own counts — brute inside the
-    batch-bounded region, else the AUTO-PROBE ivf chain (dynamic
-    lists via ``nl``, probes via ``npr``) executed EXACTLY below the
-    probed-ADC crossover and as the IVF-PQ ADC composition above it
-    (:func:`_auto_ivf_exec`) — and each branch's final SELECT is
-    guarded by it, so at any corpus size the gate compares the SAME
-    path the Spark side chose. The ADC chain shares the quantizer and
-    the ``probed`` routing with the exact chain (same lists, same
-    probes — the exec rule changes the scoring engine, not the
-    candidates) and reuses :func:`pq._pq_train_ctes` +
-    :func:`pq._adc_tail_sql` with approx_cos dropped so all branches
-    project identical columns. ``adc_rows``/``brute_max`` are
-    parameters so the forced-exec pytest can regenerate the oracle
-    with a zero brute region / zero crossover and gate the ADC exec
-    arm cross-engine at fixture scale (the registered constants
-    never reach it below ~19M vectors). Brute CTEs are prefixed
-    ``b_`` to coexist with the shared chain's."""
-    from stream_processing_test_spark.llm.pq import (
-        _adc_tail_sql,
-        _pq_train_ctes,
-        _rerank_cte,
-    )
-
-    if adc_rows is None:
-        adc_rows = APPEND_ADC_ROWS
-    if brute_max is None:
-        brute_max = BRUTE_MAX_ROWS
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
-    pieces_sql, codes_union, lut_union = _pq_train_ctes()
-    adc_tail = _adc_tail_sql(
-        "(SELECT rerank FROM rr)",
-        TOP_K,
-        with_approx=False,
-        guard=" AND (SELECT path FROM decision) = 'ivf_adc'",
-    )
-    return f"""
-WITH esig AS (
-    {VECTORS_SQL}
-),
-{_train_shift_ctes()},
-{auto_lists_ctes()},
-{auto_probe_ctes()},
-{_rerank_cte()},
-decision AS (
-    SELECT CASE
-           WHEN n <= {brute_max} AND {N_QUERIES} < {INDEX_MIN_QUERIES}
-           THEN 'brute'
-           WHEN {N_QUERIES} * probes * ((n + lists - 1) // lists)
-                > {adc_rows}
-           THEN 'ivf_adc' ELSE 'ivf_exact' END AS path
-    FROM nv, nl, npr
-),
-{lloyd},
-{query_cte("esig")},
-{probed_cte(cents, "(SELECT probes FROM npr)", carry_qv=True)},
-{probed_sims_cte("e_sims")},
-{ranked_cte("e_ranked", "e_sims", "query_id")},
-{pieces_sql},
-pcodes AS ({codes_union}),
-codes AS (
-    SELECT p.vec_id, a.list_id, p.s, p.code
-    FROM pcodes p JOIN assign_final a USING (vec_id)
-),
-lut AS ({lut_union}),
-adc AS (
-    SELECT l.query_id, codes.vec_id,
-           SUM(l.ipart) AS idot, SUM(l.cnsq) AS insq
-    FROM codes
-    JOIN probed pr2 ON pr2.list_id = codes.list_id
-    JOIN lut l ON l.query_id = pr2.query_id
-              AND l.s = codes.s AND l.code = codes.code
-    WHERE codes.vec_id <> l.query_id
-    GROUP BY 1, 2
-),
-b_sims AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           ROUND(list_cosine_similarity(q.qv, e.v), 4) AS cos_sim
-    FROM q, esig e WHERE e.vec_id <> q.query_id
-),
-{ranked_cte("b_ranked", "b_sims", "query_id")},
-{adc_tail}
-UNION ALL
-{topk_select("e_ranked", "query_id", TOP_K)}
-  AND (SELECT path FROM decision) = 'ivf_exact'
-UNION ALL
-{topk_select("b_ranked", "query_id", TOP_K)}
-  AND (SELECT path FROM decision) = 'brute'
-"""
-
-
-@register(
-    "ann_auto_topk",
-    oracle=_auto_oracle(),
-    survey_ops="§7-similarity,⊘rank",
-    tier=0,  # new in r13
-)
-def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k with the execution path CHOSEN by the measured
-    decision surface (:func:`auto_path`): one corpus row count, then
-    dispatch to the brute / IVF implementation the r12 qbatch pricing
-    says wins at this (corpus, batch) point. The DuckDB oracle
-    replays the rule from its own COUNT(*) and computes BOTH branches
-    behind the same guard, so the driver's gate follows the decision
-    at any sf. ``need_recall_floor`` deployments call
-    :func:`auto_path` with the flag and get the PQ path
-    (:func:`stream_processing_test_spark.llm.pq.pq_topk`); the
-    registered query prices the default contract.
-
-    Scale: the selector itself costs one parquet COUNT (metadata-
-    bounded) — path cost dominates everything and is exactly what the
-    decision surface minimizes.
-    """
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    path = auto_path(n, N_QUERIES)
-    if path == "brute":
-        return ann_cosine_topk(spark, sf_dir)
-    if path == "ivf":
-        # r15 (VERDICT r14 item 2): the IVF arm runs at the AUTO-PROBE
-        # operating point (auto_lists + auto_probe — fraction pinned
-        # at 1/PROBE_DIV), not the fixed-16/N_PROBE registered-IVF
-        # contract: the r15 surface prices ivfauto winning every
-        # measured B>=64 cell it is admissible in, and the ivfprobe
-        # rung shows the recall the fixed arm forfeits at scale
-        # (0.08->0.50 at 200k x 4, flat wall). The exec engine inside
-        # the arm (exact vs probed-ADC) is its own measured rule —
-        # see _auto_ivf_exec.
-        return _auto_ivf_exec(spark, sf_dir, n)
-    from stream_processing_test_spark.llm.pq import ann_pq_topk
-
-    return ann_pq_topk(spark, sf_dir)
-
-
-def _auto_ivf_exec(
-    spark: SparkSession,
-    sf_dir: str,
-    n_rows: int,
-    adc_rows: int | None = None,
-    spill_rows: int | None = None,
-    window_queries: int | None = None,
-) -> DataFrame:
-    """The r15 EXEC rule inside the dispatched ivf arm: same routing
-    (auto lists, auto probes — recall is decided here and does not
-    change), but the probed lists are SCORED exactly below the
-    probed-ADC crossover and through the IVF-PQ ADC composition
-    (integer gather + auto_rerank exact re-rank) above it. The
-    crossover is the SAME integer the append dispatch measured
-    (APPEND_ADC_ROWS — see its comment for the r15 one-shot-surface
-    cells: ADC wins 2x at 12.8-16M probed rows, 1.8x at 128M with
-    recall 0.996 vs the exact arm). Above APPEND_SPILL_ROWS the
-    monolithic ADC sort hits the same measured disk ceiling the
-    append dispatch windows around, so this arm reuses
-    :func:`_append_windowed` (the index trains on the full corpus —
-    the monolithic composition's own relation; self-pairs are
-    excluded downstream identically): at the registered batch size
-    the windowed rerank rule resolves to the same auto_rerank value
-    (min(N_QUERIES, window) x r0 is far under the cap), so the
-    windowed arm is VALUE-IDENTICAL to the ADC chain and the
-    oracle's 'ivf_adc' guard covers both — pinned by the
-    forced-window pytest. Crossovers are parameters so the
-    forced-exec pytests can drive every arm at fixture scale; the
-    registered constants reach ADC only past ~19M vectors and the
-    window past ~800M (N_QUERIES x n/8 probed rows)."""
-    if adc_rows is None:
-        adc_rows = APPEND_ADC_ROWS
-    if spill_rows is None:
-        spill_rows = APPEND_SPILL_ROWS
-    if window_queries is None:
-        window_queries = APPEND_WINDOW_QUERIES
-    lists = auto_lists(n_rows)
-    probes = auto_probe(lists)
-    probed_rows = N_QUERIES * probes * ((n_rows + lists - 1) // lists)
-    if probed_rows > adc_rows:
-        emb = load_vectors(spark, sf_dir)
-        q = query_set(emb)
-        if probed_rows > spill_rows:
-            return _append_windowed(
-                emb, q, n_rows, N_QUERIES, window_queries, n_probe=probes
-            )
-        from stream_processing_test_spark.llm.pq import ivfpq_topk
-
-        return ivfpq_topk(
-            emb, q, n_probe=probes, large_batch=True
-        ).select("query_id", "neighbor_id", "cos_sim", "rk")
-    return ann_ivf_auto_probe(spark, sf_dir)
-
-
 # --------------------------------------------------------------------
-# Incremental index ingest (r13): search a standing IVF index with a
-# NEW batch — train-once, serve-a-growing-corpus, the ANN twin of
-# dedup_incremental's continuous-crawl shape.
-
-INGEST_MOD = 10  # "new batch" = vec_id % INGEST_MOD == 0 (~10% of the
-# fixture — in production the batch is an ingest window, tiny vs base)
-
+# The IVF execution ladder: how a routed batch's probed lists are
+# scored — exact, probed ADC, or windowed ADC — shared by the one-shot
+# dispatcher's ivf arm and the standing-index append.
 
 APPEND_RERANK_CAP = 100_000_000  # |batch| × auto_rerank(base) rows the
 # ADC branch's shortlist may materialize; past it the rerank drops to
@@ -1778,233 +1583,91 @@ APPEND_WINDOW_QUERIES = 10_000  # queries per window above the spill
 # against the standing index)
 
 
+class Crossovers(NamedTuple):
+    """The ladder's crossovers as one value. :func:`ivf_ladder` and
+    its oracle replay (:func:`_ladder_ctes`) take the same tuple, so a
+    test that lowers one to force an arm at fixture scale gates the
+    arm it ran. The defaults are the measured constants above."""
+
+    adc_rows: int = APPEND_ADC_ROWS
+    spill_rows: int = APPEND_SPILL_ROWS
+    window_queries: int = APPEND_WINDOW_QUERIES
+
+
 def append_rerank(n_base: int, n_batch: int) -> int:
-    """The ADC-append shortlist rule: ``pq.auto_rerank`` over the BASE
+    """The ADC arms' shortlist rule: ``pq.auto_rerank`` over the BASE
     count (the hold-recall policy), floored to PQ_RERANK when
     |batch| × rerank would materialize more than APPEND_RERANK_CAP
     shortlist rows — the policy was priced per interactive query, and
     an ingest window multiplies it by the batch. Integer-exact;
-    replayed by the ``rr0``/``rr`` CTEs in :func:`_append_oracle`."""
+    replayed by :func:`_ladder_ctes`."""
     from stream_processing_test_spark.llm.pq import PQ_RERANK, auto_rerank
 
     r = auto_rerank(n_base)
     return PQ_RERANK if n_batch * r > APPEND_RERANK_CAP else r
 
 
-def _append_oracle(
-    adc_rows: int = APPEND_ADC_ROWS,
-    spill_rows: int = APPEND_SPILL_ROWS,
-    window_queries: int = APPEND_WINDOW_QUERIES,
-) -> str:
-    """The append DISPATCH oracle: all three branches trained on the
-    STANDING BASE only — ``esig`` is the base split, the train-shift
-    count comes from it (``count_from='esig'`` — matching
-    ``kmeans_lists(base)``'s own count), lists are DYNAMIC via
-    ``auto_lists_ctes`` over the same base count, and the query set is
-    the new batch instead of the ``vec_id < N_QUERIES`` constant.
-
-    The ``decision`` CTE replays :func:`ann_index_append`'s integer
-    ladder (probed exact-score rows vs the measured ``adc_rows`` and
-    ``spill_rows`` crossovers → exact / adc / windowed) from the
-    oracle's own counts, and each branch's final SELECT is guarded by
-    it — the same branches-behind-the-guard design as
-    ``ann_auto_topk``'s oracle. The exact branch is the r13
-    probed-search chain; the ADC branch is the IVF-PQ chain
-    (:func:`pq._pq_train_ctes` with the batch as the LUT source,
-    probed integer ADC, :func:`pq._adc_tail_sql` with the ``rr``
-    batch-capped rerank rule and approx_cos dropped so all branches
-    project identical columns). The WINDOWED branch (r15) reuses the
-    SAME ADC chain — queries are scored independently, so
-    :func:`_append_windowed`'s window partition cannot change any
-    per-query row — differing only in the ``rr`` rerank rule, which
-    windows the batch size (``LEAST(b, window_queries)``) exactly as
-    :func:`append_rerank` is called per window on the Spark side.
-    ``adc_rows``/``spill_rows``/``window_queries`` are parameters so the forced-dispatch pytests can regenerate the
-    oracle with zero crossovers and gate the ADC and windowed
-    branches cross-engine at fixture scale (the registered constants
-    never dispatch past exact below ladder scale)."""
-    from stream_processing_test_spark.llm.pq import (
-        PQ_RERANK,
-        PQ_RERANK_MAX,
-        PQ_RERANK_SHIFT,
-        _adc_tail_sql,
-        _pq_train_ctes,
-    )
-
-    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
-    pieces_sql, codes_union, lut_union = _pq_train_ctes(q_src="qsrc")
-    adc_tail = _adc_tail_sql(
-        "(SELECT rerank FROM rr)",
-        TOP_K,
-        q_rel="qsrc",
-        with_approx=False,
-        guard=" AND (SELECT path FROM decision) IN ('adc', 'windowed')",
-    )
-    return f"""
-WITH esig AS (
-    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} <> 0
-),
-{_train_shift_ctes(count_from="esig")},
-{auto_lists_ctes()},
-nb AS (
-    SELECT COUNT(*) AS b FROM embeddings WHERE vec_id % {INGEST_MOD} = 0
-),
-rr0 AS (
-    SELECT LEAST(GREATEST({PQ_RERANK}, n >> {PQ_RERANK_SHIFT}),
-                 {PQ_RERANK_MAX}) AS r0 FROM nv
-),
-decision AS (
-    SELECT CASE
-           WHEN b * {N_PROBE} * ((n + lists - 1) // lists) > {spill_rows}
-           THEN 'windowed'
-           WHEN b * {N_PROBE} * ((n + lists - 1) // lists) > {adc_rows}
-           THEN 'adc' ELSE 'exact' END AS path
-    FROM nv, nl, nb
-),
-rr AS (
-    SELECT CASE WHEN (SELECT path FROM decision) = 'windowed'
-           THEN CASE WHEN LEAST(b, {window_queries}) * r0 > {APPEND_RERANK_CAP}
-                     THEN {PQ_RERANK} ELSE r0 END
-           ELSE CASE WHEN b * r0 > {APPEND_RERANK_CAP}
-                     THEN {PQ_RERANK} ELSE r0 END END AS rerank
-    FROM rr0, nb
-),
-{lloyd},
-qsrc AS (
-    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} = 0
-),
-q AS (SELECT vec_id AS query_id, v AS qv FROM qsrc),
-{probed_cte(cents, N_PROBE, carry_qv=True)},
-{probed_sims_cte("e_sims")},
-{ranked_cte("e_ranked", "e_sims", "query_id")},
-{pieces_sql},
-pcodes AS ({codes_union}),
-codes AS (
-    SELECT p.vec_id, a.list_id, p.s, p.code
-    FROM pcodes p JOIN assign_final a USING (vec_id)
-),
-lut AS ({lut_union}),
-adc AS (
-    SELECT l.query_id, codes.vec_id,
-           SUM(l.ipart) AS idot, SUM(l.cnsq) AS insq
-    FROM codes
-    JOIN probed pr2 ON pr2.list_id = codes.list_id
-    JOIN lut l ON l.query_id = pr2.query_id
-              AND l.s = codes.s AND l.code = codes.code
-    WHERE codes.vec_id <> l.query_id
-    GROUP BY 1, 2
-),
-{adc_tail}
-UNION ALL
-{topk_select("e_ranked", "query_id", TOP_K)}
-  AND (SELECT path FROM decision) = 'exact'
-"""
-
-
-@register(
-    "ann_index_append",
-    oracle=_append_oracle(),
-    survey_ops="§7-similarity,IVF",
-    tier=0,  # new in r13
-)
-def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ANN ingest against a STANDING index: the quantizer
-    trains on the base split only, the base is assigned once (the
-    standing inverted lists), and every NEW-batch vector is routed and
-    searched against it — top-k existing neighbors per arriving
-    vector, the lookup a continuous-ingest pipeline runs per batch
-    (near-dup gating, recommendation backfill) WITHOUT retraining or
-    re-assigning the corpus.
-
-    Split rule mirrors ``dedup_incremental`` (``vec_id % INGEST_MOD ==
-    0`` is the new batch; in production the batch is an ingest window,
-    tiny vs base — the fixture's 10% keeps the driver check
-    substantial). The implementation IS :func:`ivf_topk` with the new
-    batch as the query relation: train + assign touch only the base,
-    per-batch work is |batch| routing probes plus the probed-fraction
-    exact scores — linear in the batch, never corpus-scale.
-    ``route_queries`` broadcasts the (query x n_probe) relation, so
-    batch size is bounded by the broadcast budget exactly like
-    ``bm25_multi_topk``'s query relation; a deployment streams bigger
-    ingest windows through in broadcastable chunks. Lists come from
-    ``auto_lists`` over the BASE count — the fixed-16 registered-IVF
-    default makes each query scan base/8 at n_probe=2, and the r13
-    rung measured that straggling for minutes at a 20k-query batch on
-    a 180k base; sqrt-scaled lists keep per-query probed work
-    sublinear in the base.
-
-    DISPATCH (r14, VERDICT r13 item 4): the r13 rung recorded the
-    vec_x40 exact arm as a skip (200k × 14k probed = 2.8G exact
-    scores) and named the ADC path as the right tool there — r14
-    measured it (BENCH_NOTES §r14-append-adc) and wired the measured
-    crossover as an integer rule: when the probed exact-score
-    estimate |batch| × n_probe × ⌈base/lists⌉ exceeds
-    APPEND_ADC_ROWS, the batch is searched through the IVF-PQ
-    composition instead (frozen base-trained quantizer + codebooks,
-    probed integer ADC, :func:`append_rerank`-sized exact verify,
-    ``large_batch`` plan), projected to the same four columns.
-
-    WINDOWED (r15, VERDICT r14 item 3): the monolithic ADC arm has
-    its own measured ceiling — at vec_x40 its 2.8e9-row shortlist
-    sort spills past local disk (recorded skip), while the
-    standing-index windowed shape completes at a flat ~37 s per 10k
-    queries. Above APPEND_SPILL_ROWS estimated probed rows the
-    dispatch therefore routes through :func:`_append_windowed`:
-    index built once, batch streamed in APPEND_WINDOW_QUERIES-sized
-    windows through :func:`pq.ivfpq_search`, each window
-    materialized before the next so shuffle disk holds one window at
-    a time. All three branches and the decision ladder replay in the
-    DuckDB oracle from its own counts (:func:`_append_oracle`); the
-    ADC and windowed branches are additionally cross-engine-gated at
-    fixture scale by forced-dispatch pytests (the registered
-    crossovers never trip below ladder scale).
-    """
-    emb = load_vectors(spark, sf_dir)
-    is_new = F.col("vec_id") % INGEST_MOD == 0
-    base = emb.filter(~is_new)
-    q = emb.filter(is_new).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return _append_dispatch(base, q, emb.count())
-
-
-def _append_dispatch(
+def ivf_ladder(
     base: DataFrame,
     q: DataFrame,
-    n_total: int,
-    adc_rows: int = APPEND_ADC_ROWS,
-    spill_rows: int = APPEND_SPILL_ROWS,
-    window_queries: int = APPEND_WINDOW_QUERIES,
+    n_base: int,
+    n_batch: int,
+    n_probe: int,
+    large_batch: bool,
+    crossovers: Crossovers = Crossovers(),
 ) -> DataFrame:
-    """The measured three-way append dispatch behind
-    :func:`ann_index_append` — split out (with the crossovers as
-    parameters) so the forced-dispatch pytests can drive the ADC and
-    windowed branches at fixture scale against regenerated oracles.
+    """Search the ``n_batch`` queries ``q`` (query_id, qv) against the
+    ``n_base`` vectors ``base`` (vec_id, v) through the scoring engine
+    the probed volume calls for. Routing is the caller's — auto lists
+    over the base, ``n_probe`` probes per query — and no arm changes
+    it: the ladder picks how the probed lists are SCORED, never which
+    candidates they hold. The estimate is the probed exact-score rows
+    |batch| × n_probe × ⌈base/lists⌉, from counts already paid:
 
-    Ladder order: exact probed search below ``adc_rows`` probed rows,
-    the monolithic ADC composition between ``adc_rows`` and
-    ``spill_rows``, and above ``spill_rows`` (r15, VERDICT r14
-    item 3) the STANDING-INDEX WINDOWED path — the monolithic ADC
-    shortlist sort spills past local disk there (measured at
-    vec_x40's 2.8e9 rows), while the same work in
-    ``window_queries``-sized windows completes at a flat
-    ~per-window wall."""
-    n_base = base.count()
-    n_batch = n_total - n_base
+    - up to ``adc_rows`` (APPEND_ADC_ROWS): exact scoring,
+      :func:`ivf_topk` — cheaper there (no PQ training to pay) and
+      exact, the tie-toward-exact convention BRUTE_MAX_ROWS keeps too.
+      ``large_batch`` is this arm's plan: off for an interactive query
+      set, on for an ingest batch.
+    - above it: the monolithic IVF-PQ composition
+      (:func:`pq.ivfpq_topk`) — integer ADC over the probed lists'
+      codes, an :func:`append_rerank` shortlist re-ranked exactly,
+      always on the large-batch plan (it only fires at ingest-scale
+      probed volume).
+    - above ``spill_rows`` (APPEND_SPILL_ROWS), where that
+      composition's one shortlist sort spills past local disk:
+      :func:`_append_windowed` — the same ADC against an index built
+      once, the batch streamed ``window_queries`` at a time.
+
+    Queries score independently, so the windowed arm returns what the
+    ADC arm would under the same rerank; the rule sees one window's
+    batch, and wherever |batch| × auto_rerank is under
+    APPEND_RERANK_CAP (the registered 5-query set always is) both
+    equal auto_rerank. Each crossover's measurement sits at its
+    constant. The DuckDB oracles replay the decision and the rerank
+    from their own counts (:func:`_ladder_ctes`) and guard each arm's
+    SELECT with it; the registered crossovers never leave the exact
+    arm below ladder scale, so forced-crossover pytests gate the ADC
+    and windowed arms cross-engine at fixture scale."""
     lists = auto_lists(n_base)
-    probed_rows = n_batch * N_PROBE * ((n_base + lists - 1) // lists)
-    if probed_rows > spill_rows:
-        return _append_windowed(base, q, n_base, n_batch, window_queries)
-    if probed_rows > adc_rows:
+    probed_rows = n_batch * n_probe * ((n_base + lists - 1) // lists)
+    if probed_rows > crossovers.spill_rows:
+        return _append_windowed(
+            base, q, n_base, n_batch, crossovers.window_queries, n_probe
+        )
+    if probed_rows > crossovers.adc_rows:
         from stream_processing_test_spark.llm.pq import ivfpq_topk
 
         return ivfpq_topk(
             base,
             q,
+            n_probe=n_probe,
             rerank=append_rerank(n_base, n_batch),
             large_batch=True,
         ).select("query_id", "neighbor_id", "cos_sim", "rk")
-    return ivf_topk(base, q, n_lists=lists, large_batch=True)
+    return ivf_topk(
+        base, q, n_lists=lists, n_probe=n_probe, large_batch=large_batch
+    )
 
 
 def _append_windowed(
@@ -2013,52 +1676,42 @@ def _append_windowed(
     n_base: int,
     n_batch: int,
     window_queries: int,
-    n_probe: int | None = None,
+    n_probe: int,
 ) -> DataFrame:
-    """Corpus-fraction ingest through the STANDING IVFADC index: build
-    the index ONCE (codebooks + coarse quantizer trained on the base,
-    fused assign+encode, localCheckpointed), then stream the batch in
-    ``window_queries``-sized windows through :func:`pq.ivfpq_search`,
-    materializing each window's (|window| × top_k)-row result eagerly
-    before starting the next so only ONE window's probed gather
-    stream (~1.4e8 rows at the measured shape) holds shuffle disk at
-    a time — the monolithic sort of all windows at once is exactly
-    the measured disk-spill skip this path exists to avoid. Queries
-    are scored independently, so the window partition cannot change
-    any per-query result; the DuckDB oracle replays the branch as the
-    monolithic ADC chain with the WINDOW-sized rerank rule. A driver
-    GC nudge per window lets the ContextCleaner release the finished
-    window's shuffle files instead of letting them accumulate across
-    the batch (periodic-GC default is 30 min — longer than the whole
-    batch).
+    """The ladder's windowed arm: build the IVFADC index ONCE
+    (:func:`pq.ivfadc_index`, localCheckpointed), then stream the
+    batch in ``window_queries``-sized windows through
+    :func:`pq.ivfpq_search`, materializing each window's
+    (|window| × top_k)-row result eagerly before starting the next so
+    only ONE window's probed gather stream (~1.4e8 rows at the
+    measured shape) holds shuffle disk at a time — the monolithic sort
+    of all windows at once is exactly the measured disk-spill skip
+    this path exists to avoid. A driver GC nudge per window lets the
+    ContextCleaner release the finished window's shuffle files instead
+    of letting them accumulate across the batch (periodic-GC default
+    is 30 min — longer than the whole batch).
 
     Window membership is ``(query_id / INGEST_MOD) % n_chunks`` — the
     ingest ordinal under the registered split; for ANY id set it is a
     deterministic total partition (queries score independently, so
-    membership never changes results). ``n_probe`` defaults to the
-    append contract's N_PROBE; :func:`_auto_ivf_exec`'s spill branch
-    passes its auto-probe operating point through."""
+    membership never changes results)."""
     from stream_processing_test_spark.llm.pq import (
+        _empty_topk,
+        ivfadc_index,
         ivfpq_search,
-        pq_assign_encode_arrow,
-        pq_codebooks,
     )
     from stream_processing_test_spark.session import (
         release_local_checkpoint,
     )
 
     spark = base.sparkSession
-    rows = pq_codebooks(base, n_rows=n_base)
-    if not rows:
-        from stream_processing_test_spark.llm.pq import _empty_topk
-
+    index = ivfadc_index(base, n_base, auto_lists(n_base))
+    if index is None:
         return _empty_topk(spark).select(
             "query_id", "neighbor_id", "cos_sim", "rk"
         )
-    cents, centroids = train_ivf_cents(
-        base, k=auto_lists(n_base), n_rows=n_base
-    )
-    enc = pq_assign_encode_arrow(base, cents, rows).localCheckpoint()
+    enc, centroids, rows = index
+    enc = enc.localCheckpoint()
     n_chunks = max(1, (n_batch + window_queries - 1) // window_queries)
     rerank = append_rerank(n_base, min(n_batch, window_queries))
     parts: list[DataFrame] = []
@@ -2080,3 +1733,254 @@ def _append_windowed(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _ladder_ctes(crossovers: Crossovers) -> str:
+    """DuckDB replay of :func:`ivf_ladder`'s decision and rerank over
+    the oracle's ``nv(n)`` base count, ``nl(lists)`` and a one-row
+    ``nb(b, probes)`` batch: ``ladder(path, rerank)``, path one of
+    'exact' / 'adc' / 'windowed', rerank the :func:`append_rerank` of
+    the batch — of one window on the windowed path. Each ladder
+    oracle guards its exact SELECT with path 'exact' and its ADC tail
+    with 'adc' or 'windowed' (one chain: see :func:`ivf_ladder`)."""
+    from stream_processing_test_spark.llm.pq import PQ_RERANK, _rerank_cte
+
+    rows = "b * probes * ((n + lists - 1) // lists)"
+    return f"""{_rerank_cte()},
+ladder AS (
+    SELECT path,
+           CASE WHEN CASE path WHEN 'windowed'
+                          THEN LEAST(b, {crossovers.window_queries})
+                          ELSE b END * rr.rerank > {APPEND_RERANK_CAP}
+                THEN {PQ_RERANK} ELSE rr.rerank END AS rerank
+    FROM (SELECT b, CASE WHEN {rows} > {crossovers.spill_rows} THEN 'windowed'
+                         WHEN {rows} > {crossovers.adc_rows} THEN 'adc'
+                         ELSE 'exact' END AS path
+          FROM nv, nl, nb), rr
+)"""
+
+
+def _auto_oracle(
+    crossovers: Crossovers = Crossovers(),
+    brute_max: int = BRUTE_MAX_ROWS,
+) -> str:
+    """DuckDB oracle replaying :func:`auto_path` and, past the brute
+    region, :func:`ivf_ladder` at the AUTO-PROBE operating point
+    (dynamic lists via ``nl``, probes via ``npr``, the registered
+    query set as the batch). Every reachable branch is computed and
+    guarded by ``decision`` — brute, else the ladder's path — so at
+    any corpus size the gate compares the SAME path the Spark side
+    chose. ``crossovers``/``brute_max`` let the forced-arm pytest
+    regenerate the oracle with a zero brute region and forced
+    crossovers (the registered constants never reach ADC below ~19M
+    vectors). Brute CTEs are prefixed ``b_`` to coexist with the
+    ladder chain's."""
+    from stream_processing_test_spark.llm.pq import (
+        _adc_tail_sql,
+        _probed_adc_ctes,
+    )
+
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
+    adc_tail = _adc_tail_sql(
+        "(SELECT rerank FROM ladder)",
+        TOP_K,
+        with_approx=False,
+        guard=" AND (SELECT path FROM decision) IN ('adc', 'windowed')",
+    )
+    return f"""
+WITH esig AS (
+    {VECTORS_SQL}
+),
+{_train_shift_ctes()},
+{auto_lists_ctes()},
+{auto_probe_ctes()},
+nb AS (SELECT {N_QUERIES} AS b, probes FROM npr),
+{_ladder_ctes(crossovers)},
+decision AS (
+    SELECT CASE WHEN n <= {brute_max} AND {N_QUERIES} < {INDEX_MIN_QUERIES}
+           THEN 'brute' ELSE path END AS path
+    FROM nv, ladder
+),
+{lloyd},
+{query_cte("esig")},
+{probed_cte(cents, "(SELECT probes FROM npr)", carry_qv=True)},
+{probed_sims_cte("e_sims")},
+{ranked_cte("e_ranked", "e_sims", "query_id")},
+{_probed_adc_ctes()},
+b_sims AS (
+    SELECT q.query_id, e.vec_id AS neighbor_id,
+           ROUND(list_cosine_similarity(q.qv, e.v), 4) AS cos_sim
+    FROM q, esig e WHERE e.vec_id <> q.query_id
+),
+{ranked_cte("b_ranked", "b_sims", "query_id")},
+{adc_tail}
+UNION ALL
+{topk_select("e_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM decision) = 'exact'
+UNION ALL
+{topk_select("b_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM decision) = 'brute'
+"""
+
+
+@register(
+    "ann_auto_topk",
+    oracle=_auto_oracle(),
+    survey_ops="§7-similarity,⊘rank",
+    tier=0,  # new in r13
+)
+def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-k with the execution path CHOSEN by the measured
+    decision surface (:func:`auto_path`): one corpus row count, then
+    dispatch to the brute / IVF implementation the r12 qbatch pricing
+    says wins at this (corpus, batch) point. The DuckDB oracle
+    replays the rule from its own COUNT(*) and computes every branch
+    behind the same guard, so the driver's gate follows the decision
+    at any sf. ``need_recall_floor`` deployments call
+    :func:`auto_path` with the flag and get the PQ path
+    (:func:`stream_processing_test_spark.llm.pq.pq_topk`); the
+    registered query prices the default contract.
+
+    The ivf arm runs :func:`ivf_ladder` at the AUTO-PROBE operating
+    point (auto_lists + :func:`auto_probe`, fraction searched pinned
+    at 1/PROBE_DIV — r15, VERDICT r14 item 2), not the fixed-N_PROBE
+    registered-IVF contract: the r15 surface prices it winning every
+    measured B>=64 cell it is admissible in, and the ivfprobe rung
+    shows the recall the fixed arm forfeits at scale (0.08->0.50 at
+    200k x 4, flat wall). The batch is the registered query set, so
+    the exact arm keeps the interactive plan (``large_batch`` off).
+
+    Scale: the selector itself costs one parquet COUNT (metadata-
+    bounded) — path cost dominates everything and is exactly what the
+    decision surface minimizes.
+    """
+    emb = load(spark, sf_dir, "embeddings")
+    n = emb.count()
+    path = auto_path(n, N_QUERIES)
+    if path == "brute":
+        return ann_cosine_topk(spark, sf_dir)
+    if path == "ivf":
+        emb = load_vectors(spark, sf_dir)
+        return ivf_ladder(
+            emb,
+            query_set(emb),
+            n,
+            N_QUERIES,
+            auto_probe(auto_lists(n)),
+            large_batch=False,
+        )
+    from stream_processing_test_spark.llm.pq import ann_pq_topk
+
+    return ann_pq_topk(spark, sf_dir)
+
+
+# --------------------------------------------------------------------
+# Incremental index ingest (r13): search a standing IVF index with a
+# NEW batch — train-once, serve-a-growing-corpus, the ANN twin of
+# dedup_incremental's continuous-crawl shape.
+
+INGEST_MOD = 10  # "new batch" = vec_id % INGEST_MOD == 0 (~10% of the
+# fixture — in production the batch is an ingest window, tiny vs base)
+
+
+def _append_oracle(crossovers: Crossovers = Crossovers()) -> str:
+    """The append oracle: :func:`ivf_ladder`'s branches trained on the
+    STANDING BASE only — ``esig`` is the base split, the train-shift
+    count comes from it (``count_from='esig'`` — matching
+    ``kmeans_lists(base)``'s own count), lists are DYNAMIC via
+    ``auto_lists_ctes`` over the same base count, and the query set
+    is the new batch (``qsrc``, also the LUT source) instead of the
+    ``vec_id < N_QUERIES`` constant. ``nb`` is the batch count at
+    N_PROBE probes; :func:`_ladder_ctes` replays the decision and
+    guards the exact and ADC branches. ``crossovers`` lets the
+    forced-arm pytests regenerate the oracle with lowered
+    crossovers."""
+    from stream_processing_test_spark.llm.pq import (
+        _adc_tail_sql,
+        _probed_adc_ctes,
+    )
+
+    lloyd, cents = _ivf_lloyd_ctes(n_lists=None)
+    adc_tail = _adc_tail_sql(
+        "(SELECT rerank FROM ladder)",
+        TOP_K,
+        q_rel="qsrc",
+        with_approx=False,
+        guard=" AND (SELECT path FROM ladder) IN ('adc', 'windowed')",
+    )
+    return f"""
+WITH esig AS (
+    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} <> 0
+),
+{_train_shift_ctes(count_from="esig")},
+{auto_lists_ctes()},
+nb AS (
+    SELECT COUNT(*) AS b, {N_PROBE} AS probes
+    FROM embeddings WHERE vec_id % {INGEST_MOD} = 0
+),
+{_ladder_ctes(crossovers)},
+{lloyd},
+qsrc AS (
+    {VECTORS_SQL} WHERE vec_id % {INGEST_MOD} = 0
+),
+q AS (SELECT vec_id AS query_id, v AS qv FROM qsrc),
+{probed_cte(cents, N_PROBE, carry_qv=True)},
+{probed_sims_cte("e_sims")},
+{ranked_cte("e_ranked", "e_sims", "query_id")},
+{_probed_adc_ctes(q_src="qsrc")},
+{adc_tail}
+UNION ALL
+{topk_select("e_ranked", "query_id", TOP_K)}
+  AND (SELECT path FROM ladder) = 'exact'
+"""
+
+
+@register(
+    "ann_index_append",
+    oracle=_append_oracle(),
+    survey_ops="§7-similarity,IVF",
+    tier=0,  # new in r13
+)
+def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental ANN ingest against a STANDING index: the quantizer
+    trains on the base split only, the base is assigned once (the
+    standing inverted lists), and every NEW-batch vector is routed and
+    searched against it — top-k existing neighbors per arriving
+    vector, the lookup a continuous-ingest pipeline runs per batch
+    (near-dup gating, recommendation backfill) WITHOUT retraining or
+    re-assigning the corpus.
+
+    Split rule mirrors ``dedup_incremental`` (``vec_id % INGEST_MOD ==
+    0`` is the new batch; in production the batch is an ingest window,
+    tiny vs base — the fixture's 10% keeps the driver check
+    substantial). Train + assign touch only the base, per-batch work
+    is |batch| routing probes plus the probed-fraction scores — linear
+    in the batch, never corpus-scale. ``route_queries`` broadcasts the
+    (query x n_probe) relation, so batch size is bounded by the
+    broadcast budget exactly like ``bm25_multi_topk``'s query
+    relation; a deployment streams bigger ingest windows through in
+    broadcastable chunks. Lists come from ``auto_lists`` over the BASE
+    count — the fixed-16 registered-IVF default makes each query scan
+    base/8 at n_probe=2, and the r13 rung measured that straggling for
+    minutes at a 20k-query batch on a 180k base; sqrt-scaled lists
+    keep per-query probed work sublinear in the base.
+
+    The batch runs through :func:`ivf_ladder` at N_PROBE probes with
+    the ingest-batch plan: exact below APPEND_ADC_ROWS probed rows
+    (r13), the IVF-PQ composition above it (r14, VERDICT r13 item 4 —
+    the vec_x40 exact arm was a recorded skip at 2.8G exact scores),
+    and the windowed standing-index search above APPEND_SPILL_ROWS
+    (r15, VERDICT r14 item 3). Completion at vec_x40 is priced in
+    BENCH_NOTES §r15-append.
+    """
+    emb = load_vectors(spark, sf_dir)
+    is_new = F.col("vec_id") % INGEST_MOD == 0
+    base = emb.filter(~is_new)
+    q = emb.filter(is_new).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    n_total = emb.count()
+    n_base = base.count()
+    return ivf_ladder(
+        base, q, n_base, n_total - n_base, N_PROBE, large_batch=True
+    )

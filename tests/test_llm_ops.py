@@ -2071,7 +2071,7 @@ def test_append_adc_branch_cross_engine_parity(spark):
     ladder scale, so without this the ADC branch (frozen base-trained
     quantizer + codebooks, batch LUTs, probed integer ADC, capped
     rerank) would run oracle-ungated. Exercises the dispatch and the
-    dual-branch oracle end-to-end, including the decision CTE picking
+    dual-branch oracle end-to-end, including the ladder CTE picking
     'adc'."""
     import duckdb
 
@@ -2079,8 +2079,10 @@ def test_append_adc_branch_cross_engine_parity(spark):
 
     from stream_processing_test_spark.llm.similarity import (
         INGEST_MOD,
-        _append_dispatch,
+        N_PROBE,
+        Crossovers,
         _append_oracle,
+        ivf_ladder,
     )
     from stream_processing_test_spark.tables import load
     from tests.conftest import SF_SMALL
@@ -2093,7 +2095,12 @@ def test_append_adc_branch_cross_engine_parity(spark):
     q = emb.filter(is_new).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    res = _append_dispatch(base, q, emb.count(), adc_rows=0)
+    forced = Crossovers(adc_rows=0)
+    n_base = base.count()
+    res = ivf_ladder(
+        base, q, n_base, emb.count() - n_base, N_PROBE,
+        large_batch=True, crossovers=forced,
+    )
     assert res.columns == ["query_id", "neighbor_id", "cos_sim", "rk"]
     got = sorted(
         (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rk"])
@@ -2104,7 +2111,7 @@ def test_append_adc_branch_cross_engine_parity(spark):
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/embeddings.parquet')"
     )
-    want = sorted(map(tuple, con.sql(_append_oracle(adc_rows=0)).fetchall()))
+    want = sorted(map(tuple, con.sql(_append_oracle(forced)).fetchall()))
     assert len(got) > 0 and got == want
 
 
@@ -2128,8 +2135,10 @@ def test_append_windowed_branch_cross_engine_parity(spark):
 
     from stream_processing_test_spark.llm.similarity import (
         INGEST_MOD,
-        _append_dispatch,
+        N_PROBE,
+        Crossovers,
         _append_oracle,
+        ivf_ladder,
     )
     from stream_processing_test_spark.tables import load
     from tests.conftest import SF_SMALL
@@ -2144,8 +2153,10 @@ def test_append_windowed_branch_cross_engine_parity(spark):
     )
     n_batch = q.count()
     w = max(1, n_batch // 4)  # >= 4 windows — the union is exercised
-    res = _append_dispatch(
-        base, q, base.count() + n_batch, spill_rows=0, window_queries=w
+    forced = Crossovers(spill_rows=0, window_queries=w)
+    res = ivf_ladder(
+        base, q, base.count(), n_batch, N_PROBE,
+        large_batch=True, crossovers=forced,
     )
     assert res.columns == ["query_id", "neighbor_id", "cos_sim", "rk"]
     got = sorted(
@@ -2157,19 +2168,41 @@ def test_append_windowed_branch_cross_engine_parity(spark):
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/embeddings.parquet')"
     )
-    want = sorted(
-        map(
-            tuple,
-            con.sql(
-                _append_oracle(spill_rows=0, window_queries=w)
-            ).fetchall(),
-        )
-    )
+    want = sorted(map(tuple, con.sql(_append_oracle(forced)).fetchall()))
     assert len(got) > 0 and got == want
     # every new-batch query answered: no window dropped or duplicated
     assert {g[0] for g in got} == {
         r["query_id"] for r in q.select("query_id").collect()
     }
+
+
+def test_ivf_ladder_adc_arms_on_untrainable_corpus(spark):
+    """An all-zero corpus trains no coarse list (the quantizer skips
+    zero norms) while the PQ codebooks still train. Both ADC arms of
+    the ladder must answer with the contract's empty frame; the
+    windowed arm once handed the empty quantizer to the fused
+    assign+encode kernel, whose worker died unpacking it."""
+    from stream_processing_test_spark.llm.similarity import (
+        N_PROBE,
+        Crossovers,
+        ivf_ladder,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [0.0] * 64) for i in range(40)], "vec_id long, v array<double>"
+    )
+    q = emb.filter("vec_id % 10 = 0").selectExpr(
+        "vec_id AS query_id", "v AS qv"
+    )
+    for forced in (
+        Crossovers(adc_rows=0),
+        Crossovers(spill_rows=0, window_queries=2),
+    ):
+        res = ivf_ladder(
+            emb, q, 40, 4, N_PROBE, large_batch=True, crossovers=forced
+        )
+        assert res.columns == ["query_id", "neighbor_id", "cos_sim", "rk"]
+        assert res.count() == 0, forced
 
 
 def test_embedding_diverse_sample_covers_every_cluster(spark):
@@ -2270,40 +2303,44 @@ def test_auto_ivf_exec_both_arms_cross_engine_parity(spark):
     import duckdb
 
     from stream_processing_test_spark.llm.similarity import (
-        _auto_ivf_exec,
+        N_QUERIES,
+        Crossovers,
         _auto_oracle,
+        auto_lists,
+        auto_probe,
+        ivf_ladder,
+        load_vectors,
+        query_set,
     )
-    from stream_processing_test_spark.tables import load
     from tests.conftest import SF_SMALL
 
-    n = load(spark, SF_SMALL, "embeddings").count()
+    emb = load_vectors(spark, SF_SMALL)
+    n = emb.count()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/embeddings.parquet')"
     )
-    # (adc_rows, spill_rows, window) -> forced arm: monolithic ADC,
-    # exact, and the spill-windowed ADC (tiny windows so the fixture
-    # batch spans several — value-identical to the monolithic chain,
-    # which is exactly why the oracle's 'ivf_adc' guard covers it)
+    # forced arm: monolithic ADC, exact, and the spill-windowed ADC
+    # (tiny windows so the fixture batch spans several — value-identical
+    # to the monolithic chain, which is exactly why the oracle's ADC
+    # guard covers both)
     for forced in (
-        {"adc_rows": 0},
-        {"adc_rows": 10**15},
-        {"adc_rows": 0, "spill_rows": 0, "window_queries": 2},
+        Crossovers(adc_rows=0),
+        Crossovers(adc_rows=10**15),
+        Crossovers(adc_rows=0, spill_rows=0, window_queries=2),
     ):
-        res = _auto_ivf_exec(spark, SF_SMALL, n, **forced)
+        res = ivf_ladder(
+            emb, query_set(emb), n, N_QUERIES, auto_probe(auto_lists(n)),
+            large_batch=False, crossovers=forced,
+        )
         assert res.columns == ["query_id", "neighbor_id", "cos_sim", "rk"]
         got = sorted(
             (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rk"])
             for r in res.collect()
         )
         want = sorted(
-            map(
-                tuple,
-                con.sql(
-                    _auto_oracle(adc_rows=forced["adc_rows"], brute_max=0)
-                ).fetchall(),
-            )
+            map(tuple, con.sql(_auto_oracle(forced, brute_max=0)).fetchall())
         )
         assert len(got) > 0 and got == want, forced
 

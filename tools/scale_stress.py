@@ -788,7 +788,9 @@ def overbudget_staged(spark, sf_dir: str) -> dict:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     t0 = time.time()
-    verdict = with_keep_verdict(docs, comp).select("doc_id", "component", "keep")
+    verdict = with_keep_verdict(docs, comp, n_nodes).select(
+        "doc_id", "component", "keep"
+    )
     # collect() executes the frame's OWN QueryExecution (count()/noop
     # write would wrap it in a different one), so the finalized
     # adaptive plan read below is the plan that actually ran
