@@ -10,9 +10,15 @@ seen among itself and its neighbors; at fixpoint the id IS the
 cluster's minimum doc_id (the canonical-keeper rule dedup_exact
 already uses).
 
-Scale posture: each round is one shuffle join (edges ⋈ labels) + one
-aggregation — no driver-side graph, state bounded by |V| + |E|.
-TWO algorithms live behind the same (edges -> labels) contract:
+Scale posture: an edge set that fits the session's broadcast budget
+(``autoBroadcastJoinThreshold // _VERDICT_ROW_BYTES`` edges, ~164k at
+the default) is collected in ONE job and closed on the driver by
+union-find — a near-dup graph of a few hundred edges otherwise pays
+a driver barrier per round for almost no work. Past that cap nothing
+graph-sized touches the driver: each round is one shuffle join
+(edges ⋈ labels) + one aggregation, state bounded by |V| + |E|.
+TWO distributed algorithms live behind the same (edges -> labels)
+contract:
 
 - **min-label propagation** (``algorithm="minlabel"``): rounds =
   graph diameter / 2 (two hops per round). Cheapest per round; the
@@ -42,7 +48,10 @@ from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.session import release_local_checkpoint
 
 # min-label rounds before the auto path falls back to star: the
-# measured crossover in BENCH_STAR_CROSSOVER.json (tools/star_crossover.py)
+# measured crossover in BENCH_STAR_CROSSOVER.json (tools/star_crossover.py).
+# It applies only above the driver cap: an edge set that fits the
+# broadcast budget closes on the driver, which beat both distributed
+# paths at 50k and 160k chain-forest edges (BENCH_NOTES §cc-driver).
 MINLABEL_BUDGET = 4
 
 
@@ -59,7 +68,12 @@ def connected_components(
 
     ``algorithm``:
 
-    - ``"auto"`` (default): min-label propagation — measured fastest
+    - ``"auto"`` (default): if the edge set fits the session's
+      broadcast budget, :func:`_driver_components` collects it in one
+      job and closes it on the driver (``dup_clusters`` 31 → 20 jobs;
+      the labels are a ``LocalRelation``, and ``with_count`` costs
+      nothing). Over that cap, or with broadcasting disabled:
+      min-label propagation — measured fastest
       on the dense little cliques near-dup graphs are (sf0.1 real dup
       graph: 4.34 s vs star's 5.06 s, BENCH_r05) — but if it has not
       converged within ``MINLABEL_BUDGET`` rounds (8 hops: covers any
@@ -82,7 +96,8 @@ def connected_components(
     - ``"star"``: pure large-star/small-star (see
       :func:`star_components`).
 
-    Exactly ONE Spark job per round, and each round advances labels by
+    The distributed min-label loop runs exactly ONE Spark job per
+    round, and each round advances labels by
     TWO hops: the first propagation stays lazy inside the second's
     plan, the pair lands in a *lazy* ``localCheckpoint``, and the
     round's single action is a ``count()`` of rows the second pass
@@ -111,6 +126,11 @@ def connected_components(
         return (labels, labels.count()) if with_count else labels
     if algorithm not in ("minlabel", "auto"):
         raise ValueError(f"unknown algorithm {algorithm!r}: auto|minlabel|star")
+    if algorithm == "auto":
+        local = _driver_components(edges, src, dst)
+        if local is not None:
+            labels, n_nodes = local
+            return (labels, n_nodes) if with_count else labels
     budget = MINLABEL_BUDGET if algorithm == "auto" else max_iter
     # LAZY localCheckpoint, not persist() (r17): ``sym`` is consumed as
     # a ``{sym}`` parameter inside propagate()'s SQL every pass, and
@@ -197,6 +217,61 @@ def connected_components(
         # no-op on them; nothing reads sym after the loop (the returned
         # labels are themselves checkpointed)
         release_local_checkpoint(sym)
+
+
+def _driver_components(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, int] | None:
+    """``auto``'s driver finish: ((node, component), node count) when
+    the edge set fits the session's broadcast budget, else None.
+
+    The cap is the budget :func:`with_keep_verdict` already gates on,
+    ``autoBroadcastJoinThreshold // _VERDICT_ROW_BYTES`` edges (~164k at
+    the 10 MB default). ONE job collects at most cap + 1 (src, dst) rows
+    as Arrow, so the driver never holds more than that; union-find with
+    the minimum as root then labels every node with the minimum id it
+    reaches, exactly the min-label fixpoint. The labels come back as a
+    JVM ``LocalRelation`` built from an Arrow table — a frame built from
+    a Python list would run Python workers in every consumer. Over the
+    cap, with broadcasting disabled, with mixed endpoint types (the SQL
+    union's type coercion stays the distributed path's) or with a null
+    endpoint, it returns None and the distributed loop runs as before;
+    the collect is then the one extra job."""
+    import pyarrow as pa
+
+    spark = edges.sparkSession
+    cap = _auto_broadcast_threshold_bytes(spark) // _VERDICT_ROW_BYTES
+    if cap <= 0:
+        return None
+    pair = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if pair.schema[0].dataType != pair.schema[1].dataType:
+        return None
+    t = pair.limit(cap + 1).toArrow()
+    if t.num_rows > cap or t["src"].null_count or t["dst"].null_count:
+        return None
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(t["src"].to_pylist(), t["dst"].to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the larger root joins the smaller: root = min id
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    typ = t.schema.field("src").type
+    labels = pa.table({
+        "node": pa.array(nodes, typ),
+        "component": pa.array([find(n) for n in nodes], typ),
+    })
+    return spark.createDataFrame(labels), len(nodes)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -485,10 +560,10 @@ def with_keep_verdict(
     corpora near-dup dedup removes 30-50% of documents, so the
     clustered-node set is the SAME order as the corpus — a forced
     broadcast of it would OOM every executor. ``n_nodes`` is the
-    clustered-node count the caller's CC loop already measured (it
-    rides the last round's convergence job —
-    ``connected_components(with_count=True)``, r16), so the gate costs
-    no extra job; the hint is applied only when that size fits the
+    clustered-node count ``connected_components(with_count=True)``
+    already measured (the driver union-find's node count, or past its
+    cap the last round's convergence job), so the gate costs no extra
+    job; the hint is applied only when that size fits the
     session's own auto-broadcast byte budget
     (``spark.sql.autoBroadcastJoinThreshold`` — needed because the
     planner sees a LogicalRDD with unknown stats and would never

@@ -936,8 +936,9 @@ def semantic_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, not two executions of the candidate chain), a left-semi
     reverse-edge join + threshold filter (mutuality prunes hub nodes:
     an edge survives only if BOTH endpoints rank each other top-k),
-    then ``cluster.connected_components`` (min-label / star contraction,
-    log-round bounded) with per-component sizes. Output mirrors
+    then ``cluster.connected_components`` (union-find on the driver
+    while the mutual edges fit the broadcast budget, else min-label /
+    star contraction, log-round bounded) with per-component sizes. Output mirrors
     ``dup_clusters``: (vec_id, component, cluster_size), component =
     min member id — the canonical keeper.
 

@@ -969,6 +969,7 @@ def ivfpq_topk(
     rerank: int | None = None,
     n_lists: int | None = None,
     large_batch: bool = False,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """IVF-PQ composition (Jégou et al. 2011 §V — IVFADC): the
     ≥100 M-vector architecture both module docstrings name. The IVF
@@ -988,6 +989,8 @@ def ivfpq_topk(
     constant — recall on structureless corpora is floored at the
     fraction searched, exactly as ``ann_ivf_topk`` documents; routing
     gain needs corpus structure and is pytest-pinned there).
+    ``n_rows`` is the corpus size when the caller already counted it
+    (``similarity.ivf_ladder``); otherwise one count job pays for it.
 
     Scale shape: ONE fused corpus pass (assignment + encode in the
     same Arrow batch — :func:`pq_assign_encode_arrow`, list_id rides
@@ -1003,7 +1006,8 @@ def ivfpq_topk(
 
     if n_probe is None:
         n_probe = N_PROBE
-    n_rows = emb.select("vec_id").count()
+    if n_rows is None:
+        n_rows = emb.select("vec_id").count()
     if rerank is None:
         rerank = auto_rerank(n_rows)
     if n_lists is None:

@@ -1664,6 +1664,7 @@ def ivf_ladder(
             n_probe=n_probe,
             rerank=append_rerank(n_base, n_batch),
             large_batch=True,
+            n_rows=n_base,
         ).select("query_id", "neighbor_id", "cos_sim", "rk")
     return ivf_topk(
         base, q, n_lists=lists, n_probe=n_probe, large_batch=large_batch

@@ -155,7 +155,7 @@ PLAN_OPAQUE_QUERIES: dict[str, str] = {
     "envelope_rollup_orc": "temp-dir write/read roundtrip materialized in fn()",
     "envelope_rollup_parquet": "temp-dir write/read roundtrip materialized in fn()",
     "bpe_vocab_merges": "iterative merge trainer; 6-row result built on the driver",
-    "semantic_dup_clusters": "knn graph checkpoint + connected-components loop in fn()",
+    "semantic_dup_clusters": "knn graph checkpoint + connected-components closure in fn() (driver union-find under the broadcast cap)",
     "dedup_incremental": "shared signature relation materialized in fn()",
     "dedup_minhash_lsh": "signatures/banding materialized in fn()",
     "dedup_ngram_jaccard": "shingle index materialized in fn()",
@@ -163,9 +163,9 @@ PLAN_OPAQUE_QUERIES: dict[str, str] = {
     "doc_lm_score": "persisted pair_tf materialized in fn() (r12 scan cut)",
     "dedup_simhash": "fingerprints materialized in fn()",
     "embedding_diverse_sample": "iterative k-means materialized in fn()",
-    "dup_clusters": "connected-components loop materialized in fn()",
+    "dup_clusters": "pairs trunk + connected-components closure in fn() (driver union-find under the broadcast cap)",
     "dup_clusters_star": "star-contraction loop materialized in fn()",
-    "leakage_safe_split": "connected-components loop materialized in fn()",
+    "leakage_safe_split": "pairs trunk + connected-components closure in fn() (driver union-find under the broadcast cap)",
     "streaming_click_purchase_join": "streaming sink",
     "streaming_click_purchase_outer": "streaming sink",
     "streaming_daily_scores": "streaming sink",

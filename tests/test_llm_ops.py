@@ -2530,20 +2530,90 @@ def test_phash_spark_sql_twin_matches_python(spark):
 
 
 def test_connected_components_with_count(spark):
-    """with_count=True (r16) returns the clustered-node count computed
-    inside the round's own convergence job — it must equal the label
-    frame's row count on both the converged-minlabel and the
-    star-fallback paths."""
+    """with_count=True returns the clustered-node count without a
+    count job of its own — it must equal the label frame's row count on
+    the driver path and, past the driver cap, on converged min-label and
+    on the star fallback."""
     from stream_processing_test_spark.llm.cluster import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "src LONG, dst LONG"
     )
     labels, n = connected_components(edges, with_count=True)
+    assert _is_local(labels)  # the driver path's union-find node count
     assert n == labels.count() == 5
 
+    # broadcasting off puts every edge set past the driver cap: the
+    # small graph converges in min-label, the 64-chain falls back to star
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "src LONG, dst LONG"
     )
-    labels2, n2 = connected_components(chain, with_count=True)  # star fallback
-    assert n2 == labels2.count() == 64
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        labels1, n1 = connected_components(edges, with_count=True)
+        assert not _is_local(labels1)
+        assert n1 == labels1.count() == 5
+        labels2, n2 = connected_components(chain, with_count=True)
+        assert not _is_local(labels2)
+        assert n2 == labels2.count() == 64
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+
+
+def _is_local(df) -> bool:
+    """True when ``df`` is the driver path's Arrow-built LocalRelation."""
+    return "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_cc_driver_path_matches_distributed_paths(spark):
+    """Under the default conf the auto path closes a small edge set on
+    the driver; its labels must equal pinned min-label and star on
+    randomized graphs carrying duplicate edges, both orientations of an
+    edge and self-loops, on a 64-node chain (diameter 63) and on the
+    empty edge set."""
+    import random
+
+    from stream_processing_test_spark.llm.cluster import connected_components
+
+    graphs = []
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        e = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
+        e += [(b, a) for a, b in rng.sample(e, 8)]  # both orientations
+        e += rng.sample(e, 5)  # exact duplicates
+        e += [(n, n) for n in rng.sample(range(40, 50), 3)]  # self-loops
+        graphs.append(e)
+    graphs.append([(i, i + 1) for i in range(63)])
+    graphs.append([])
+    for e in graphs:
+        edges = spark.createDataFrame(e, "src LONG, dst LONG")
+        auto = connected_components(edges)
+        assert _is_local(auto)
+        got = _rows(auto)
+        assert got == sorted(_union_find_components(e).items())
+        assert got == _rows(
+            connected_components(edges, algorithm="minlabel", max_iter=40)
+        )
+        assert got == _rows(connected_components(edges, algorithm="star"))
+
+
+def test_cc_null_endpoint_takes_distributed_path(spark):
+    """A null endpoint cannot be ordered against ids on the driver: the
+    auto path hands the edge set to the distributed loop (no bare
+    TypeError) and returns what pinned min-label returns."""
+    from stream_processing_test_spark.llm.cluster import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (7, 8)], "src LONG, dst LONG"
+    )
+    labels = connected_components(edges)
+    assert not _is_local(labels)
+    pinned = connected_components(edges, algorithm="minlabel")
+    assert sorted(map(repr, labels.collect())) == sorted(
+        map(repr, pinned.collect())
+    )

@@ -557,6 +557,63 @@ def test_connected_components_one_job_per_round(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
+def test_cc_over_driver_cap_costs_one_extra_job(spark):
+    """One edge over the driver cap (threshold // 64 bytes per edge),
+    the auto path hands the graph to the distributed loop: same labels
+    as pinned min-label, and the capped collect is the only extra job.
+    AQE is off so both sides count the same plan's jobs."""
+    from stream_processing_test_spark import profile
+    from stream_processing_test_spark.llm.cluster import (
+        _VERDICT_ROW_BYTES,
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)], "src LONG, dst LONG"
+    )
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set(
+        "spark.sql.autoBroadcastJoinThreshold", str(5 * _VERDICT_ROW_BYTES - 1)
+    )
+    try:
+        out = {}
+        for algo in ("auto", "minlabel"):
+            labels, rec = profile.run(
+                spark,
+                lambda: connected_components(edges, algorithm=algo),
+                f"cc_cap:{algo}",
+            )
+            out[algo] = (
+                sorted(tuple(r) for r in labels.collect()), rec["build_jobs"]
+            )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+    assert out["auto"][0] == out["minlabel"][0]
+    # the lower bound proves the loop ran (the driver path is one job)
+    assert out["minlabel"][1] <= out["auto"][1] <= out["minlabel"][1] + 1, out
+
+
+def test_dup_clusters_jobs_track_the_pairs_trunk(spark):
+    """``dup_clusters`` closes its duplicate graph on the driver: over
+    its n-gram pairs trunk (``dedup_ngram_jaccard``) it may add the
+    capped collect and the size fan-back's jobs, at most 4 — the
+    distributed min-label loop it replaced added 14."""
+    from stream_processing_test_spark import profile
+    from stream_processing_test_spark.llm.cluster import dup_clusters
+    from stream_processing_test_spark.llm.dedup import dedup_ngram_jaccard
+
+    _, trunk = profile.run(
+        spark, lambda: dedup_ngram_jaccard(spark, SF_SMALL), "guard:trunk"
+    )
+    _, full = profile.run(
+        spark, lambda: dup_clusters(spark, SF_SMALL), "guard:dup_clusters"
+    )
+    assert full["jobs"] <= trunk["jobs"] + 4, (trunk["jobs"], full["jobs"])
+
+
 # Queries allowed to FORCE a broadcast (F.broadcast hint) even with the
 # auto-broadcast threshold disabled, each with the row bound that makes
 # the forced build side safe at any fact-table scale. Everything else
@@ -749,10 +806,12 @@ def test_cc_rounds_release_superseded_checkpoints(spark):
 
 
 def test_cc_auto_falls_back_to_star_on_long_chains(spark):
-    """algorithm='auto' (the default): dense near-dup graphs converge
-    inside the min-label budget; a pathological high-diameter chain
-    falls back to the O(log d) star path and still labels correctly —
-    while explicitly-pinned minlabel stays loud and raises."""
+    """algorithm='auto' (the default) past the driver cap: dense
+    near-dup graphs converge inside the min-label budget; a
+    pathological high-diameter chain falls back to the O(log d) star
+    path and still labels correctly — while explicitly-pinned minlabel
+    stays loud and raises. Broadcasting is disabled so the 64-edge
+    chain does not close on the driver."""
     import pytest
 
     from stream_processing_test_spark.llm.cluster import connected_components
@@ -760,8 +819,13 @@ def test_cc_auto_falls_back_to_star_on_long_chains(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "src LONG, dst LONG"
     )
-    labels = connected_components(edges)  # default auto
-    got = {(r["node"], r["component"]) for r in labels.collect()}
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        labels = connected_components(edges)  # default auto
+        got = {(r["node"], r["component"]) for r in labels.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
     assert got == {(i, 1) for i in range(1, 65)}
 
     with pytest.raises(RuntimeError, match="did not converge"):
