@@ -62,7 +62,7 @@ def cmd_run(args: argparse.Namespace) -> int:
         )
 
         spec = specs[args.query]
-        status, detail, n_rows, _t = check_query(
+        status, detail, n_rows, *_ = check_query(
             spark, duckdb_connection(args.sf_dir), spec, args.sf_dir
         )
         print(f"{args.query}: {status} ({n_rows} rows) {detail}".rstrip())

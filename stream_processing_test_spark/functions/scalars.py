@@ -1,6 +1,6 @@
 """Scalar helpers shared across operators (SURVEY.md §2.7).
 
-All of these are Column-in/Column-out expression builders — they stay
+All of these are expression builders — SQL text or Columns — that stay
 inside whole-stage codegen (no Python UDFs on the hot path).
 """
 
@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.schemas import (
@@ -18,25 +18,47 @@ from stream_processing_test_spark.schemas import (
 )
 
 
-def blank_to_null(col: Column) -> Column:
+def _ref(col: Column) -> str:
+    """SQL text of a column reference, the one kind of Column the
+    Column forms below bind (as ``spark.sql``'s ``{col}`` formatting
+    does); anything richer is built as SQL text with the ``*_sql``
+    form."""
+    jexpr = SparkSession.active()._jsparkSession.expression(col._jc)
+    if jexpr.getClass().getSimpleName() != "UnresolvedAttribute":
+        raise TypeError(f"expected a column reference, got {col}")
+    return jexpr.sql()
+
+
+# Each rule below is written once, as SQL text over SQL-text operands,
+# so a projection built from SQL strings (one ``selectExpr`` or one
+# ``agg`` of ``F.expr``) applies it without a per-operator py4j chain;
+# a Column form binds column references into the same text.
+
+
+def blank_to_null_sql(expr: str) -> str:
     """Normalize the reference's ``''`` missing-value sentinel to NULL
     at ingest (reference coerces MySQL NULL to "" on read,
     StreamTest.cpp:399-413; we invert that at the Spark edge). F9."""
-    return F.nullif(col, F.lit(""))
+    return f"nullif({expr}, '')"
 
 
-def availability_score(n_detection: Column, n_error: Column) -> Column:
+def blank_to_null(col: Column) -> Column:
+    """Column form of :func:`blank_to_null_sql`."""
+    return F.expr(blank_to_null_sql(_ref(col)))
+
+
+def availability_score_sql(n_detection: str, n_error: str) -> str:
     """A6 (StreamTest.cpp:985-996): ``int((n - err) / n * 100)``,
     clamped at 0. C++ int-cast truncates toward zero; the operands are
     >= 0, so floor is the same. Counts come from ``count(*)`` per
     group, so ``n`` is never 0."""
-    return F.greatest(
-        F.floor((n_detection - n_error).cast("double") / n_detection * 100),
-        F.lit(0),
-    ).cast("int")
+    return (
+        f"CAST(greatest(floor(CAST(({n_detection}) - ({n_error}) AS DOUBLE)"
+        f" / ({n_detection}) * 100), 0) AS INT)"
+    )
 
 
-def first_real_resolution(value: Column, order: Column) -> Column:
+def first_real_resolution_sql(value: str, order: str) -> str:
     """A4's resolution fold (StreamTest.cpp:898-910) as one aggregate:
     the first ``value`` by ``order`` that is neither '' nor '0x0', else
     the last ``value``. The reference's fold overwrites a stored '' or
@@ -45,13 +67,26 @@ def first_real_resolution(value: Column, order: Column) -> Column:
 
     ``min_by`` skips rows whose ordering is NULL, which filters it to
     real values without a window sort."""
-    real = value.isNotNull() & ~value.isin("", "0x0")
-    return F.coalesce(
-        F.min_by(value, F.when(real, order)), F.max_by(value, order)
+    real = f"({value}) IS NOT NULL AND NOT ({value}) IN ('', '0x0')"
+    return (
+        f"coalesce(min_by({value}, CASE WHEN {real} THEN {order} END),"
+        f" max_by({value}, {order}))"
     )
 
 
-def classify_resolution(col: Column) -> Column:
+def first_real_resolution(value: Column, order: Column) -> Column:
+    """Column form of :func:`first_real_resolution_sql`."""
+    return F.expr(first_real_resolution_sql(_ref(value), _ref(order)))
+
+
+# 'WxH' -> ordinal as one map literal, parsed once per use instead of
+# built from a py4j call per key and value
+_RESOLUTION_MAP_SQL = "map({})".format(
+    ", ".join(f"'{wxh}', {n}" for wxh, n in RESOLUTION_MAP.items())
+)
+
+
+def classify_resolution_sql(expr: str) -> str:
     """'WxH' string -> resolution ordinal (F7).
 
     Mirrors getResolutionType (reference StreamTest.h:181-194):
@@ -59,13 +94,17 @@ def classify_resolution(col: Column) -> Column:
     any other non-empty value -> CUSTOM(27). Implemented as a literal
     map lookup (constant-folded, no join, no shuffle).
     """
-    mapping = F.create_map(
-        *[F.lit(x) for kv in RESOLUTION_MAP.items() for x in kv]
-    )
+    x = f"({expr})"
     return (
-        F.when(col.isNull() | (col == "") | (col == "0x0"), F.lit(RESOLUTION_UNKNOWN))
-        .otherwise(F.coalesce(mapping[col], F.lit(RESOLUTION_CUSTOM)))
+        f"CASE WHEN {x} IS NULL OR {x} = '' OR {x} = '0x0' "
+        f"THEN {RESOLUTION_UNKNOWN} "
+        f"ELSE coalesce({_RESOLUTION_MAP_SQL}[{x}], {RESOLUTION_CUSTOM}) END"
     )
+
+
+def classify_resolution(col: Column) -> Column:
+    """Column form of :func:`classify_resolution_sql`."""
+    return F.expr(classify_resolution_sql(_ref(col)))
 
 
 def parse_bitrate_kbps(col: Column) -> Column:

@@ -30,10 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.functions.scalars import (
-    availability_score,
-    blank_to_null,
-    classify_resolution,
-    first_real_resolution,
+    availability_score_sql,
+    blank_to_null_sql,
+    classify_resolution_sql,
+    first_real_resolution_sql,
 )
 from stream_processing_test_spark.schemas import RESOLUTION_FHD_THRESHOLD
 from stream_processing_test_spark.sinks.reports import (
@@ -53,28 +53,26 @@ def day_rollup_scores(events: DataFrame) -> DataFrame:
     # ('0x0', '') ends '' and the write-back keeps the stored value.
     # (created_time, value) orders the fold deterministically (the
     # reference's order is DB heap order; SURVEY §7 note).
-    order = F.struct("created_time", "video_resolution")
+    order = "struct(created_time, video_resolution)"
     rollup = events.groupBy("url_id").agg(
-        F.count("*").alias("n_detection"),
-        F.sum(F.when(F.col("item") != 0, 1).otherwise(0)).alias("n_error"),
-        first_real_resolution(F.col("video_resolution"), order).alias(
-            "video_resolution"
-        ),
-        F.expr(
-            "min_by(target_matching, struct(created_time, target_matching)) "
-            "FILTER (WHERE target_matching IS NOT NULL)"
-        ).alias("target_matching"),
+        *map(
+            F.expr,
+            (
+                "count(*) AS n_detection",
+                "sum(CASE WHEN item != 0 THEN 1 ELSE 0 END) AS n_error",
+                first_real_resolution_sql("video_resolution", order)
+                + " AS video_resolution",
+                "min_by(target_matching, struct(created_time, target_matching))"
+                " FILTER (WHERE target_matching IS NOT NULL) AS target_matching",
+            ),
+        )
     )
-    return rollup.select(
+    return rollup.selectExpr(
         "url_id",
         "target_matching",
-        F.coalesce(F.col("video_resolution"), F.lit("")).alias(
-            "video_resolution"
-        ),
-        classify_resolution(F.col("video_resolution")).alias("resolution_type"),
-        availability_score(F.col("n_detection"), F.col("n_error")).alias(
-            "flow_score"
-        ),
+        "coalesce(video_resolution, '') AS video_resolution",
+        classify_resolution_sql("video_resolution") + " AS resolution_type",
+        availability_score_sql("n_detection", "n_error") + " AS flow_score",
     )
 
 
@@ -84,11 +82,9 @@ def match_programs(scored: DataFrame, programs: DataFrame) -> DataFrame:
     no-match keeps null (the caller's coalesce keeps the old id), per
     StreamTest.cpp:1001-1023. ``programs`` is the small
     live_broadcast_details dim → broadcast."""
-    want_name = F.concat(
-        F.col("target_matching"),
-        F.when(
-            F.col("resolution_type") >= RESOLUTION_FHD_THRESHOLD, F.lit(" FHD")
-        ).otherwise(F.lit(" HD")),
+    want_name = (
+        "concat(target_matching, CASE WHEN resolution_type >= "
+        f"{RESOLUTION_FHD_THRESHOLD} THEN ' FHD' ELSE ' HD' END) AS want_name"
     )
     # "First match wins": the reference stops at the first program whose
     # name matches (StreamTest.cpp:1007-1014). Its iteration order is
@@ -97,22 +93,16 @@ def match_programs(scored: DataFrame, programs: DataFrame) -> DataFrame:
     # duplicate program name yields ONE deterministic match instead of
     # multiplying rows through the join (which would also break
     # merge_upsert's unique-key precondition downstream).
-    one_per_name = programs.groupBy("stream_name").agg(
-        F.min("id").alias("id")
-    )
+    one_per_name = programs.groupBy("stream_name").agg(F.expr("min(id) AS id"))
     return (
-        scored.withColumn("want_name", want_name)
-        .join(
-            F.broadcast(one_per_name),
-            F.col("want_name") == one_per_name["stream_name"],
-            "left",
-        )
-        .select(
-            F.col("url_id").alias("id"),
+        scored.selectExpr("*", want_name)
+        .join(F.broadcast(one_per_name), F.expr("want_name = stream_name"), "left")
+        .selectExpr(
+            "url_id AS id",
             "video_resolution",
             "resolution_type",
             "flow_score",
-            one_per_name["id"].alias("matched_program_id"),
+            "id AS matched_program_id",
         )
     )
 
@@ -142,7 +132,7 @@ def day_close(
     matched = match_programs(scored, programs)
     updated = merge_upsert(
         dim,
-        matched.select(
+        matched.selectExpr(
             "id",
             # Skip-EMPTY write-back (StreamTest.cpp:151-171): the
             # reference's conditional SET skips only empty strings, so
@@ -150,15 +140,13 @@ def day_close(
             # on a non-empty '0x0' IS written through — exactly the
             # reference's behavior. ``scored`` keeps '' for display
             # parity.
-            blank_to_null(F.col("video_resolution")).alias(
-                "video_resolution"
-            ),
+            blank_to_null_sql("video_resolution") + " AS video_resolution",
             "resolution_type",
             "flow_score",
             # J3's write-back: a matched program id replaces the stored
             # target_matching_id; no-match (NULL) keeps the old value
             # via merge_upsert's coalesce — StreamTest.cpp:1016-1028.
-            F.col("matched_program_id").alias("target_matching_id"),
+            "matched_program_id AS target_matching_id",
         ),
         "id",
         always_set=("flow_score", "resolution_type"),
@@ -169,7 +157,15 @@ def day_close(
         # materialize it again (write/collect) — checkpoint once so the
         # events scan + merge run a single time, not per consumer.
         updated = updated.localCheckpoint(eager=True)
-        report = updated.select("id", "flow_score").orderBy("id")
+        # The pages are collected anyway: sort on one partition instead
+        # of a range-partitioned global sort (its sampling job and
+        # shuffle). Ids are unique after the merge, so the order is the
+        # same.
+        report = (
+            updated.select("id", "flow_score")
+            .coalesce(1)
+            .sortWithinPartitions("id")
+        )
         n_batches = send_report_batches(
             report, report_sink, batch_size=batch_size
         )

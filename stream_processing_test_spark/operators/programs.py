@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stream_processing_test_spark.functions.scalars import availability_score
+from stream_processing_test_spark.functions.scalars import availability_score_sql
+from stream_processing_test_spark.operators.rollup import N_ERROR_SQL
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load
 
@@ -91,10 +92,8 @@ def failing_programs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     nation = load(spark, sf_dir, "nation")
 
-    errors = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-    detections = F.count("*")
     scores = ev.groupBy("user_id").agg(
-        availability_score(detections, errors).alias("flow_score"),
+        F.expr(availability_score_sql("count(*)", N_ERROR_SQL) + " AS flow_score"),
     ).select((F.col("user_id") % 25).cast("int").alias("program_id"), "flow_score")
 
     bad_programs = (

@@ -20,12 +20,12 @@ props ⇒ the dynamic JSON envelope.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_test_spark.functions.scalars import (
-    availability_score,
-    classify_resolution,
+    availability_score_sql,
+    classify_resolution_sql,
     crosses_next_utc_midnight_col,
     first_real_resolution,
 )
@@ -162,25 +162,27 @@ GROUP BY user_id, date_trunc('day', ts)
 """
 
 
+# Error count and the per-group score aggregates as SQL text: one
+# definition for the batch query and its streaming twin
+# (streaming.pipeline.daily_rollup).
+N_ERROR_SQL = "sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)"
+SCORE_AGGS = (
+    "count(*) AS n_detection",
+    f"{N_ERROR_SQL} AS n_error",
+    availability_score_sql("count(*)", N_ERROR_SQL) + " AS flow_score",
+)
+
+
 @register("daily_scores", oracle=SCORES_ORACLE, survey_ops="A6,A8,T2,F1,F2,F5,P7")
 def daily_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily availability score (A6, StreamTest.cpp:985-996):
     ``score = int((detections - errors) / detections * 100)``, clamped
     at 0, per source per UTC day (the reference's tumbling daily window
-    T2); the arithmetic is ``functions.scalars.availability_score``."""
+    T2); the arithmetic is ``functions.scalars.availability_score_sql``."""
     ev = load(spark, sf_dir, "events")
-    errors = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-    detections = F.count("*")
-    return (
-        ev.groupBy(
-            "user_id", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-        )
-        .agg(
-            detections.alias("n_detection"),
-            errors.alias("n_error"),
-            availability_score(detections, errors).alias("flow_score"),
-        )
-    )
+    return ev.groupBy(
+        "user_id", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
+    ).agg(*map(F.expr, SCORE_AGGS))
 
 
 _LABELS_ORACLE = """
@@ -237,24 +239,23 @@ _WXH_LADDER = (
     (80, "3840x2160"),
 )
 _WXH_ELSE = "640x480"
-_WXH_SQL = (
-    "CASE "
-    + "\n                ".join(f"WHEN k < {b} THEN '{v}'" for b, v in _WXH_LADDER)
-    + f"\n                ELSE '{_WXH_ELSE}' END"
-)
 
 
-def _wxh(k: Column) -> Column:
-    """The Spark twin of ``_WXH_SQL``."""
-    out = F  # F.when opens the chain, Column.when extends it
-    for bound, wxh in _WXH_LADDER:
-        out = out.when(k < bound, wxh)
-    return out.otherwise(_WXH_ELSE)
+def _wxh_sql(k: str) -> str:
+    """The 'WxH' column as SQL text over the SQL expression ``k``
+    (the Spark query and the DuckDB oracle share it)."""
+    return (
+        "CASE "
+        + "\n                ".join(
+            f"WHEN {k} < {b} THEN '{v}'" for b, v in _WXH_LADDER
+        )
+        + f"\n                ELSE '{_WXH_ELSE}' END"
+    )
 
 
 _RESOLUTION_ORACLE = f"""
 WITH derived AS (
-    SELECT {_WXH_SQL} AS video_resolution
+    SELECT {_wxh_sql('k')} AS video_resolution
     FROM (SELECT CAST(regexp_extract(props, '"k": (\\d+)', 1) AS INT) AS k FROM events)
 ), classified AS (
     SELECT video_resolution,
@@ -289,11 +290,10 @@ def resolution_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_test_spark.schemas import RESOLUTION_FHD_THRESHOLD
 
     ev = load(spark, sf_dir, "events")
-    k = F.regexp_extract("props", r'"k": (\d+)', 1).cast("int")
-    wxh = _wxh(k)
-    classified = ev.select(
-        wxh.alias("video_resolution"),
-        classify_resolution(wxh).alias("resolution_type"),
+    wxh = _wxh_sql(r"""CAST(regexp_extract(props, '"k": (\\d+)', 1) AS INT)""")
+    classified = ev.selectExpr(
+        f"{wxh} AS video_resolution",
+        classify_resolution_sql(wxh) + " AS resolution_type",
     )
     return classified.groupBy("video_resolution", "resolution_type").agg(
         F.count("*").alias("n")
@@ -310,7 +310,7 @@ def resolution_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTR_ORACLE = f"""
 WITH attrs AS (
     SELECT user_id, event_id,
-           {_WXH_SQL} AS video_resolution,
+           {_wxh_sql('k')} AS video_resolution,
            CASE WHEN k % 7 < 2 THEN '' ELSE 'proto' || CAST(k % 7 AS VARCHAR) END AS protocol,
            CASE WHEN k % 5 = 0 THEN '' ELSE CAST(400 + k * 3 AS VARCHAR) END AS bitrate
     FROM (SELECT user_id, event_id,

@@ -65,12 +65,13 @@ def compare_to_oracle(
 
 def check_query(
     spark, con, spec, sf_dir: str
-) -> tuple[str, str, int, float]:
+) -> tuple[str, str, int, float, float | None]:
     """Run one QuerySpec on both engines and compare. Returns
-    (status, detail, spark_row_count, spark_seconds); status
-    "ROWS-ONLY" when the spec has no oracle (the driver's weaker
-    check). ``spark_seconds`` times ONLY the Spark execution — oracle
-    replay and comparison are excluded so per-query times stay
+    (status, detail, spark_row_count, spark_seconds, oracle_seconds);
+    status "ROWS-ONLY" (and oracle_seconds None) when the spec has no
+    oracle (the driver's weaker check). ``spark_seconds`` times ONLY
+    the Spark execution and ``oracle_seconds`` only the DuckDB replay;
+    the comparison is in neither, so per-query Spark times stay
     comparable with earlier rounds' gate output."""
     import time
 
@@ -78,7 +79,9 @@ def check_query(
     sdf = spec.fn(spark, sf_dir).toPandas()
     t_spark = time.time() - t0
     if spec.oracle is None:
-        return "ROWS-ONLY", "", len(sdf), t_spark
+        return "ROWS-ONLY", "", len(sdf), t_spark, None
+    t0 = time.time()
     ddf = con.execute(spec.oracle).df()
+    t_oracle = time.time() - t0
     status, detail = compare_to_oracle(sdf, ddf)
-    return status, detail, len(sdf), t_spark
+    return status, detail, len(sdf), t_spark, t_oracle

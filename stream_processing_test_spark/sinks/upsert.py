@@ -44,31 +44,34 @@ def merge_upsert(
       normalize ``'' → NULL`` first — see functions.scalars.blank_to_null);
     - target rows without an update pass through; update rows without a
       target row are appended.
+
+    Built from SQL text (one ``selectExpr`` per projection), so the
+    plan costs a few py4j calls whatever the width of the dimension.
     """
+    q = _q_backtick
     upd_cols = [c for c in updates.columns if c != key]
-    u = updates.select(
-        F.col(key).alias(f"__u_{key}"),
-        *[F.col(c).alias(f"__u_{c}") for c in upd_cols],
+    u = updates.selectExpr(
+        *[f"{q(c)} AS {q('__u_' + c)}" for c in [key, *upd_cols]]
     )
-    joined = target.join(u, target[key] == u[f"__u_{key}"], "full_outer")
+    uk = q(f"__u_{key}")
+    joined = target.join(u, F.expr(f"{q(key)} = {uk}"), "full_outer")
 
     out_cols = []
     for c in target.columns:
+        new, old = q(f"__u_{c}"), q(c)
         if c == key:
-            out_cols.append(F.coalesce(F.col(key), F.col(f"__u_{key}")).alias(key))
+            out_cols.append(f"coalesce({old}, {uk}) AS {old}")
         elif c in always_set and c in upd_cols:
             # matched row → incoming value wins even if NULL; appended
             # row (no target) → incoming; target-only row → keep old.
             out_cols.append(
-                F.when(F.col(f"__u_{key}").isNotNull(), F.col(f"__u_{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
+                f"CASE WHEN {uk} IS NOT NULL THEN {new} ELSE {old} END AS {old}"
             )
         elif c in upd_cols:
-            out_cols.append(F.coalesce(F.col(f"__u_{c}"), F.col(c)).alias(c))
+            out_cols.append(f"coalesce({new}, {old}) AS {old}")
         else:
-            out_cols.append(F.col(c))
-    return joined.select(*out_cols)
+            out_cols.append(old)
+    return joined.selectExpr(*out_cols)
 
 
 def upsert_parquet(
@@ -126,21 +129,19 @@ def upsert_newest_day(scores: DataFrame, dim_path: str) -> None:
     latest = (
         scores.groupBy("id")
         .agg(
-            F.max_by(
-                F.struct("day", "flow_score", "n_detection", "n_error"), "day"
-            ).alias("s")
+            F.expr(
+                "max_by(struct(day, flow_score, n_detection, n_error), day) AS s"
+            )
         )
-        .select("id", "s.*")
+        .selectExpr("id", "s.*")
     )
     # one read serves the guard and the merge
     target = scores.sparkSession.read.parquet(dim_path)
     if "day" in target.columns:
-        current = target.select("id", F.col("day").alias("cur_day"))
+        current = target.selectExpr("id", "day AS cur_day")
         latest = (
             latest.join(current, "id", "left")
-            .filter(
-                F.col("cur_day").isNull() | (F.col("day") >= F.col("cur_day"))
-            )
+            .filter("cur_day IS NULL OR day >= cur_day")
             .drop("cur_day")
         )
     else:
@@ -240,10 +241,10 @@ def _q(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def _q_mysql(name: str) -> str:
-    """MySQL identifier quoting: BACKTICKS (r12 review finding) —
-    stock MySQL (no ANSI_QUOTES) parses double-quoted identifiers as
-    string literals, so the ANSI form is a syntax error inside
+def _q_backtick(name: str) -> str:
+    """Spark SQL and MySQL identifier quoting: BACKTICKS. Stock MySQL
+    (no ANSI_QUOTES) parses double-quoted identifiers as string
+    literals, so the ANSI form is a syntax error inside
     ``VALUES(...)``; Spark's own MySQL JDBC dialect creates tables
     with backtick-quoted columns, so this also matches the staging
     table the writer just made."""
@@ -277,7 +278,7 @@ def merge_into_sql(
         # references (r12 review finding). References are qualified
         # (``new.col``) because staging and target share every column
         # name — unqualified would be ambiguous against the target.
-        q = _q_mysql
+        q = _q_backtick
         col_list = ", ".join(q(c) for c in columns)
         sets = ", ".join(
             f"{q(c)} = new.{q(c)}"

@@ -18,7 +18,7 @@ edge normalization in ONE place:
   that landed ``created_time`` as a transport string still ingests
   (parsed by dtype), and one that landed it typed passes through;
 - ``'' -> NULL`` on every attribute string column via the shared
-  :func:`functions.scalars.blank_to_null` (the single definition of the
+  :func:`functions.scalars.blank_to_null_sql` (the single definition of the
   reference's empty-string missing-value sentinel).
 
 Both batch (``read_probe_events``) and Structured Streaming
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stream_processing_test_spark.functions.scalars import blank_to_null
+from stream_processing_test_spark.functions.scalars import blank_to_null_sql
 from stream_processing_test_spark.schemas import PROBE_EVENT_SCHEMA
 from stream_processing_test_spark.session import finish_with
 
@@ -59,44 +59,46 @@ TRANSPORT_SCHEMA = T.StructType(
 )
 
 
-def _parse_or_fail(raw, parsed, what: str):
+def _parse_or_fail(raw: str, parsed: str, what: str) -> str:
     """No-silent-nulls contract: a transport string that fails to parse
     into its typed form must fail the read loudly — with ANSI off,
     to_timestamp/cast would otherwise yield NULL, indistinguishable
     from a legitimately-missing value and corrupting downstream
     ordering/rollups."""
-    return F.when(
-        raw.isNotNull() & parsed.isNull(),
-        F.raise_error(F.concat(F.lit(f"unparseable {what}: "), raw)),
-    ).otherwise(parsed)
+    return (
+        f"CASE WHEN {raw} IS NOT NULL AND {parsed} IS NULL "
+        f"THEN raise_error(concat('unparseable {what}: ', {raw})) "
+        f"ELSE {parsed} END"
+    )
 
 
 def _normalize(df: DataFrame) -> DataFrame:
     """§1.3 edge normalization: '' -> NULL on attribute strings, every
     column cast to its PROBE_EVENT_SCHEMA type, and typed fields
     (created_time, item) parsed LOUDLY from their reference string
-    forms when they arrived as strings."""
+    forms when they arrived as strings. One ``selectExpr``: the plan is
+    built in one py4j call, not a chain per field."""
+    arrived = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in PROBE_EVENT_SCHEMA.fields:
-        c = F.col(f.name)
-        arrived_string = isinstance(df.schema[f.name].dataType, T.StringType)
+        typ = f.dataType.simpleString()
         if isinstance(f.dataType, T.StringType):
-            c = blank_to_null(c.cast("string"))
-        elif arrived_string:
+            c = blank_to_null_sql(f"CAST({f.name} AS STRING)")
+        elif isinstance(arrived[f.name], T.StringType):
             # typed field carried in its transport string form; '' is
             # the missing-value sentinel (uniformly — created_time
             # included), anything else must parse
-            s = blank_to_null(c)
+            s = blank_to_null_sql(f.name)
             parsed = (
-                F.to_timestamp(s, "yyyy-MM-dd HH:mm:ss")
+                f"to_timestamp({s}, 'yyyy-MM-dd HH:mm:ss')"
                 if f.name == "created_time"
-                else s.cast(f.dataType)
+                else f"CAST({s} AS {typ})"
             )
             c = _parse_or_fail(s, parsed, f.name)
         else:
-            c = c.cast(f.dataType)
-        cols.append(c.alias(f.name))
-    return df.select(*cols)
+            c = f"CAST({f.name} AS {typ})"
+        cols.append(f"{c} AS {f.name}")
+    return df.selectExpr(*cols)
 
 
 def _csv_transport_schema(

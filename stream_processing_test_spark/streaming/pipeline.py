@@ -41,12 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stream_processing_test_spark.functions.scalars import availability_score
 from stream_processing_test_spark.operators.extended import (
     SESSION_ORACLE,
     session_rollup,
 )
-from stream_processing_test_spark.operators.rollup import SCORES_ORACLE
+from stream_processing_test_spark.operators.rollup import SCORE_AGGS, SCORES_ORACLE
 from stream_processing_test_spark.registry import register
 from stream_processing_test_spark.tables import load, normalize_event_ts
 
@@ -188,19 +187,13 @@ def replay_to_memory(
 def daily_rollup(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
     """T2+T3+T4: watermarked 1-day tumbling window rollup per source —
     the streaming twin of ``operators.rollup.daily_scores``."""
-    errors = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-    detections = F.count("*")
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("win"), "user_id")
-        .agg(
-            detections.alias("n_detection"),
-            errors.alias("n_error"),
-            availability_score(detections, errors).alias("flow_score"),
-        )
-        .select(
+        .groupBy(F.expr("window(ts, '1 day') AS win"), "user_id")
+        .agg(*map(F.expr, SCORE_AGGS))
+        .selectExpr(
             "user_id",
-            F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
+            "date_format(win.start, 'yyyy-MM-dd') AS day",
             "n_detection",
             "n_error",
             "flow_score",
@@ -482,8 +475,8 @@ def finalize_to_dimension(
     spark.conf.set(nodata, "false")
     try:
         ev = events_stream(spark, events_path)
-        scores = daily_rollup(ev, watermark).select(
-            F.col("user_id").cast("long").alias("id"),
+        scores = daily_rollup(ev, watermark).selectExpr(
+            "CAST(user_id AS BIGINT) AS id",
             "day",
             "flow_score",
             "n_detection",

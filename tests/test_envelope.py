@@ -426,6 +426,6 @@ def test_envelope_queries_leave_no_files(spark, tmp_path, monkeypatch):
         "streaming_envelope_rollup",
     ):
         assert specs[name].oracle == specs["envelope_rollup"].oracle
-        status, detail, n_rows, _ = check_query(spark, con, specs[name], SF_SMALL)
+        status, detail, n_rows, *_ = check_query(spark, con, specs[name], SF_SMALL)
         assert (status, n_rows) == ("OK", n_oracle), (name, detail)
     assert [d for d in os.listdir(tmp_path) if d.startswith("envelope_")] == []

@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every registered
 query on Spark and its DuckDB oracle side-by-side, compare row count +
-column names + order-insensitive values.
+column names + order-insensitive values. Each line prints the Spark
+and the DuckDB oracle seconds.
 
 Thin CLI over :mod:`stream_processing_test_spark.oracle` (the single
 definition of "matches the oracle" — also behind the CLI's
@@ -32,14 +33,16 @@ def main() -> int:
     for name, spec in sorted(all_queries().items()):
         if only and name not in only:
             continue
-        status, detail, n_rows, t_spark = check_query(spark, con, spec, sf_dir)
+        status, detail, n_rows, t_spark, t_oracle = check_query(
+            spark, con, spec, sf_dir
+        )
         if status == "ROWS-ONLY":
             print(f"  {name:28s} rows-only: {n_rows:7d} rows  [{t_spark:5.1f}s]")
             continue
         mark = "✓" if status == "OK" else "✗"
         print(
             f"  {mark} {name:28s} {status:8s} {n_rows:7d} rows "
-            f"[{t_spark:5.1f}s] {detail}"
+            f"[spark {t_spark:5.1f}s, oracle {t_oracle:5.1f}s] {detail}"
         )
         if status != "OK":
             failures.append(name)
